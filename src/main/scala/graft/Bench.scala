@@ -166,15 +166,11 @@ object Bench {
     var converged = false
     while (itersRun < maxIters && !(converged && itersRun >= minIters)) {
       val it = itersRun + 1
-      // forget the drained streaming sinks so EVERY iteration — warm
-      // included — re-pays one full concurrent drain group: the warm
-      // number measures the consolidated drain, never a stale parquet
-      // read (the first streaming query of the iteration carries it)
-      graft.streaming.Pipeline.resetDrains()
-      // same discipline for the shared GRU/LSTM passes: one recurrence
-      // per iteration, carried by whichever consumer runs first
-      graft.ops.Predict.resetGruDirs()
-      graft.ops.Predict.resetLstmDirs()
+      // drop the per-iteration entries (drain group, stateful sinks,
+      // GRU/LSTM passes) so EVERY iteration — warm included — re-pays
+      // one concurrent drain and one recurrence per pass, carried by
+      // whichever consumer runs first, never a stale parquet read
+      Tables.beginIteration()
       // Pay the 14-query concurrent drain group ONCE, as its own timed
       // line — previously the alphabetically-first consumer
       // (q_event_window) silently absorbed the whole group's cost,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -107,131 +107,142 @@ object Tables {
   private val freshSentinel =
     new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
 
-  /** Session + freshness prefix for a cached Dataset derived from the
-    * named tables of corpus `d`: a Dataset is bound to the session that
-    * built it (handing it to a second session in the same JVM fails at
-    * runtime), and serving one built from a since-rewritten fixture
-    * would silently verify nothing — both dimensions key every entry. */
-  private[graft] def artifactTag(s: SparkSession, d: String, tables: Seq[String]): String =
-    sessionTag(s) + "|" + d + "|" +
-      tables.map(t => tableFingerprint(s"$d/$t.parquet")).mkString(",")
+  /** Lifetime of a stored entry. Every entry is also keyed by the content
+    * fingerprint of the tables it declares, so a rewritten input makes
+    * any scope's entry unreachable. */
+  sealed trait Scope
+  /** Lives as long as its fingerprint: staged copies, checkpointed
+    * artifacts, trained models, counts. May be evicted by the size bound
+    * (a rebuild after eviction is correct, just one extra build). */
+  case object Corpus extends Scope
+  /** Shared by the consumers of ONE bench iteration (the GRU/LSTM
+    * passes, the drain group, the stateful sink): dropped by
+    * [[beginIteration]], so every iteration re-pays exactly one build,
+    * and never evicted by the size bound, so no iteration pays two. */
+  case object Iteration extends Scope
 
-  /** One shared memo for every per-corpus checkpointed artifact (dedup
-    * pair index, shingle arrays, window arrays, frozen PSI bins, check
-    * verdicts, …). Callers declare WHICH tables the artifact reads, so
-    * the key carries (session, per-table content fingerprint, params).
-    *
-    * Deliberately lock-free around `build` (get → build → putIfAbsent):
-    * artifacts nest (a verdict builds on the truth index which builds on
-    * the corpus scan), and nesting inside one map's computeIfAbsent is a
-    * documented ConcurrentHashMap hazard. A racing duplicate build is
-    * benign — every artifact is a deterministic function of the
-    * fingerprinted inputs, so first-put-wins returns an equal value.
-    * Bounded: one arbitrary entry evicted past 192 (dead sessions' and
-    * stale fingerprints' checkpoints age out; rebuilding after eviction
-    * is correct, just one extra build). */
-  private val artifactCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Any), AnyRef]()
-
-  /** Test hook: simulate a fresh JVM (cold in-memory caches) so the
-    * disk-sidecar path of [[corpusValue]] can be exercised in-process. */
-  private[graft] def clearMemoryArtifactsForTest(): Unit = artifactCache.clear()
-
-  /** Non-building lookup into the artifact memo: Some only when the
-    * keyed artifact is ALREADY materialized for this (session, corpus
-    * fingerprint). Lets a derived artifact choose the cheaper of two
-    * equivalent builds — e.g. the hashed-shingle table projects off an
-    * already-checkpointed string-shingle table instead of re-running
-    * the corpus tokenize+shingle pass, but only when that (much larger)
-    * artifact exists anyway; peeking never forces it into existence. */
-  private[graft] def artifactPeek[T <: AnyRef](s: SparkSession, d: String,
-      tables: Seq[String], key: Any): Option[T] =
-    Option(artifactCache.get((artifactTag(s, d, tables), key): (String, Any)))
-      .map(_.asInstanceOf[T])
-
-  private[graft] def artifact[T <: AnyRef](s: SparkSession, d: String,
-      tables: Seq[String], key: Any)(build: => T): T = {
-    val k = (artifactTag(s, d, tables), key)
-    val hit = artifactCache.get(k)
-    if (hit != null) return hit.asInstanceOf[T]
-    val v = build
-    if (artifactCache.size > 192) {
-      val it = artifactCache.keySet().iterator()
-      if (it.hasNext) { it.next(); it.remove() }
-    }
-    val prev = artifactCache.putIfAbsent(k, v.asInstanceOf[AnyRef])
-    if (prev != null) prev.asInstanceOf[T] else v
+  /** Whether a value kind is bound to the session that built it — a
+    * Dataset handed to a second session in the same JVM (or out of a
+    * stopped one) fails at runtime, so the store adds the session tag to
+    * the key of exactly these kinds. Resolved from the value's static
+    * type: Datasets and pairs carrying a DataFrame are session-bound,
+    * every other value (paths, counts, models) is shared across
+    * sessions. */
+  final class Binding[T](val sessionBound: Boolean)
+  trait DetachedBinding {
+    implicit def detached[T]: Binding[T] = new Binding[T](false)
+  }
+  object Binding extends DetachedBinding {
+    implicit def dataset[A]: Binding[Dataset[A]] = new Binding[Dataset[A]](true)
+    implicit def framed[A]: Binding[(A, DataFrame)] = new Binding[(A, DataFrame)](true)
   }
 
-  /** Like [[artifact]] for plain driver-side values (trained centroids,
-    * PQ codebooks, counts) — freshness-keyed but session-free, since a
-    * value is not bound to the session that computed it.
-    *
-    * ALSO DISK-PERSISTED, per (corpus, per-table content fingerprint,
-    * key, format version), under [[artifactRoot]] — the production
-    * shape: an index model (coarse quantizer, PQ codebook) is trained
-    * once per corpus SNAPSHOT and shipped as a sidecar next to the
-    * data, not retrained by every JVM that opens the table. Locally
-    * this is what takes the gen-scale classifier's cold run from
-    * k-means+PQ-training-dominated to scan-dominated — measured at 2M
-    * vectors in SCALING.md round 14: a fresh-store cold JVM pays
-    * 70.0 s (training + sidecar publish), a sidecar-reading cold JVM
-    * 31.3 s against a 25.4 s warm leg (1.23x, meeting the r12
-    * cold ≤ 2x warm criterion). Freshness is the same fingerprint
-    * discipline as every
-    * cache here: an in-place part-file rewrite moves the fingerprint,
-    * which moves the sidecar FILE NAME, so a stale sidecar is simply
-    * never opened (and ages out with tmp). All IO is best-effort —
-    * any read/write/deserialize failure degrades to an in-memory
-    * rebuild, never to an error or a stale value. */
+  /** One slot of the store. The build runs under the slot's own monitor,
+    * so concurrent callers of one key build it once, while builds of
+    * different keys nest freely (a verdict builds on the truth index
+    * which builds on the corpus scan — nesting inside one map's
+    * computeIfAbsent is a documented ConcurrentHashMap hazard). A build
+    * that throws leaves the slot empty for the next caller to retry. */
+  private final class Cell(val scope: Scope) {
+    @volatile private var value: AnyRef = _
+    def peek: Option[AnyRef] = Option(value)
+    def apply(build: => AnyRef): AnyRef = {
+      if (value == null) synchronized { if (value == null) value = build }
+      value
+    }
+  }
+
+  /** The engine's one memo: (session tag or "", corpus dir, per-table
+    * content fingerprints, params) → slot. */
+  private val store = new java.util.concurrent.ConcurrentHashMap[(String, String, String, Any), Cell]()
+
+  /** Past this many entries, one arbitrary [[Corpus]] entry is evicted
+    * per insert, so dead sessions' and stale fingerprints' entries age
+    * out; [[Iteration]] entries are never chosen. */
+  private val StoreBound = 256
+
+  private def fingerprints(d: String, tables: Seq[String]): String =
+    tables.map(t => tableFingerprint(s"$d/$t.parquet")).mkString(",")
+
+  private def slot(tag: String, d: String, fp: String, key: Any, scope: Scope): Cell = {
+    val k = (tag, d, fp, key)
+    val hit = store.get(k)
+    if (hit != null) return hit
+    if (store.size > StoreBound) {
+      val it = store.values().iterator()
+      var evicted = false
+      while (!evicted && it.hasNext)
+        if (it.next().scope == Corpus) { it.remove(); evicted = true }
+    }
+    val fresh = new Cell(scope)
+    val prev = store.putIfAbsent(k, fresh)
+    if (prev != null) prev else fresh
+  }
+
+  private def tagFor[T](s: SparkSession, b: Binding[T]): String =
+    if (b.sessionBound) sessionTag(s) else ""
+
+  /** Build `key` over corpus `d` once per content fingerprint of the
+    * declared `tables` (and per session when the value is session-bound,
+    * see [[Binding]]), then serve it from memory. `scope` sets how long
+    * the entry lives. Every build must be a deterministic function of
+    * the declared tables and the key. */
+  private[graft] def artifact[T <: AnyRef](s: SparkSession, d: String,
+      tables: Seq[String], key: Any, scope: Scope = Corpus)(build: => T)(
+      implicit b: Binding[T]): T =
+    slot(tagFor(s, b), d, fingerprints(d, tables), key, scope)(build).asInstanceOf[T]
+
+  /** Non-building lookup: Some only when the [[artifact]] is already
+    * built for this fingerprint. Lets a derived artifact choose the
+    * cheaper of two equivalent builds (the hashed-shingle table projects
+    * off an existing string-shingle table) without forcing either. */
+  private[graft] def artifactPeek[T <: AnyRef](s: SparkSession, d: String,
+      tables: Seq[String], key: Any)(implicit b: Binding[T]): Option[T] =
+    Option(store.get((tagFor(s, b), d, fingerprints(d, tables), key)))
+      .flatMap(_.peek).map(_.asInstanceOf[T])
+
+  /** Drop every [[Iteration]] entry: the next consumer of each rebuilds
+    * it once. Bench, graftbench and tools/Profile call this before each
+    * timed iteration. */
+  def beginIteration(): Unit = store.values().removeIf(_.scope == Iteration)
+
+  /** Test hook: simulate a fresh JVM (cold in-memory store) so the
+    * disk-sidecar paths of [[corpusValue]] and [[dfArtifact]] can be
+    * exercised in-process. */
+  private[graft] def clearMemoryArtifactsForTest(): Unit = store.clear()
+
+  /** [[artifact]] for session-free driver values (trained centroids, PQ
+    * codebooks, max ids), ALSO persisted as a Java-serialized sidecar
+    * under [[artifactRoot]], content-addressed by (corpus, fingerprint,
+    * key, format version) — the production shape: an index model is
+    * trained once per corpus SNAPSHOT and shipped next to the data, not
+    * retrained by every JVM that opens the table. Measured at 2M vectors
+    * (SCALING.md round 14): a fresh-store cold JVM pays 70.0 s, a
+    * sidecar-reading one 31.3 s against a 25.4 s warm leg. A rewritten
+    * input moves the fingerprint, which moves the sidecar FILE NAME, so
+    * a stale sidecar is never opened. All IO is best-effort: a missing,
+    * unreadable or rejected sidecar degrades to a rebuild. */
   private[graft] def corpusValue[T <: AnyRef](d: String,
       tables: Seq[String], key: Any)(build: => T): T = {
-    val fp = tables.map(t => tableFingerprint(s"$d/$t.parquet")).mkString(",")
-    val k = (s"$d|$fp", key)
-    val hit = artifactCache.get(k)
-    if (hit != null) return hit.asInstanceOf[T]
-    val fromDisk = diskRead[T](d, fp, key)
-    val v = fromDisk.getOrElse(build)
-    if (fromDisk.isEmpty) diskWrite(d, fp, key, v)
-    if (artifactCache.size > 192) {
-      val it = artifactCache.keySet().iterator()
-      if (it.hasNext) { it.next(); it.remove() }
-    }
-    val prev = artifactCache.putIfAbsent(k, v.asInstanceOf[AnyRef])
-    if (prev != null) prev.asInstanceOf[T] else v
+    val fp = fingerprints(d, tables)
+    slot("", d, fp, key, Corpus) {
+      diskRead[T](d, fp, key).getOrElse {
+        val v = build
+        diskWrite(d, fp, key, v)
+        v
+      }
+    }.asInstanceOf[T]
   }
 
-  /** Like [[artifact]] for DataFrame-shaped per-corpus artifacts (pair
-    * indexes, truth sets, check verdicts, PQ code tables): the same
-    * in-memory memo per session, PLUS a PARQUET SIDECAR under
-    * [[artifactRoot]] keyed by the same content fingerprint — a cold
-    * JVM READS the artifact instead of rebuilding it. Before this, the
-    * Dataset-shaped artifacts localCheckpointed per JVM, so every cold
-    * bench leg re-paid each truth-index scan, pair-index shuffle, and
-    * verdict intersect job; the sidecar is the production shape (an
-    * index table ships with the corpus snapshot, it is not re-derived
-    * by every reader).
-    *
-    * Atomic publish: Spark writes to a unique temp sibling directory,
-    * then ONE rename moves it into place — concurrent builders race
-    * benignly (deterministic inputs ⇒ equal contents; first move wins,
-    * the loser keeps its in-JVM copy). All IO is best-effort: any
-    * read/write failure degrades to the in-JVM checkpointed build,
-    * never to an error or a stale value. Freshness is content-
-    * addressed like [[corpusValue]]: a rewritten input table moves the
-    * fingerprint, which moves the sidecar DIRECTORY NAME.
-    *
-    * Contract for callers: row ORDER is not preserved across the
-    * parquet round trip (consumers must join/aggregate/sort
-    * downstream — every registered consumer does), the build must NOT
-    * localCheckpoint (dfArtifact materializes either way), and the
-    * schema must be parquet-representable (no void/interval columns). */
-  /** Run-level observability for the sidecar lifecycle (r15 ADVICE):
-    * how many dfArtifact resolutions were served from an on-disk
-    * sidecar vs built fresh this JVM. Bench emits both counts into its
-    * summary JSON so a "cold" total is self-describing — a cold run
-    * whose disk-hit count is nonzero rode pre-built sidecars under
-    * [[artifactRoot]] and silently omits those build costs. */
+  /** Sidecar file a [[corpusValue]] with this (corpus, tables, key)
+    * reads and publishes. */
+  private[graft] def corpusValuePath(d: String, tables: Seq[String],
+      key: Any): java.nio.file.Path =
+    diskPath(d, fingerprints(d, tables), key)
+
+  /** How many [[dfArtifact]] resolutions this JVM served from an on-disk
+    * sidecar vs built fresh. Bench and graftbench report both, so a
+    * "cold" total that rode pre-built sidecars says so (nonzero hits). */
   private[graft] val artifactDiskHits = new java.util.concurrent.atomic.AtomicLong(0)
   private[graft] val artifactBuilds   = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -241,16 +252,28 @@ object Tables {
     * re-deriving "latest" (the Iceberg manifest-entry shape). Pure
     * function of the same content fingerprint as [[dfArtifact]]; no IO. */
   private[graft] def dfArtifactDir(d: String, tables: Seq[String],
-      key: Any): String = {
-    val fp = tables.map(t => tableFingerprint(s"$d/$t.parquet")).mkString(",")
-    diskPath(d, fp, s"df:$key").toString + ".parquet"
-  }
+      key: Any): String =
+    diskPath(d, fingerprints(d, tables), s"df:$key").toString + ".parquet"
 
+  /** [[artifact]] for DataFrame-shaped corpus artifacts (pair indexes,
+    * truth sets, check verdicts, PQ code tables), ALSO persisted as a
+    * PARQUET SIDECAR at [[dfArtifactDir]]: a cold JVM reads the
+    * artifact instead of re-paying its scans and shuffles (an index
+    * table ships with the corpus snapshot, it is not re-derived by
+    * every reader). Spark writes to a unique temp sibling, then ONE
+    * rename publishes it — concurrent builders race benignly (equal
+    * contents; the loser keeps its in-JVM copy). All IO is best-effort:
+    * any failure degrades to the in-JVM checkpointed build.
+    *
+    * Contract for callers: row ORDER is not preserved across the
+    * parquet round trip (consumers must join/aggregate/sort
+    * downstream), the build must NOT localCheckpoint (dfArtifact
+    * materializes either way), and the schema must be
+    * parquet-representable (no void/interval columns). */
   private[graft] def dfArtifact(s: SparkSession, d: String,
       tables: Seq[String], key: Any)(build: => DataFrame): DataFrame =
     artifact(s, d, tables, key) {
-      val fp = tables.map(t => tableFingerprint(s"$d/$t.parquet")).mkString(",")
-      val dir = diskPath(d, fp, s"df:$key").toString + ".parquet"
+      val dir = dfArtifactDir(d, tables, key)
       val done = java.nio.file.Paths.get(dir, "_SUCCESS")
       val fromDisk =
         try {
@@ -296,17 +319,15 @@ object Tables {
     * unreachable, not deserialized into a shape the new code misreads. */
   private val ArtifactFormatVersion = 1
 
-  /** Sidecar root for cross-JVM corpus artifacts. Overridable so tests
-    * (and deployments whose tmp is small) can point it elsewhere; the
-    * corpus dirs themselves are read-only, so the sidecar cannot live
-    * beside the data here — at 100 TB it would be a path in the same
-    * object store as the table, keyed by the snapshot id. */
-  /** Resolution order: the `graft.artifact.dir` SYSTEM PROPERTY (set by
-    * Bench to a run-unique dir so its cold leg can never ride sidecars a
-    * previous JVM published — r17 verdict #2: cold_total silently
-    * omitted ~26 builds served from the shared default dir), then the
-    * env var (explicit cross-JVM reuse, the production "sidecar ships
-    * with the snapshot" lifecycle), then the shared tmp default. */
+  /** Sidecar root for cross-JVM corpus artifacts (the corpus dirs are
+    * read-only, so the sidecar cannot live beside the data here — at
+    * 100 TB it would be a path in the same object store as the table,
+    * keyed by the snapshot id). Resolution order: the `graft.artifact.dir`
+    * SYSTEM PROPERTY (set by Bench to a run-unique dir so its cold leg
+    * can never ride sidecars a previous JVM published), then the
+    * SPARK_GRAFT_ARTIFACT_DIR env var (explicit cross-JVM reuse, the
+    * "sidecar ships with the snapshot" lifecycle), then the shared tmp
+    * default. */
   private[graft] def artifactRoot: java.nio.file.Path =
     java.nio.file.Paths.get(
       sys.props.get("graft.artifact.dir")
@@ -324,6 +345,31 @@ object Tables {
       bytes.take(16).map(b => f"$b%02x").mkString + ".bin")
   }
 
+  /** Classes a [[corpusValue]] sidecar may contain: the stored value
+    * types (`Seq[(Long, Vector[Double])]` centroids, boxed max ids,
+    * `Array[Array[Array[Double]]]` codebooks — arrays are checked by
+    * their element type, primitives pass) and the Scala collection
+    * serialization proxies they write through. The sidecar sits under a
+    * shared tmp dir at a predictable name, so anything else is rejected
+    * before it is instantiated. */
+  private val sidecarClasses = Set(
+    "java.lang.Number", "java.lang.Long", "java.lang.Double", "scala.Tuple2",
+    "scala.collection.immutable.ArraySeq", "scala.collection.immutable.ArraySeq$ofRef",
+    "scala.collection.generic.DefaultSerializationProxy",
+    "scala.collection.generic.SerializeEnd$",
+    "scala.collection.IterableFactory$ToFactory",
+    "scala.runtime.ModuleSerializationProxy")
+  private val sidecarVector = "scala\\.collection\\.immutable\\.Vector\\d?\\$?".r
+
+  private val sidecarFilter: java.io.ObjectInputFilter = { info =>
+    import java.io.ObjectInputFilter.Status
+    var c = info.serialClass
+    while (c != null && c.isArray) c = c.getComponentType
+    if (c == null || c.isPrimitive || sidecarClasses(c.getName) ||
+        sidecarVector.matches(c.getName)) Status.ALLOWED
+    else Status.REJECTED
+  }
+
   private def diskRead[T](d: String, fp: String, key: Any): Option[T] =
     try {
       val p = diskPath(d, fp, key)
@@ -331,6 +377,7 @@ object Tables {
       else {
         val in = new java.io.ObjectInputStream(new java.io.BufferedInputStream(
           java.nio.file.Files.newInputStream(p)))
+        in.setObjectInputFilter(sidecarFilter)
         try Some(in.readObject().asInstanceOf[T]) finally in.close()
       }
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -371,19 +418,13 @@ object Tables {
     cached(spark, p)(spark.read.parquet(p))
   }
 
-  /** Memoized table row count per (path, content fingerprint) —
-    * size-regime gates (artifact materialization, exact-vs-blocked
-    * routing) and samplers consult the corpus size repeatedly; the count
-    * itself is one metadata-cheap scan and, unlike a DataFrame, is not
-    * bound to the session that computed it. */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
-
-  def rowCount(s: SparkSession, d: String, name: String): Long = {
-    val p = s"$d/$name.parquet"
-    countCache.computeIfAbsent((p, tableFingerprint(p)),
-      _ => java.lang.Long.valueOf(load(s, d, name).count())).longValue()
-  }
+  /** Table row count, stored per content fingerprint — size-regime
+    * gates (artifact materialization, exact-vs-blocked routing) and
+    * samplers consult the corpus size repeatedly; the count itself is
+    * one metadata-cheap scan. */
+  def rowCount(s: SparkSession, d: String, name: String): Long =
+    artifact(s, d, Seq(name), "rowCount")(
+      java.lang.Long.valueOf(load(s, d, name).count())).longValue()
 
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame   = load(s, d, "orders")

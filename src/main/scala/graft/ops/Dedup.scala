@@ -166,8 +166,8 @@ object Dedup {
     * probability at j=0.5, vanishing above it). Only 8-byte bucket keys
     * shuffle for candidate generation; shingle arrays travel once, for
     * the surviving candidates. */
-  /** Near-dup PAIR SETS are cached per (corpus, threshold) for the life
-    * of the JVM — the signature/banding pipeline is an INDEX over the
+  /** Near-dup PAIR SETS are stored per (corpus fingerprint, threshold)
+    * — the signature/banding pipeline is an INDEX over the
     * corpus, built once and consumed by every downstream client
     * (near-dup listing, cluster components, decontamination), the same
     * build-once lifecycle as [[Similarity.trainedCentroids]]. The

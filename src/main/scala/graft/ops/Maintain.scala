@@ -128,23 +128,18 @@ object Maintain {
     * merge files. Content identity (the oracle) is the whole contract:
     * compaction may change layout, never rows. MaintainSpec pins the
     * before/after file counts. */
-  private val smallCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // keyed by (corpus dir, target file size) — a second caller with a
-  // different compaction target must NOT get the layout built for the
-  // first (same discipline as knnEdgesCache / truthPairsCache)
-  private val compactCache = new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
   val SmallFileCount = 48
 
   def smallFilesDir(s: SparkSession, d: String): String =
-    smallCache.computeIfAbsent(d, { dir =>
+    Tables.artifact(s, d, Seq("events"), "smallFilesDir") {
       val out = graft.Tuning.diskTmpDir("graft_small_").toString
-      Tables.events(s, dir)
+      Tables.events(s, d)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("user_id"), col("event_type"), col("value"))
         .repartition(SmallFileCount)   // simulate per-micro-batch landing files
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   /** Lists the dir's parquet part-files via the Hadoop FS API. */
   def partFiles(s: SparkSession, dir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
@@ -153,16 +148,18 @@ object Maintain {
     fs.listStatus(path).toSeq.filter(_.getPath.getName.startsWith("part-"))
   }
 
+  /** Keyed by the target file size too: a second caller with a
+    * different compaction target must NOT get the first one's layout. */
   def compactedDir(s: SparkSession, d: String,
       targetFileBytes: Long = 128L * 1024 * 1024): String =
-    compactCache.computeIfAbsent((d, targetFileBytes), { case (dir, _) =>
-      val in = smallFilesDir(s, dir)
+    Tables.artifact(s, d, Seq("events"), ("compactedDir", targetFileBytes)) {
+      val in = smallFilesDir(s, d)
       val bytes = partFiles(s, in).map(_.getLen).sum
       val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
       val out = graft.Tuning.diskTmpDir("graft_compact_").toString
       s.read.parquet(in).coalesce(nFiles).write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   def compactedEvents(s: SparkSession, d: String): DataFrame =
     s.read.parquet(compactedDir(s, d))

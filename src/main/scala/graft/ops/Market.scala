@@ -254,7 +254,7 @@ object Market {
     * is [[Chunked.frames]] at k=2 (complete frames only, so the first
     * trade of each symbol drops — exactly the rows where `lag` is
     * null). Build-once lifecycle: the table checkpoint-caches per
-    * corpus (like `Dedup.pairsCache`) because downstream indicators
+    * corpus fingerprint because downstream indicators
     * ([[rsi]]) re-consume it; at 100 TB this is the staged returns
     * table every indicator job reads. */
   def returns(s: SparkSession, d: String): DataFrame =

@@ -28,7 +28,7 @@ object Relational {
       .orderBy(col("event_id"))
 
   /** Hive-style PARTITIONED layout + partition-pruned scan: the events
-    * table is staged once per (JVM, sfDir) partitioned by event_type,
+    * table is staged once per events fingerprint, partitioned by event_type,
     * then a filter on the partition column prunes whole directories at
     * planning time (`PartitionFilters` in the plan — zero I/O for
     * non-matching partitions). At 100 TB this is the first line of
@@ -38,15 +38,13 @@ object Relational {
     * data lands partitioned at ingest and pays nothing here.
     * RelationalSpec asserts the pruned plan; the oracle states the same
     * aggregate over the raw table. */
-  private val partitionedCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def partitionedEventsDir(s: SparkSession, d: String): String =
-    partitionedCache.computeIfAbsent(d, { dir =>
+    Tables.artifact(s, d, Seq("events"), "partitionedEventsDir") {
       val out = graft.Tuning.diskTmpDir("graft_part_").toString
-      Tables.events(s, dir)
+      Tables.events(s, d)
         .write.mode("overwrite").partitionBy("event_type").parquet(out)
       out
-    })
+    }
 
   def partitionPrunedDaily(s: SparkSession, d: String,
       eventType: String = "purchase"): DataFrame =
@@ -64,20 +62,15 @@ object Relational {
     * aggregated. Timestamps round-trip as epoch micros (lossless;
     * ISO strings would re-parse through the session zone). Oracle states
     * the same aggregate over the original table. */
-  private val jsonlCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def jsonlEventsDir(s: SparkSession, d: String): String =
-    jsonlCache.computeIfAbsent(d, { dir =>
+    Tables.artifact(s, d, Seq("events"), "jsonlEventsDir") {
       val out = graft.Tuning.diskTmpDir("graft_jsonl_").toString
-      Tables.events(s, dir)
+      Tables.events(s, d)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("user_id"), col("event_type"), col("value"))
         .write.mode("overwrite").json(out)
       out
-    })
-
-  private val evoCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Stage a SCHEMA-EVOLVED parquet dataset once per corpus: half the
     * events written with a LEGACY 2-column schema (event_id, value),
@@ -86,9 +79,9 @@ object Relational {
     * split on event_id parity so the oracle can recompute from the
     * original table. */
   def evolvedEventsDirs(s: SparkSession, d: String): (String, String) = {
-    val root = evoCache.computeIfAbsent(d, { dir =>
+    val root = Tables.artifact(s, d, Seq("events"), "evolvedEventsDirs") {
       val out = graft.Tuning.diskTmpDir("graft_evo_").toString
-      val e = Tables.events(s, dir)
+      val e = Tables.events(s, d)
       e.filter(col("event_id") % 2 === 0)
         .select(col("event_id"), col("value"))
         .write.mode("overwrite").parquet(out + "/legacy")
@@ -96,7 +89,7 @@ object Relational {
         .select(col("event_id"), col("event_type"), col("value"))
         .write.mode("overwrite").parquet(out + "/evolved")
       out
-    })
+    }
     (root + "/legacy", root + "/evolved")
   }
 
@@ -600,20 +593,15 @@ object Relational {
     * the Spark side to Decimal to match the oracle's unbounded
     * arithmetic. Deterministic in the key: retries, reruns, and both
     * engines keep exactly the same rows. */
-  /** Corpus-wide max weight, memoized per fixture dir: the overflow
-    * guard and keep-test threshold need it on every call, and the max
-    * is one full JSON-extraction scan of events (~0.3 s at sf0.1) that
-    * never changes for a given corpus. */
-  private val kMaxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   def weightedSample(s: SparkSession, d: String): DataFrame = {
     graft.functions.Native.register(s)
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("event_type"),
         get_json_object(col("props"), "$.k").cast(org.apache.spark.sql.types.LongType).as("k"))
-    val kMax = kMaxCache.computeIfAbsent(d,
-      _ => java.lang.Long.valueOf(ev.agg(max(col("k"))).head().getLong(0))).longValue()
+    // corpus-wide max weight: one full JSON-extraction scan of events
+    // (~0.3 s at sf0.1), stored per events fingerprint
+    val kMax = Tables.artifact(s, d, Seq("events"), "weightedSample.kMax")(
+      java.lang.Long.valueOf(ev.agg(max(col("k"))).head().getLong(0))).longValue()
     require(kMax < (1L << 30),
       s"weightedSample keep-test runs in Long: hash32·k_max·2 wraps once " +
         s"k_max ≥ 2^30 (got $kMax) while the oracle computes in HUGEINT; " +
@@ -701,14 +689,12 @@ object Relational {
     * coalesced to '' before concat_ws) — concat_ws alone SKIPS nulls,
     * which would shift later fields left and parse a null-bearing row
     * as a different, valid-looking row instead of quarantining it. */
-  private val csvCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def csvEventsDir(s: SparkSession, d: String): String =
-    csvCache.computeIfAbsent(d, { dir =>
+    Tables.artifact(s, d, Seq("events"), "csvEventsDir") {
       val out = graft.Tuning.diskTmpDir("graft_csv_").toString
       val S = org.apache.spark.sql.types.StringType
       def f(c: org.apache.spark.sql.Column) = coalesce(c.cast(S), lit(""))
-      Tables.events(s, dir)
+      Tables.events(s, d)
         .select(
           when(col("event_id") % 97 === 0,
             concat(lit("#corrupt#"), col("event_id").cast(S)))
@@ -718,7 +704,7 @@ object Relational {
             .as("value"))
         .write.mode("overwrite").text(out)
       out
-    })
+    }
 
   def csvEventsRaw(s: SparkSession, d: String): DataFrame = {
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -755,17 +741,15 @@ object Relational {
     * column pruning and predicate pushdown reach the ORC stripes, and
     * the per-type summary is a partial-aggregating groupBy over a
     * 5-key space — no wide shuffle at any corpus size. */
-  private val orcCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def orcEventsDir(s: SparkSession, d: String): String =
-    orcCache.computeIfAbsent(d, { dir =>
+    Tables.artifact(s, d, Seq("events"), "orcEventsDir") {
       val out = graft.Tuning.diskTmpDir("graft_orc_").toString
-      Tables.events(s, dir)
+      Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
         .write.mode("overwrite").orc(out)
       out
-    })
+    }
 
   def orcSourceSummary(s: SparkSession, d: String): DataFrame =
     s.read.orc(orcEventsDir(s, d))

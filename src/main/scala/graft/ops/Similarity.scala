@@ -353,7 +353,7 @@ object Similarity {
     * measures recall vs brute force. */
   val NumCentroids = 16
 
-  /** Trained centroids cached per (corpus, k) for the life of the JVM —
+  /** Trained centroids stored per (corpus fingerprint, k) —
     * the production shape: a coarse quantizer is trained once per corpus
     * snapshot and REUSED by every index/search/dedup query against it,
     * not re-trained per query. The centroid table is k×dim doubles
@@ -1043,37 +1043,22 @@ object Similarity {
     * surviving pair moves its two vectors exactly once (at 100 TB the
     * pre-distinct duplicate factor — one copy per shared band — would
     * otherwise multiply the candidate-stage shuffle bytes). */
-  // per-corpus size cache for the band-geometry pick: the blocker is
-  // invoked repeatedly on the same corpus (dedup + clusters + overlap
-  // all ride it) and the eager count() job was re-paid on every call.
-  // The key is the analyzed plan's semantic hash COMBINED with a HASH of
-  // the plan's input-file listing — a parquet rewrite/append under the
-  // same root path changes the file set (part files carry fresh UUIDs),
-  // so stale counts can't survive a data refresh, and the file-list hash
-  // makes an Int semanticHash collision between unrelated plans
-  // harmless. Hashing (MurmurHash3.orderedHash over the sorted paths)
-  // rather than retaining the joined listing keeps the 64 retained keys
-  // O(bytes) even for a 100 TB corpus's million-file listing, and
-  // sidesteps separator ambiguity entirely. Bounded: one arbitrary entry
-  // evicted past 64 corpora (band geometry is a per-corpus scalar;
-  // re-counting after eviction is correct, just one extra job).
-  private val signCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), java.lang.Long]()
-
   /** Freshness-keyed cardinality: count() the frame once per (plan,
-    * input-file-set) and serve repeats from the bounded cache — the
-    * regime pickers (band geometry, exact-vs-IVF kNN routing) each need
-    * one scalar per corpus and are invoked per query. */
-  private def cachedCount(df: DataFrame): Long = {
-    if (signCountCache.size > 64) {
-      val it = signCountCache.keySet().iterator()
-      if (it.hasNext) { it.next(); it.remove() }
-    }
-    val key = (df.queryExecution.analyzed.semanticHash(),
-      scala.util.hashing.MurmurHash3.orderedHash(df.inputFiles.sorted.toSeq))
-    signCountCache.computeIfAbsent(key,
-      (_: (Int, Int)) => java.lang.Long.valueOf(df.count())).longValue()
-  }
+    * input-file-set) and serve repeats from the store — the regime
+    * pickers (band geometry, exact-vs-IVF kNN routing) each need one
+    * scalar per corpus and are invoked per query. The frame names no
+    * corpus dir, so its freshness rides in the key: the analyzed plan's
+    * semantic hash COMBINED with a hash of its input-file listing — a
+    * parquet rewrite/append under the same root changes the file set
+    * (part files carry fresh UUIDs), and the file-list hash makes an
+    * Int semanticHash collision between unrelated plans harmless.
+    * Hashing the sorted paths rather than retaining the listing keeps
+    * the key O(bytes) even for a million-file listing. */
+  private def cachedCount(df: DataFrame): Long =
+    Tables.artifact(df.sparkSession, "", Nil, ("cachedCount",
+        df.queryExecution.analyzed.semanticHash(),
+        scala.util.hashing.MurmurHash3.orderedHash(df.inputFiles.sorted.toSeq)))(
+      java.lang.Long.valueOf(df.count())).longValue()
 
   def signBandCandidates(e: DataFrame): DataFrame =
     signBandCandidates(e, forcedGeom = -1)

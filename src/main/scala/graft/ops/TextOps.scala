@@ -1056,8 +1056,8 @@ object TextOps {
       .orderBy(col("c"))
   }
 
-  /** (doc_id, n_tokens, quality_score) materialized ONCE per corpus per
-    * JVM — the text is tokenized and scored exactly once, and every
+  /** (doc_id, n_tokens, quality_score) staged ONCE per documents
+    * fingerprint — the text is tokenized and scored exactly once, and every
     * selection pass (the histogram AND both keep branches of
     * [[budgetSelect]], [[duplicatedSpans]]' denominator, or a budget
     * sweep across runs) reads the tiny 3-column numeric table instead
@@ -1066,23 +1066,17 @@ object TextOps {
     * inlines it into a pushed join-key filter — ~6 text parses per
     * document per query (measured 6× slower end to end at gen10x).
     * Doubles round-trip parquet bit-exactly, so semantics are
-    * unchanged. Same cache discipline as the market returns table,
-    * and the same standing assumption as every staged corpus in this
-    * repo: the source directory is immutable for the JVM's lifetime
-    * (a rewrite mid-JVM would desynchronize cached and live scans). */
-  private val scoredCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * unchanged. */
   private def scoredDocsDir(s: SparkSession, d: String): String =
-    scoredCache.computeIfAbsent(d, { dir =>
+    Tables.artifact(s, d, Seq("documents"), "scoredDocsDir") {
       val out = graft.Tuning.diskTmpDir("graft_scored_").toString
       // the UNSORTED projection: a global range sort before a staging
       // write is pure waste (parquet order is irrelevant downstream)
-      qualityScored(s, dir)
+      qualityScored(s, d)
         .select(col("doc_id"), col("n_tokens"), col("quality_score"))
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   /** TOKEN-BUDGET curation: keep the maximal quality-ordered prefix of
     * the corpus whose cumulative token count fits a global budget — the

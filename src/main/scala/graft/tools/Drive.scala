@@ -260,7 +260,7 @@ object Drive {
         graft.streaming.Pipeline.prestage(spark, sfDir)
         graft.streaming.Pipeline.prestageOrdered(spark, sfDir)
         for (i <- 1 to 3) {
-          graft.streaming.Pipeline.resetDrains()
+          graft.Tables.beginIteration()
           val t0 = System.nanoTime()
           graft.streaming.Pipeline.drainGroup(spark, sfDir)
           println(f"group drain $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")

@@ -67,6 +67,9 @@ object Profile {
       val fn = graft.SparkEntry.queries(name)
       var bb, bp, be = Double.MaxValue
       for (_ <- 1 to iters) {
+        // per-iteration entries (GRU/LSTM passes, drain group) rebuild
+        // each pass, exactly as Bench re-pays them
+        graft.Tables.beginIteration()
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()

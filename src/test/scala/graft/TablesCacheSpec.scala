@@ -12,38 +12,13 @@ import org.apache.spark.sql.functions._
   * serves the stale pre-rewrite listing snapshot here. */
 class TablesCacheSpec extends SparkSpec {
 
+  import TablesCacheSpec.rewriteInPlace
+
   /** Write a 1-part-file parquet table of `n` rows at dir/name.parquet,
     * returning the single part file's path. */
-  private def writeTable(dir: java.nio.file.Path, name: String, n: Long): java.nio.file.Path = {
-    val out = dir.resolve(s"$name.parquet")
-    spark.range(n).select(col("id"), (col("id") * 2).as("v"))
-      .coalesce(1).write.mode("overwrite").parquet(out.toString)
-    val parts = java.nio.file.Files.list(out).iterator()
-    var part: java.nio.file.Path = null
-    while (parts.hasNext) {
-      val p = parts.next()
-      if (p.getFileName.toString.endsWith(".parquet")) part = p
-    }
-    require(part != null, s"no part file under $out")
-    part
-  }
-
-  /** Rewrite `part`'s CONTENT (and its Hadoop local-FS `.crc` sidecar —
-    * checksum verification would reject mismatched bytes otherwise) in
-    * place from `from`, pinning both mtimes back to the original part's,
-    * so ONLY the file sizes distinguish old from new. */
-  private def rewriteInPlace(part: java.nio.file.Path, from: java.nio.file.Path): Unit = {
-    val origMtime = java.nio.file.Files.getLastModifiedTime(part)
-    def crcOf(p: java.nio.file.Path) =
-      p.getParent.resolve("." + p.getFileName.toString + ".crc")
-    java.nio.file.Files.write(part, java.nio.file.Files.readAllBytes(from))
-    java.nio.file.Files.setLastModifiedTime(part, origMtime)
-    if (java.nio.file.Files.exists(crcOf(part)) &&
-        java.nio.file.Files.exists(crcOf(from))) {
-      java.nio.file.Files.write(crcOf(part), java.nio.file.Files.readAllBytes(crcOf(from)))
-      java.nio.file.Files.setLastModifiedTime(crcOf(part), origMtime)
-    }
-  }
+  private def writeTable(dir: java.nio.file.Path, name: String, n: Long): java.nio.file.Path =
+    TablesCacheSpec.writeSinglePart(
+      spark.range(n).select(col("id"), (col("id") * 2).as("v")), dir.resolve(s"$name.parquet"))
 
   test("in-place part-file rewrite invalidates the cached plan and count") {
     val dir = java.nio.file.Files.createTempDirectory("graft_fp_")
@@ -62,7 +37,7 @@ class TablesCacheSpec extends SparkSpec {
     assert(Tables.load(spark, dir.toString, "tbl").count() === 5000L,
       "planCache served a stale file-listing snapshot after an in-place rewrite")
     assert(Tables.rowCount(spark, dir.toString, "tbl") === 5000L,
-      "countCache served a stale count after an in-place rewrite")
+      "rowCount served a stale count after an in-place rewrite")
   }
 
   test("tableFingerprint moves on size-only change and is stable otherwise") {
@@ -165,5 +140,98 @@ class TablesCacheSpec extends SparkSpec {
     assert(get() === ((29L, 812L)),
       "dfArtifact served a stale parquet sidecar after an in-place rewrite")
     assert(builds === 2)
+  }
+
+  test("corpusValue sidecars of the stored value types pass the deserialization filter") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fp6_")
+    writeTable(dir, "embeddings", 3L)
+    // the shapes the engine stores: k-means centroids (an ArraySeq of
+    // (id, Vector) — 40 wide, past Vector's one-block encoding) and PQ
+    // codebooks
+    val centroids = Array.tabulate(3)(i => (i.toLong, Vector.fill(40)(i + 0.5))).toSeq
+    val codebooks = Array.tabulate(2, 3, 4)((m, k, j) => m * 100.0 + k * 10 + j)
+    var builds = 0
+    def get[T <: AnyRef](key: String, v: T): T =
+      Tables.corpusValue(dir.toString, Seq("embeddings"), key) { builds += 1; v }
+    get("spec-centroids", centroids)
+    get("spec-codebooks", codebooks)
+    Tables.clearMemoryArtifactsForTest()
+    assert(get("spec-centroids", centroids) === centroids)
+    assert(get("spec-codebooks", codebooks).map(_.map(_.toSeq).toSeq).toSeq ===
+      codebooks.map(_.map(_.toSeq).toSeq).toSeq)
+    assert(builds === 2, "an allowed sidecar was rejected and rebuilt on a cold read")
+  }
+
+  test("a corpusValue sidecar of a disallowed class is never instantiated and rebuilds") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fp7_")
+    writeTable(dir, "embeddings", 4L)
+    val planted = Tables.corpusValuePath(dir.toString, Seq("embeddings"), "spec-planted")
+    java.nio.file.Files.createDirectories(planted.getParent)
+    val out = new java.io.ObjectOutputStream(java.nio.file.Files.newOutputStream(planted))
+    try out.writeObject(new PlantedSidecar) finally out.close()
+    PlantedSidecar.deserialized.set(false)
+
+    var builds = 0
+    val v = Tables.corpusValue(dir.toString, Seq("embeddings"), "spec-planted") {
+      builds += 1
+      java.lang.Long.valueOf(42L)
+    }
+    assert(v === java.lang.Long.valueOf(42L))
+    assert(builds === 1, "the rejected sidecar must degrade to a rebuild")
+    assert(!PlantedSidecar.deserialized.get, "the filter let a disallowed class be instantiated")
+
+    // control: without the filter the same bytes DO run the class's hook
+    val bos = new java.io.ByteArrayOutputStream()
+    val o2 = new java.io.ObjectOutputStream(bos)
+    o2.writeObject(new PlantedSidecar); o2.close()
+    new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bos.toByteArray)).readObject()
+    assert(PlantedSidecar.deserialized.get)
+  }
+}
+
+/** A serializable class outside the sidecar allow-list; its readObject
+  * hook records that deserialization reached it. */
+class PlantedSidecar extends Serializable {
+  private def readObject(in: java.io.ObjectInputStream): Unit = {
+    PlantedSidecar.deserialized.set(true)
+    in.defaultReadObject()
+  }
+}
+
+object PlantedSidecar {
+  val deserialized = new java.util.concurrent.atomic.AtomicBoolean(false)
+}
+
+object TablesCacheSpec {
+
+  /** Write `df` as ONE parquet part file under `out`, returning it. */
+  def writeSinglePart(df: org.apache.spark.sql.DataFrame,
+      out: java.nio.file.Path): java.nio.file.Path = {
+    df.coalesce(1).write.mode("overwrite").parquet(out.toString)
+    val parts = java.nio.file.Files.list(out).iterator()
+    var part: java.nio.file.Path = null
+    while (parts.hasNext) {
+      val p = parts.next()
+      if (p.getFileName.toString.endsWith(".parquet")) part = p
+    }
+    require(part != null, s"no part file under $out")
+    part
+  }
+
+  /** Rewrite `part`'s CONTENT (and its Hadoop local-FS `.crc` sidecar —
+    * checksum verification would reject mismatched bytes otherwise) in
+    * place from `from`, pinning both mtimes back to the original part's,
+    * so ONLY the file sizes distinguish old from new. */
+  def rewriteInPlace(part: java.nio.file.Path, from: java.nio.file.Path): Unit = {
+    val origMtime = java.nio.file.Files.getLastModifiedTime(part)
+    def crcOf(p: java.nio.file.Path) =
+      p.getParent.resolve("." + p.getFileName.toString + ".crc")
+    java.nio.file.Files.write(part, java.nio.file.Files.readAllBytes(from))
+    java.nio.file.Files.setLastModifiedTime(part, origMtime)
+    if (java.nio.file.Files.exists(crcOf(part)) &&
+        java.nio.file.Files.exists(crcOf(from))) {
+      java.nio.file.Files.write(crcOf(part), java.nio.file.Files.readAllBytes(crcOf(from)))
+      java.nio.file.Files.setLastModifiedTime(crcOf(part), origMtime)
+    }
   }
 }
