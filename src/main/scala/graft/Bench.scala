@@ -40,9 +40,8 @@ import org.apache.spark.sql.SparkSession
   *    (the 14-stream concurrent drain, re-paid every iteration), not a
   *    query; its oracle evidence lives with the individual streaming
   *    queries that consume the drained sinks.
-  *  - "cpus" in bench_summary.json is a JSON number whenever the env
-  *    value is numeric (the common case and rounds 1-9's type), quoted
-  *    only for non-numeric forms like "*".
+  *  - "cpus" in bench_summary.json is a JSON number (the session's
+  *    local[N] thread count; rounds 1-9's type).
   *  - since round 11 the `*_check` companion verdicts are per-corpus
   *    build-once artifacts (Checks.corpusVerdict), so their warm legs
   *    time a checkpoint read; their real verification work is in the
@@ -69,7 +68,11 @@ object Bench {
     if (panel == "null") "null"
     else panel.split("\"mean_ms\":")(1).takeWhile(c => c != ',' && c != '}')
 
-  private def jsonEscape(s: String): String = s.flatMap {
+  /** JSON string-body escape: backslash, quote, and ALL control chars
+    * (< 0x20). Bench's error map and Verify's oracle_sql.json go through
+    * it — a tab or CR in builder-authored SQL would otherwise make the
+    * consumer's json.load fail and silently zero the correctness compare. */
+  private[graft] def jsonEscape(s: String): String = s.flatMap {
     case '"'          => "\\\""
     case '\\'         => "\\\\"
     case '\n'         => "\\n"
@@ -79,9 +82,41 @@ object Bench {
     case c            => c.toString
   }
 
+  /** Warm-up outside the timings: session init, codegen, parquet footers
+    * and, with `stageFixtures`, every one-time fixture staging write
+    * (streaming source files, partitioned/jsonl copies, bucketed tables)
+    * so no timed query pays a staging cost in either iteration. Each step
+    * is individually best-effort: a partial fixture dir (e.g. a generated
+    * scale fixture with only events/documents/embeddings) skips the
+    * stages it can't feed, and the affected queries — not the whole
+    * run — fail loudly.
+    *
+    * Subset runs (scale curves over generated fixtures) pass
+    * `stageFixtures = false`: they must not copy the events table into
+    * jsonl/partitioned/evolved/streaming variants their queries never
+    * read — at gen1000x each copy is ~10 GB of host disk per bench JVM.
+    * A subset query that does need a staged variant stages it lazily on
+    * first use (its cold number then carries the one-time staging, which
+    * is the honest attribution). */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String,
+      stageFixtures: Boolean): Unit = {
+    def tryWarm(f: => Unit): Unit =
+      try f catch { case e: Throwable =>
+        System.err.println(s"[bench] warm-up step skipped: ${e.getMessage}") }
+    tryWarm(Tables.lineitem(spark, sfDir).count())
+    tryWarm(Tables.events(spark, sfDir).count())
+    if (stageFixtures) {
+      tryWarm(graft.streaming.Pipeline.prestage(spark, sfDir))
+      tryWarm(graft.streaming.Pipeline.prestageOrdered(spark, sfDir))
+      tryWarm(graft.ops.Relational.partitionedEventsDir(spark, sfDir))
+      tryWarm(graft.ops.Relational.jsonlEventsDir(spark, sfDir))
+      tryWarm(graft.ops.Relational.evolvedEventsDirs(spark, sfDir))
+      tryWarm(graft.ops.Joins.bucketedTables(spark, sfDir))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // HONEST COLD ATTRIBUTION (r17 verdict #2): unless the caller pins
     // an artifact dir explicitly, re-root the cross-JVM sidecar store at
     // a RUN-UNIQUE dir so iteration 1 BUILDS every dfArtifact/corpusValue
@@ -104,57 +139,13 @@ object Bench {
     // min-of-one-warm noise the r14 verdict graded
     val maxIters = pinnedIters.getOrElse(5)
     val convergeFrac = 0.015
-    // partitions default to the thread count, but must SCALE WITH DATA:
-    // the frame-materializing families hold rows/partition × frame-width
-    // transient state per task, so at 100× the fixture scale the
-    // partition count — not the heap — is the right knob (see SCALING.md)
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      // the default 100-entry codegen class cache is smaller than one
-      // suite iteration (217 plans × several codegen units), so the
-      // "warm" pass would re-Janino-compile every query's generated code
-      // after LRU eviction; sized to hold the whole suite
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        graft.Tuning.diskTmpDir("graft_wh_").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm-up outside the timings: session init, codegen, parquet footers,
-    // and every one-time fixture staging write (streaming source files,
-    // partitioned/jsonl copies, bucketed tables) so no timed query pays
-    // a staging cost in either iteration. Each step is individually
-    // best-effort: a partial fixture dir (e.g. a generated scale fixture
-    // with only events/documents/embeddings) skips the stages it can't
-    // feed, and the affected queries — not the whole run — fail loudly.
-    def tryWarm(f: => Unit): Unit =
-      try f catch { case e: Throwable =>
-        System.err.println(s"[bench] warm-up step skipped: ${e.getMessage}") }
+    val spark = Tuning.localSession()
+    val cpus = spark.sparkContext.defaultParallelism
     // optional subset (comma-separated names) — used by the scale-curve
     // runs over generated fixtures that carry only some tables
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    tryWarm(Tables.lineitem(spark, sfDir).count())
-    tryWarm(Tables.events(spark, sfDir).count())
-    // fixture-staging warm-ups run for FULL-suite runs only: a subset
-    // run (scale curves over generated fixtures) must not copy the
-    // events table into jsonl/partitioned/evolved/streaming variants
-    // its queries never read — at gen1000x each copy is ~10 GB of
-    // host disk per bench JVM. A subset query that does need a staged
-    // variant stages it lazily on first use (its cold number then
-    // carries the one-time staging, which is the honest attribution).
-    if (only.isEmpty) {
-      tryWarm(graft.streaming.Pipeline.prestage(spark, sfDir))
-      tryWarm(graft.streaming.Pipeline.prestageOrdered(spark, sfDir))
-      tryWarm(graft.ops.Relational.partitionedEventsDir(spark, sfDir))
-      tryWarm(graft.ops.Relational.jsonlEventsDir(spark, sfDir))
-      tryWarm(graft.ops.Relational.evolvedEventsDirs(spark, sfDir))
-      tryWarm(graft.ops.Joins.bucketedTables(spark, sfDir))
-    }
+    warmUp(spark, sfDir, stageFixtures = only.isEmpty)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     val best   = scala.collection.mutable.Map[String, Double]()
@@ -399,16 +390,9 @@ object Bench {
     // file, pretty-enough to diff and small enough to keep at HEAD.
     try {
       val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_summary.json")
-      // cpus is numeric in rounds 1-9's artifacts; keep the number type
-      // when the value is numeric and quote only non-numeric forms like
-      // '*' (the round-10 quoting fixed invalid JSON but silently changed
-      // the schema for every consumer parsing cpus as an int)
-      val cpusJson =
-        if (cpus.forall(_.isDigit) && cpus.nonEmpty) cpus
-        else "\"" + jsonEscape(cpus) + "\""
       val body =
         s"""{
-           |"summary":{"warm_total":$total,"cold_total":$coldTotal,"n_ok":${best.size},"n_errors":${errors.size},"probe_sum":$probeSum,"artifact_disk_hits":$artHits,"artifact_builds":$artBuilds,$meanMs,"unit":"sec","sf":"$sfDir","cpus":$cpusJson,"iters":$itersRun},
+           |"summary":{"warm_total":$total,"cold_total":$coldTotal,"n_ok":${best.size},"n_errors":${errors.size},"probe_sum":$probeSum,"artifact_disk_hits":$artHits,"artifact_builds":$artBuilds,$meanMs,"unit":"sec","sf":"$sfDir","cpus":$cpus,"iters":$itersRun},
            |"probe":$probe,
            |"sched_probe_ms":$schedProbe,
            |"mem_probe_gbps":$memProbe,

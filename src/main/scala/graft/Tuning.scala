@@ -8,7 +8,7 @@ object Tuning {
   /** Root for EPHEMERAL per-run scratch (streaming checkpoints, staged
     * replay sources, bounded-drain sinks): tmpfs when the host offers it,
     * else the JVM temp dir. The per-micro-batch floor decomposition
-    * (SCALING.md stream addendum; `LatExp decompose`) shows every
+    * (SCALING.md stream addendum, round-7 per-phase table) shows every
     * checkpoint-log phase and the per-batch sink append paying the
     * backing filesystem — RAM-backed dirs cut the measured solo-drain
     * floor ~30% end to end. Durability is NOT lost where it matters:
@@ -35,14 +35,25 @@ object Tuning {
 
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      createdTmpDirs.forEach { root =>
-        try {
-          import java.nio.file._
-          Files.walk(root).sorted(java.util.Comparator.reverseOrder[Path]())
-            .forEach(p => try Files.deleteIfExists(p) catch { case _: Throwable => () })
-        } catch { case _: Throwable => () }
-      }
+      createdTmpDirs.forEach(deleteTree(_))
     }, "graft-tmp-cleanup"))
+  }
+
+  private def deleteTree(root: java.nio.file.Path): Unit =
+    try {
+      import java.nio.file._
+      scala.util.Using.resource(Files.walk(root)) {
+        _.sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(p => try Files.deleteIfExists(p) catch { case _: Throwable => () })
+      }
+    } catch { case _: Throwable => () }
+
+  /** Delete a [[fastTmpDir]]/[[diskTmpDir]] dir now, for scratch whose
+    * useful output has already moved out — a long-lived JVM would
+    * otherwise hold it until exit. */
+  def dropTmpDir(p: java.nio.file.Path): Unit = {
+    deleteTree(p)
+    createdTmpDirs.remove(p)
   }
 
   def fastTmpDir(prefix: String): java.nio.file.Path = {
@@ -61,6 +72,43 @@ object Tuning {
     createdTmpDirs.add(p)
     p
   }
+
+  /** The one local-mode session builder: Bench, Verify, Profile, Drive,
+    * ScaleFixture and the test suite all start here, so a knob added for
+    * one measures the same system as the others. `cpus` defaults to
+    * SPARK_GRAFT_CPUS, else the host's processor count; `shufflePartitions`
+    * to SPARK_GRAFT_SHUFFLE_PARTITIONS, else `cpus`. Partitions are the
+    * knob that must SCALE WITH DATA: the frame-materializing families hold
+    * rows/partition × frame-width transient state per task, so at 100×
+    * the fixture scale the partition count, not the heap, is the right
+    * lever (SCALING.md). */
+  def localSession(
+      cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+        .getOrElse(Runtime.getRuntime.availableProcessors),
+      shufflePartitions: Option[Int] = None): SparkSession = {
+    val parts = shufflePartitions
+      .orElse(sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt))
+      .getOrElse(cpus)
+    val b = SparkSession.builder().master(s"local[$cpus]")
+    sessionConf(parts).foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** The conf [[localSession]] applies on top of the master URL. The
+    * default 100-entry codegen class cache is smaller than one suite
+    * iteration (217 plans × several codegen units), so a "warm" pass
+    * would re-Janino-compile every query's generated code after LRU
+    * eviction; 4000 holds the whole suite. The warehouse dir dies with
+    * the JVM ([[diskTmpDir]]). */
+  private[graft] def sessionConf(shufflePartitions: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    "spark.sql.codegen.cache.maxEntries" -> "4000",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.warehouse.dir" -> diskTmpDir("graft_wh_").toString,
+    "spark.ui.enabled" -> "false")
 
   /** Run `f` with `spark.sql.shuffle.partitions` set to n, restoring the
     * previous value after. For bounded drains and small iterative steps

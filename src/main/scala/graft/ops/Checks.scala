@@ -206,7 +206,7 @@ object Checks {
     // pool=64 — multi-probe for the cell-pruning loss, wide rerank for
     // code distortion): measured 0.74 (sf0.1) / 0.84 (sf0.01, sf0.001),
     // so the 0.6 floor holds with margin on this worst-case cluster-free
-    // profile (tools/Drive pqRecall)
+    // profile (SCALING.md round 16)
     val ivfpq = Similarity.ivfPqTopK(s, d).select(col("q_id"), col("n_id"))
       .localCheckpoint(true)
     val nTrue = truth.count()
@@ -555,7 +555,7 @@ object Checks {
     * (~100 members) entirely and agreement is 1.0 wherever no probed
     * cell exceeds the floor; the 0.7 gate is the committed margin, not
     * the expectation (SimilaritySpec measures the fixture agreement,
-    * tools/Drive adcAgree measures it at the engaged gen1000x scale).
+    * SCALING.md rounds 12/13 measure it at the engaged gen1000x scale).
     * `n_queries` (the holdout count) hash-checks value-for-value. */
   def adcClassifyCheck(s: SparkSession, d: String,
       agreeFloor: Double = 0.7): DataFrame =

@@ -745,7 +745,7 @@ object Similarity {
     * free recall lever — measured on the cluster-free fixtures (the
     * sketch's worst case): pool 4 → 0.44 recall@5, 8 → 0.64-0.74,
     * 16 → 0.84-0.90, 32 → 0.96, all at the same ~1.4 s warm wall
-    * (tools/Drive pqRecall). Default 16 clears the companion's 0.7
+    * (pool-16 row: SCALING.md round 16). Default 16 clears the companion's 0.7
     * floor with margin while keeping the rerank join at 80 ids/query;
     * at 100 TB pool·k rows per query is still negligible next to the
     * code scan. */
@@ -848,7 +848,7 @@ object Similarity {
     * tail is the shared pool-window + rerank shape. Recall compounds
     * the two sketches' losses; `q_ann_pq_check` pins both floors.
     *
-    * TUNING (tools/Drive pqRecall, cluster-free fixtures): the wide
+    * TUNING (SCALING.md rounds 11/16, cluster-free fixtures): the wide
     * pool recovers the code-distortion loss but NOT the cell-pruning
     * loss — (nProbe=4, pool=32) plateaus at 0.42-0.60 recall@5 where
     * PQ-alone reaches 0.96; multi-probe is what moves it, and a wider
@@ -986,7 +986,7 @@ object Similarity {
     * recall (SCALING.md round 16 — recall ≈ 1 when the rerank pool
     * covers the query's cluster, collapses when thousands of near-peers
     * exceed code resolution; the uniform driver fixture sits between).
-    * Shared by the Drive staging tool and the clustered-regime spec. */
+    * Used by the clustered-regime spec. */
   private[graft] def syntheticClusteredEmbeddings(s: SparkSession, n: Long,
       centers: Int, noiseW: Int): DataFrame =
     s.range(n).select(col("id").as("vec_id"),
@@ -1004,11 +1004,7 @@ object Similarity {
     * pairs at 200k labeled). */
   val KnnExactMaxLabeled = 100000L
 
-  /** Probe-visible alias for [[signBandKeys]] (tools/Drive embedIvfPhases). */
-  private[graft] def signBandKeysPublic(wide: Boolean): Column =
-    signBandKeys(if (wide) 1 else 0)
-
-  /** Probe/spec-visible alias taking the 3-valued geometry. */
+  /** Spec-visible alias taking the 3-valued geometry. */
   private[graft] def signBandKeysGeom(geom: Int): Column = signBandKeys(geom)
 
   private def signBandKeys(geom: Int): Column = geom match {
@@ -1276,7 +1272,7 @@ object Similarity {
         // the task. (An SDC pre-filter on the 4-bit PQ codes was
         // measured and REJECTED here: code-to-code scores lose
         // 0.25-0.45 of true cosine at the threshold boundary on this
-        // profile — tools/Drive sdcError — so a loss-free margin
+        // profile — SCALING.md round 12, item 3 — so a loss-free margin
         // filters nothing. The classifier's ADC+exact-rerank composes
         // because it only needs ranking within a pool; threshold
         // semantics need the exact dot.)
@@ -1322,11 +1318,6 @@ object Similarity {
     * gets the exact cosine (same left-to-right float→double fold as
     * the codegen'd expression). Emits pairs at or above the
     * threshold. */
-  /** Probe-visible alias (tools/Drive dedupWidePhases). */
-  private[graft] def cellBandVerifiedPairsPublic(members: DataFrame,
-      threshold: Double): org.apache.spark.sql.Dataset[(Long, Long, Double)] =
-    cellBandVerifiedPairs(members, threshold)
-
   private def cellBandVerifiedPairs(members: DataFrame,
       threshold: Double): org.apache.spark.sql.Dataset[(Long, Long, Double)] = {
     val s = members.sparkSession
@@ -1387,36 +1378,6 @@ object Similarity {
           out.iterator
         }
       }
-  }
-
-  /** Symmetric (code, code) inner-product table from the corpus
-    * codebooks, flat ((m·K + i)·K + j): SDC pair score =
-    * Σ_m sym(m, code_m(a), code_m(b)) ≈ cos(a, b) (both sides encode
-    * normalized vectors; subspaces decompose the dot). Unlike ADC there
-    * is no per-query table build — 8 lookups per PAIR, nothing
-    * amortized — which is what a pair-scan (not a query-scan) needs. */
-  private[graft] def sdcFlatTable(cb: Array[Array[Array[Double]]]): Array[Double] = {
-    val mC = cb.length
-    val kC = cb(0).length
-    val ds = cb(0)(0).length
-    val t = new Array[Double](mC * kC * kC)
-    var m = 0
-    while (m < mC) {
-      var i = 0
-      while (i < kC) {
-        var j = 0
-        while (j < kC) {
-          var acc = 0.0
-          var x = 0
-          while (x < ds) { acc += cb(m)(i)(x) * cb(m)(j)(x); x += 1 }
-          t((m * kC + i) * kC + j) = acc
-          j += 1
-        }
-        i += 1
-      }
-      m += 1
-    }
-    t
   }
 
   /** Embedding-cosine near-duplicate DEDUP blocked on a coarse COLUMN key
@@ -1700,7 +1661,7 @@ object Similarity {
 
   /** Bounds for the AUTO-sized exact-rerank pool per (query, cell) in
     * the ADC regime ([[autoAdcPool]]). The r12 curve at the engaged
-    * scale (2M vectors, cluster-free worst case, tools/Drive adcAgree)
+    * scale (2M vectors, cluster-free worst case, SCALING.md round 12)
     * measured pool 64 → 0.42 prediction agreement vs the exact scan,
     * 256 → 0.77, 1024 → 0.9993 — a fixed small default silently
     * degrades the moment the gate engages, so the pool now tracks the
@@ -1719,7 +1680,7 @@ object Similarity {
     * 4096-cell cap makes avgCell grow linearly; past it, agreement
     * becomes the deployment's explicit knob (knnClassifyIvf(adcPool=)).
     * Engaged-scale agreement with this rule is measured per round at
-    * gen1000x (tools/Drive adcAgree; SCALING.md round-13). */
+    * gen1000x (SCALING.md round 13). */
   val KnnAdcPoolFloor = 256
   val KnnAdcPoolCap = 1024
   val KnnAdcPoolCellFrac = 4

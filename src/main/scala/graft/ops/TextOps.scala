@@ -495,8 +495,8 @@ object TextOps {
     * 891 MB for the packed numeric structs carrying the same
     * information — storing both was +150% of the typed size, and the
     * serve paths never touch the string. The derive costs ~4.6 s per
-    * FULL-index presentation read at gen1000x (measured, Drive
-    * postingsDecodeAB PRES_DERIVED vs PRES_STORED) — paid only by the
+    * FULL-index presentation read at gen1000x (SCALING.md round 16,
+    * PRES_DERIVED vs PRES_STORED) — paid only by the
     * display shape, never by retrieval. Bounded per row: a posting
     * list covers ≤ blockSize documents. */
   private def withPostingsString(segs: DataFrame): DataFrame =
@@ -518,7 +518,7 @@ object TextOps {
     * Lucene delta-packed-postings shape; r15 verdict defect #2 —
     * measured at gen1000x: 891 MB typed vs 1353 MB for the same
     * information as a string column, and the pruned serve-path decode
-    * is 2.3× faster, Drive postingsDecodeAB). The display string is
+    * is 2.3× faster, SCALING.md round 16). The display string is
     * DERIVED at read ([[withPostingsString]]) by the presentation
     * shapes only.
     *
@@ -547,7 +547,7 @@ object TextOps {
     * builds ([[indexDeltaMerge]]), so a delta segment is BY
     * CONSTRUCTION the same table the full rebuild would produce over
     * those documents. */
-  /** Diagnostic-only alias for [[buildSegments]] (Drive indexDeltaScan). */
+  /** Spec-visible alias for [[buildSegments]] at the default block size. */
   private[graft] def buildSegmentsForDiag(docs: DataFrame): DataFrame =
     buildSegments(docs, 100)
 
@@ -964,13 +964,6 @@ object TextOps {
     bm25FromSegments(s, d, liveSegments(s, d), queryTokens, k,
       normsOverride = Some(liveNorms))
   }
-
-  /** Diagnostic-only accessor to the shared scoring body (Drive
-    * streamCompactAB): serve BM25 over an arbitrary segment source at
-    * the default query panel. */
-  private[graft] def bm25FromSegmentsDiag(s: SparkSession, d: String,
-      segments: DataFrame): DataFrame =
-    bm25FromSegments(s, d, segments, Seq("vector", "hash", "dup"), 10)
 
   /** The segment-served Okapi scoring body, parameterized by the
     * segment source — one body for the sidecar-served and

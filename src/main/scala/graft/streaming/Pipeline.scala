@@ -153,10 +153,12 @@ object Pipeline {
       (slices ++ heartbeats).zipWithIndex.foreach { case (df, i) =>
         val stage = graft.Tuning.fastTmpDir("graft_oslice_")
         df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = Files.list(stage).filter(_.toString.endsWith(".parquet"))
-          .findFirst().get()
+        val part = scala.util.Using.resource(Files.list(stage)) {
+          _.filter(_.toString.endsWith(".parquet")).findFirst().get()
+        }
         val target = out.resolve(f"$i%02d.parquet")
         Files.move(part, target)
+        graft.Tuning.dropTmpDir(stage)
         Files.setLastModifiedTime(target,
           java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
       }

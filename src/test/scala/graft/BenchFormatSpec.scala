@@ -30,4 +30,10 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(line.count(_ == '{') == line.count(_ == '}'))
     assert(line.endsWith(""""stream_batch_ms_mean":272.11}"""))
   }
+
+  test("jsonEscape escapes quote, backslash and every control char") {
+    val raw = "a\"b\\c\nd\re\tf\u0001g"
+    assert(Bench.jsonEscape(raw) == "a\\\"b\\\\c\\nd\\re\\tf\\u0001g")
+    assert(Bench.jsonEscape("plain SELECT 1") == "plain SELECT 1")
+  }
 }

@@ -386,7 +386,7 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.autoAdcPool(1600L, 16) == Similarity.KnnAdcPoolFloor)
     // gen1000x (1.6M labeled, √n cells): a constant 1/4 of the average
     // cell — the measured 0.83-agreement / 56 s operating point
-    // (tools/Drive adcAgree, SCALING.md round 13)
+    // (SCALING.md round 13)
     assert(Similarity.autoAdcPool(1600000L, 1265) == 317)
     // past the 4096-cell cap avgCell grows linearly; the cap bounds the
     // rerank and agreement becomes the deployment's explicit knob

@@ -14,6 +14,7 @@ import org.apache.spark.sql.functions._
   * row's result must then equal a fresh build over a second copy of the
   * rewritten corpus (a new path, so nothing stored can answer for it). */
 class StagedFreshnessSpec extends SparkSpec {
+  import StagedFreshnessSpec.copyCorpus
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -37,16 +38,6 @@ class StagedFreshnessSpec extends SparkSpec {
     "prestage" -> ((s, d) => parquetRows(s, Pipeline.prestage(s, d))),
     "prestageOrdered" -> ((s, d) => parquetRows(s, Pipeline.prestageOrdered(s, d))),
     "prestageDocs" -> ((s, d) => parquetRows(s, Pipeline.prestageDocs(s, d))))
-
-  private def copyCorpus(from: Path): Path = {
-    val to = Files.createTempDirectory("graft_fresh_")
-    Files.walk(from).forEach { p =>
-      val t = to.resolve(from.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
-      t.toFile.setWritable(true)
-    }
-    to
-  }
 
   /** Rewrite dir/name.parquet (one file) in place with `keep` applied. */
   private def rewrite(dir: Path, name: String, df: DataFrame): Unit = {
@@ -83,5 +74,19 @@ class StagedFreshnessSpec extends SparkSpec {
       val matchesFresh = got == result(spark, fresh)
       assert(matchesFresh, s"$name served a stale copy after an in-place rewrite")
     }
+  }
+}
+
+object StagedFreshnessSpec {
+  /** A writable copy of a fixture dir under a new temp path, so nothing
+    * stored for the original can answer for it. */
+  def copyCorpus(from: Path): Path = {
+    val to = Files.createTempDirectory("graft_fresh_")
+    Files.walk(from).forEach { p =>
+      val t = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+      t.toFile.setWritable(true)
+    }
+    to
   }
 }

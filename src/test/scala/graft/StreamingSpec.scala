@@ -306,4 +306,20 @@ class StreamingSpec extends SparkSpec {
     assert(records > 0, "continuous engine delivered no records")
     assert(meanMs > 0.0)
   }
+
+  test("a cold prestageOrdered build leaves no graft_oslice_ staging dir behind") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    import scala.util.Using
+    def slices(): Set[String] = Using.resource(Files.list(Tuning.fastTmpRoot)) {
+      _.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_oslice_")).toSet
+    }
+    val before = slices()
+    val corpus = StagedFreshnessSpec.copyCorpus(Paths.get(sf))
+    val staged = Paths.get(graft.streaming.Pipeline.prestageOrdered(spark, corpus.toString))
+    assert(Using.resource(Files.list(staged))(_.count()) == 7, "4 slices + 3 heartbeats")
+    val left = slices() -- before
+    assert(left.isEmpty, s"staging dirs outlived the build: ${left.mkString(", ")}")
+  }
 }
