@@ -139,15 +139,15 @@ object Bench {
     // min-of-one-warm noise the r14 verdict graded
     val maxIters = pinnedIters.getOrElse(5)
     val convergeFrac = 0.015
+    // optional subset (comma-separated names) — used by the scale-curve
+    // runs over generated fixtures that carry only some tables; an
+    // unknown name fails here, before the session starts
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+    val specs = SparkEntry.select(only).sortBy(_.name)
+    val names = specs.map(_.name)
     val spark = Tuning.localSession()
     val cpus = spark.sparkContext.defaultParallelism
-    // optional subset (comma-separated names) — used by the scale-curve
-    // runs over generated fixtures that carry only some tables
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     warmUp(spark, sfDir, stageFixtures = only.isEmpty)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     val best   = scala.collection.mutable.Map[String, Double]()
     val cold   = scala.collection.mutable.Map[String, Double]()
     val errors = scala.collection.mutable.Map[String, String]()
@@ -179,8 +179,7 @@ object Bench {
           errors(DrainLine) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}"
         }
       }
-      for (name <- names) {
-        val fn = SparkEntry.queries(name)
+      for (SparkEntry.QuerySpec(name, fn, _) <- specs) {
         val t0 = System.nanoTime()
         try {
           // execute the COMMITTED physical plan, not a count() on top:

@@ -657,11 +657,16 @@ object Native {
     "graft_topk_by" -> (exprs => TopKByAgg(exprs(0), exprs(1), exprs(2),
       exprs(3).eval().asInstanceOf[Int])))
 
-  def register(spark: SparkSession): Unit =
+  /** Idempotent per session: only names the session's registry lacks are
+    * registered, so the operators that call this on every build neither
+    * replace a function nor log Spark's replacement warning. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 
   /** Dot product column — float or double arrays, no cast needed
     * (register(spark) must have run in this session). */

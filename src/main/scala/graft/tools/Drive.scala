@@ -23,9 +23,9 @@ object Drive {
       case "extensions" => extensions()
       case "explainFmt" =>
         if (args.length < 3) sys.error(usage)
+        val specs = graft.SparkEntry.select(args.lift(3))
         val spark = graft.Tuning.localSession()
-        explainFmt(spark, sfDir, java.nio.file.Paths.get(args(2)),
-          args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
+        explainFmt(spark, sfDir, java.nio.file.Paths.get(args(2)), specs)
         spark.stop()
       case "endToEnd" =>
         val spark = graft.Tuning.localSession()
@@ -74,11 +74,11 @@ object Drive {
     * is dumped. Plans only — nothing executes, so a full dump is
     * driver-cheap. */
   private def explainFmt(spark: SparkSession, sfDir: String,
-      outDir: java.nio.file.Path, names: Option[Seq[String]]): Unit = {
+      outDir: java.nio.file.Path, specs: Seq[graft.SparkEntry.QuerySpec]): Unit = {
     java.nio.file.Files.createDirectories(outDir)
-    names.getOrElse(graft.SparkEntry.queries.keys.toSeq.sorted).foreach { name =>
+    for (graft.SparkEntry.QuerySpec(name, fn, _) <- specs) {
       val txt =
-        try graft.SparkEntry.queries(name)(spark, sfDir)
+        try fn(spark, sfDir)
           .queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
         catch { case e: Throwable =>

@@ -18,18 +18,15 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    val specs = graft.SparkEntry.select(Some(sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY",
+      "q_count,q_scan_filter,q_agg_groupby,q_sort,q_join_broadcast," +
+        "q_token_count,q_parse_json,q_window_rank,q_dedup_exact,q_text_quality")))
     val spark = graft.Tuning.localSession()
     graft.Bench.warmUp(spark, sfDir, stageFixtures = true)
 
-    val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq("q_count", "q_scan_filter", "q_agg_groupby", "q_sort",
-        "q_join_broadcast", "q_token_count", "q_parse_json", "q_window_rank",
-        "q_dedup_exact", "q_text_quality"))
     println(f"${"query"}%-32s ${"build"}%8s ${"plan"}%8s ${"exec"}%8s ${"total"}%8s")
     var sb, sp, se = 0.0
-    for (name <- names) {
-      val fn = graft.SparkEntry.queries(name)
+    for (graft.SparkEntry.QuerySpec(name, fn, _) <- specs) {
       var bb, bp, be = Double.MaxValue
       for (_ <- 1 to 3) {
         // per-iteration entries (GRU/LSTM passes, drain group) rebuild

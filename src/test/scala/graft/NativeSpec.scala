@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.Native
 import graft.ops.Similarity
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 /** Native codegen expressions: bit-parity with the declarative forms. */
@@ -19,6 +20,16 @@ class NativeSpec extends SparkSpec {
       .select(Similarity.cosine(col("embedding"), col("e2")).as("hof"),
         Similarity.cosineNative(col("embedding"), col("e2")).as("native"))
     assert(pairs.filter(col("hof") =!= col("native")).count() == 0)
+  }
+
+  test("register is idempotent: a second call keeps every registered function") {
+    Native.register(spark)
+    val reg = spark.sessionState.functionRegistry
+    def infos = Native.functions.map { case (n, _) =>
+      reg.lookupFunction(FunctionIdentifier(n)).get }
+    val before = infos
+    Native.register(spark)
+    before.zip(infos).foreach { case (a, b) => assert(a eq b, a.getName) }
   }
 
   test("rolling hash: deterministic, sensitive to content and order") {
