@@ -119,14 +119,14 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // HONEST COLD ATTRIBUTION (r17 verdict #2): unless the caller pins
     // an artifact dir explicitly, re-root the cross-JVM sidecar store at
-    // a RUN-UNIQUE dir so iteration 1 BUILDS every dfArtifact/corpusValue
-    // (pair indexes, codebooks, check verdicts) instead of reading
-    // sidecars a previous JVM in the same driver session published —
-    // cold_total must carry the build costs it claims to measure.
-    // Warm legs are unaffected (they hit the in-memory per-session memo);
-    // artifact_disk_hits/artifact_builds in the summary stay the
-    // self-describing counters they were. The dir registers with the
-    // tmp-cleanup hook, so it dies with this JVM.
+    // a RUN-UNIQUE dir so iteration 1 BUILDS every parquet sidecar
+    // (pair indexes, centroids, codebooks, check verdicts) instead of
+    // reading sidecars a previous JVM in the same driver session
+    // published — cold_total must carry the build costs it claims to
+    // measure. Warm legs are unaffected (they hit the in-memory store);
+    // artifact_disk_hits/artifact_builds in the summary count every
+    // sidecar read and build. The dir registers with the tmp-cleanup
+    // hook, so it dies with this JVM.
     if (sys.env.get("SPARK_GRAFT_ARTIFACT_DIR").isEmpty)
       sys.props("graft.artifact.dir") =
         graft.Tuning.diskTmpDir("graft_artifacts_run_").toString

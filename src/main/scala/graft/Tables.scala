@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,36 +11,15 @@ import org.apache.spark.sql.types._
   * (reference `batch_processor.py:72-79`). In the sandbox both are parquet;
   * the schemas are fixed (FIXTURES.md §B) so scans stay prunable —
   * column projection and predicate pushdown reach the parquet reader.
+  *
+  * Also the engine's one artifact store ([[artifact]]): every derived
+  * value it reuses — loader plans, staged copies, checkpointed
+  * artifacts, trained models, counts — lives in one map keyed by
+  * content fingerprint, and the values that outlive the JVM
+  * ([[dfArtifact]], [[corpusValue]]) persist in one format, parquet
+  * sidecars published with `_SUCCESS` under [[artifactRoot]].
   */
 object Tables {
-
-  /** LOGICAL-PLAN memo for the table loaders. `spark.read.parquet` is not
-    * free on the driver: every call re-lists the path and re-reads parquet
-    * footers for the schema (~40-50 ms measured via tools/Profile at
-    * sf0.1), and the 217-query bench calls the loaders 300+ times — ~15 s
-    * of pure duplicated driver work per iteration. A DataFrame is an
-    * immutable logical plan, so handing the SAME plan object to every
-    * query is semantically identical to re-reading; each query still
-    * plans/prunes/executes its own tree on top. Nothing row-level is
-    * cached — this is driver metadata reuse, which a long-lived production
-    * session gets for free from its catalog, and is scale-neutral (at
-    * 100 TB the listing is *more* expensive, so reusing it matters more).
-    *
-    * Keying: (sessionUUID, path, content fingerprint). The session key
-    * keeps plans from leaking across the many short-lived test sessions
-    * (a Dataset is bound to the session that built it); the fingerprint
-    * ([[tableFingerprint]] — per-file sizes+mtimes, not the directory
-    * mtime) makes ANY rewrite of a generated fixture invalidate the
-    * entry, including an in-place part-file rewrite that leaves the
-    * directory's own mtime untouched (the file-listing snapshot inside
-    * the plan would otherwise go stale).
-    * Bounded LRU so dead sessions' entries age out. */
-  private val planCache =
-    new java.util.LinkedHashMap[(String, String, Long), DataFrame](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Long), DataFrame]): Boolean =
-        size > 64
-    }
 
   /** Per-session tag via the session-scoped SQLConf (public API; each
     * SparkSession carries its own conf even under a shared context).
@@ -212,37 +191,38 @@ object Tables {
   private[graft] def clearMemoryArtifactsForTest(): Unit = store.clear()
 
   /** [[artifact]] for session-free driver values (trained centroids, PQ
-    * codebooks, max ids), ALSO persisted as a Java-serialized sidecar
-    * under [[artifactRoot]], content-addressed by (corpus, fingerprint,
-    * key, format version) — the production shape: an index model is
-    * trained once per corpus SNAPSHOT and shipped next to the data, not
-    * retrained by every JVM that opens the table. Measured at 2M vectors
-    * (SCALING.md round 14): a fresh-store cold JVM pays 70.0 s, a
-    * sidecar-reading one 31.3 s against a 25.4 s warm leg. A rewritten
-    * input moves the fingerprint, which moves the sidecar FILE NAME, so
-    * a stale sidecar is never opened. All IO is best-effort: a missing,
-    * unreadable or rejected sidecar degrades to a rebuild. */
-  private[graft] def corpusValue[T <: AnyRef](d: String,
-      tables: Seq[String], key: Any)(build: => T): T = {
+    * codebooks): `build` returns the value as a small table, which is
+    * published as a parquet sidecar exactly like a [[dfArtifact]], and
+    * the store keeps `decode` of its rows, sorted by the `keys` columns.
+    * The production shape: an index model is trained once per corpus
+    * SNAPSHOT and shipped next to the data, not retrained by every JVM
+    * that opens the table. Measured at 2M vectors (SCALING.md round
+    * 14): a fresh-store cold JVM pays 70.0 s, a sidecar-reading one
+    * 31.3 s against a 25.4 s warm leg. The decoded value is keyed
+    * without the session, so every session in one JVM sees the same
+    * value (PQ training is not bit-deterministic across partitionings);
+    * parquet DOUBLE round-trips exactly, so a cold JVM decodes the very
+    * value the building JVM stored. */
+  private[graft] def corpusValue[T <: AnyRef](s: SparkSession, d: String,
+      tables: Seq[String], key: Any, keys: Seq[String])(build: => DataFrame)(
+      decode: Array[Row] => T): T = {
     val fp = fingerprints(d, tables)
     slot("", d, fp, key, Corpus) {
-      diskRead[T](d, fp, key).getOrElse {
-        val v = build
-        diskWrite(d, fp, key, v)
-        v
-      }
+      val rows = sidecar(s, corpusValueDir(d, tables, key))(build).collect()
+      decode(rows.sortBy(r => keys.map(r.getAs[Number](_).longValue))(
+        Ordering.Implicits.seqOrdering))
     }.asInstanceOf[T]
   }
 
-  /** Sidecar file a [[corpusValue]] with this (corpus, tables, key)
-    * reads and publishes. */
-  private[graft] def corpusValuePath(d: String, tables: Seq[String],
-      key: Any): java.nio.file.Path =
-    diskPath(d, fingerprints(d, tables), key)
+  /** The on-disk directory a [[corpusValue]] publishes to. */
+  private[graft] def corpusValueDir(d: String, tables: Seq[String],
+      key: Any): String =
+    sidecarDir(d, fingerprints(d, tables), s"value:$key")
 
-  /** How many [[dfArtifact]] resolutions this JVM served from an on-disk
-    * sidecar vs built fresh. Bench and graftbench report both, so a
-    * "cold" total that rode pre-built sidecars says so (nonzero hits). */
+  /** How many sidecar resolutions ([[dfArtifact]], [[corpusValue]]) this
+    * JVM served from disk vs built fresh. Bench and graftbench report
+    * both, so a "cold" total that rode pre-built sidecars says so
+    * (nonzero hits). */
   private[graft] val artifactDiskHits = new java.util.concurrent.atomic.AtomicLong(0)
   private[graft] val artifactBuilds   = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -253,17 +233,14 @@ object Tables {
     * function of the same content fingerprint as [[dfArtifact]]; no IO. */
   private[graft] def dfArtifactDir(d: String, tables: Seq[String],
       key: Any): String =
-    diskPath(d, fingerprints(d, tables), s"df:$key").toString + ".parquet"
+    sidecarDir(d, fingerprints(d, tables), s"df:$key")
 
   /** [[artifact]] for DataFrame-shaped corpus artifacts (pair indexes,
     * truth sets, check verdicts, PQ code tables), ALSO persisted as a
     * PARQUET SIDECAR at [[dfArtifactDir]]: a cold JVM reads the
     * artifact instead of re-paying its scans and shuffles (an index
     * table ships with the corpus snapshot, it is not re-derived by
-    * every reader). Spark writes to a unique temp sibling, then ONE
-    * rename publishes it — concurrent builders race benignly (equal
-    * contents; the loser keeps its in-JVM copy). All IO is best-effort:
-    * any failure degrades to the in-JVM checkpointed build.
+    * every reader).
     *
     * Contract for callers: row ORDER is not preserved across the
     * parquet round trip (consumers must join/aggregate/sort
@@ -272,20 +249,20 @@ object Tables {
     * parquet-representable (no void/interval columns). */
   private[graft] def dfArtifact(s: SparkSession, d: String,
       tables: Seq[String], key: Any)(build: => DataFrame): DataFrame =
-    artifact(s, d, tables, key) {
-      val dir = dfArtifactDir(d, tables, key)
-      val done = java.nio.file.Paths.get(dir, "_SUCCESS")
-      val fromDisk =
-        try {
-          if (!java.nio.file.Files.isRegularFile(done)) None
-          else {
-            val df = s.read.parquet(dir)
-            df.schema // force footer/schema resolution now, fail early
-            artifactDiskHits.incrementAndGet()
-            Some(df)
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
-      fromDisk.getOrElse {
+    artifact(s, d, tables, key)(sidecar(s, dfArtifactDir(d, tables, key))(build))
+
+  /** The sidecar at `dir` when it is published and whole, else `build`,
+    * checkpointed and published there. Spark writes to a unique temp
+    * sibling, then ONE rename publishes it — concurrent builders race
+    * benignly (equal contents; the loser keeps its in-JVM copy). All IO
+    * is best-effort: any failure degrades to the in-JVM checkpointed
+    * build. */
+  private def sidecar(s: SparkSession, dir: String)(build: => DataFrame): DataFrame =
+    readSidecar(s, dir) match {
+      case Some(df) =>
+        artifactDiskHits.incrementAndGet()
+        df
+      case None =>
         artifactBuilds.incrementAndGet()
         val built = build.localCheckpoint(true)
         try {
@@ -301,8 +278,40 @@ object Tables {
           }
         } catch { case scala.util.control.NonFatal(_) => () }
         built
-      }
     }
+
+  /** The published sidecar at `dir`, or None when it is absent or
+    * damaged: no `_SUCCESS`, no part file, or a part whose footer does
+    * not read. Every footer is read here, on the cold path only, because
+    * Spark resolves the schema from ONE footer — a truncated later part
+    * would otherwise be served and fail the first query that scans it.
+    * A damaged sidecar is deleted, so the rebuild publishes in its
+    * place instead of every later cold JVM rebuilding again. */
+  private[graft] def readSidecar(s: SparkSession, dir: String): Option[DataFrame] = {
+    val p = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.isDirectory(p)) return None
+    try {
+      require(java.nio.file.Files.isRegularFile(p.resolve("_SUCCESS")), "no _SUCCESS")
+      val parts = scala.util.Using.resource(java.nio.file.Files.list(p)) { ls =>
+        import scala.jdk.CollectionConverters._
+        ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toSeq
+      }
+      require(parts.nonEmpty, "no part file")
+      val conf = s.sessionState.newHadoopConf()
+      parts.foreach { n =>
+        org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(p.resolve(n).toUri), conf)).close()
+      }
+      val df = s.read.parquet(dir)
+      df.schema // force schema resolution now, fail early
+      Some(df)
+    } catch { case scala.util.control.NonFatal(_) =>
+      deleteDirBestEffort(p)
+      None
+    }
+  }
 
   private def deleteDirBestEffort(p: java.nio.file.Path): Unit =
     try {
@@ -314,9 +323,9 @@ object Tables {
       else java.nio.file.Files.deleteIfExists(p)
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Bump when the serialized shape OR the producing algorithm of any
+  /** Bump when the stored shape OR the producing algorithm of any
     * disk-persisted corpus value changes — old sidecars must become
-    * unreachable, not deserialized into a shape the new code misreads. */
+    * unreachable, not read into a shape the new code misreads. */
   private val ArtifactFormatVersion = 1
 
   /** Sidecar root for cross-JVM corpus artifacts (the corpus dirs are
@@ -334,89 +343,32 @@ object Tables {
         .orElse(sys.env.get("SPARK_GRAFT_ARTIFACT_DIR"))
         .getOrElse(sys.props("java.io.tmpdir") + "/graft_artifacts"))
 
-  /** Content-addressed sidecar path: the fingerprint (and key, and
+  /** Content-addressed sidecar directory: the fingerprint (and key, and
     * format version) is IN the name, so freshness needs no
-    * invalidation protocol — a rewrite changes the name. */
-  private def diskPath(d: String, fp: String, key: Any): java.nio.file.Path = {
+    * invalidation protocol — a rewrite changes the name, and a stale
+    * sidecar is never opened. */
+  private def sidecarDir(d: String, fp: String, key: Any): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
     val bytes = md.digest(
       s"v$ArtifactFormatVersion|$d|$fp|$key".getBytes("UTF-8"))
     artifactRoot.resolve(
-      bytes.take(16).map(b => f"$b%02x").mkString + ".bin")
+      bytes.take(16).map(b => f"$b%02x").mkString + ".parquet").toString
   }
 
-  /** Classes a [[corpusValue]] sidecar may contain: the stored value
-    * types (`Seq[(Long, Vector[Double])]` centroids, boxed max ids,
-    * `Array[Array[Array[Double]]]` codebooks — arrays are checked by
-    * their element type, primitives pass) and the Scala collection
-    * serialization proxies they write through. The sidecar sits under a
-    * shared tmp dir at a predictable name, so anything else is rejected
-    * before it is instantiated. */
-  private val sidecarClasses = Set(
-    "java.lang.Number", "java.lang.Long", "java.lang.Double", "scala.Tuple2",
-    "scala.collection.immutable.ArraySeq", "scala.collection.immutable.ArraySeq$ofRef",
-    "scala.collection.generic.DefaultSerializationProxy",
-    "scala.collection.generic.SerializeEnd$",
-    "scala.collection.IterableFactory$ToFactory",
-    "scala.runtime.ModuleSerializationProxy")
-  private val sidecarVector = "scala\\.collection\\.immutable\\.Vector\\d?\\$?".r
-
-  private val sidecarFilter: java.io.ObjectInputFilter = { info =>
-    import java.io.ObjectInputFilter.Status
-    var c = info.serialClass
-    while (c != null && c.isArray) c = c.getComponentType
-    if (c == null || c.isPrimitive || sidecarClasses(c.getName) ||
-        sidecarVector.matches(c.getName)) Status.ALLOWED
-    else Status.REJECTED
-  }
-
-  private def diskRead[T](d: String, fp: String, key: Any): Option[T] =
-    try {
-      val p = diskPath(d, fp, key)
-      if (!java.nio.file.Files.isRegularFile(p)) None
-      else {
-        val in = new java.io.ObjectInputStream(new java.io.BufferedInputStream(
-          java.nio.file.Files.newInputStream(p)))
-        in.setObjectInputFilter(sidecarFilter)
-        try Some(in.readObject().asInstanceOf[T]) finally in.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Atomic publish: serialize to a unique temp sibling, then move into
-    * place — concurrent JVMs building the same artifact race benignly
-    * (deterministic inputs ⇒ equal values; last move wins). */
-  private def diskWrite(d: String, fp: String, key: Any, v: AnyRef): Unit =
-    try {
-      val p = diskPath(d, fp, key)
-      java.nio.file.Files.createDirectories(p.getParent)
-      val tmp = p.resolveSibling(
-        p.getFileName.toString + "." + java.util.UUID.randomUUID() + ".tmp")
-      val out = new java.io.ObjectOutputStream(new java.io.BufferedOutputStream(
-        java.nio.file.Files.newOutputStream(tmp)))
-      try out.writeObject(v) finally out.close()
-      try java.nio.file.Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      catch { case scala.util.control.NonFatal(_) =>
-        java.nio.file.Files.deleteIfExists(tmp); () }
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  private def cached(spark: SparkSession, path: String, variant: String = "")(
-      build: => DataFrame): DataFrame = {
-    val fp = tableFingerprint(path)
-    val tag = sessionTag(spark)
-    val key = (tag, path + variant, fp)
-    planCache.synchronized {
-      val hit = planCache.get(key)
-      if (hit != null) hit
-      else { val df = build; planCache.put(key, df); df }
-    }
-  }
-
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val p = s"$sfDir/$name.parquet"
-    cached(spark, p)(spark.read.parquet(p))
-  }
+  /** A table's DataFrame, one per (session, path, content fingerprint).
+    * `spark.read.parquet` is not free on the driver: every call re-lists
+    * the path and re-reads parquet footers for the schema (~40-50 ms
+    * measured via tools/Profile at sf0.1), and the 217-query bench calls
+    * the loaders 300+ times — ~15 s of duplicated driver work per
+    * iteration. A DataFrame is an immutable logical plan, so handing the
+    * SAME plan to every query is semantically identical to re-reading;
+    * each query still plans, prunes and executes its own tree on top.
+    * The fingerprint key makes any rewrite of a fixture — an in-place
+    * part-file rewrite included — invalidate the entry, whose file
+    * listing would otherwise go stale. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    artifact(spark, sfDir, Seq(name), "load")(
+      spark.read.parquet(s"$sfDir/$name.parquet"))
 
   /** Table row count, stored per content fingerprint — size-regime
     * gates (artifact materialization, exact-vs-blocked routing) and
@@ -452,7 +404,7 @@ object Tables {
     * Anything else (string, int32 days, …) fails loudly with the observed
     * dtype rather than producing silently-wrong timestamps. */
   def events(s: SparkSession, d: String): DataFrame =
-    cached(s, s"$d/events.parquet", variant = "#normalized") {
+    artifact(s, d, Seq("events"), "load#normalized") {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = s.read.parquet(s"$d/events.parquet")
       normalizeTs(raw)

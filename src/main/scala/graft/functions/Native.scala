@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{call_function, typedLit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.unsafe.types.UTF8String
@@ -655,7 +655,23 @@ object Native {
     "graft_bloom" -> (exprs => BloomAgg(exprs(0),
       exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int])),
     "graft_topk_by" -> (exprs => TopKByAgg(exprs(0), exprs(1), exprs(2),
-      exprs(3).eval().asInstanceOf[Int])))
+      exprs(3).eval().asInstanceOf[Int])),
+    // the centroid table arrives as literal (ids, embeddings, norms)
+    // arguments, evaluated here into the expression's constants, so one
+    // registered name serves every centroid table
+    "graft_nearest_centroid" -> (exprs => NearestCentroidId(exprs(0), exprs(1),
+      longs(exprs(2)), vectors(exprs(3)), doubles(exprs(4)))),
+    "graft_top_centroids" -> (exprs => NearestCentroidIds(exprs(0), exprs(1),
+      longs(exprs(2)), vectors(exprs(3)), doubles(exprs(4)),
+      exprs(5).eval().asInstanceOf[Int])))
+
+  private def constArray(e: Expression): ArrayData = e.eval().asInstanceOf[ArrayData]
+  private def longs(e: Expression): Array[Long] = constArray(e).toLongArray()
+  private def doubles(e: Expression): Array[Double] = constArray(e).toDoubleArray()
+  private def vectors(e: Expression): Array[Array[Double]] = {
+    val a = constArray(e)
+    Array.tabulate(a.numElements())(a.getArray(_).toDoubleArray())
+  }
 
   /** Idempotent per session: only names the session's registry lacks are
     * registered, so the operators that call this on every build neither
@@ -710,6 +726,22 @@ object Native {
   def bloomContains(bloom: Column, hash: Column, numHashes: Int = 4): Column =
     call_function("graft_bloom_contains", bloom, hash,
       org.apache.spark.sql.functions.lit(numHashes))
+
+  /** Id of the nearest (highest-cosine, lowest id on ties) of a constant
+    * centroid table (see [[NearestCentroidId]]); `nrm` is the row's
+    * norm, `norms` the centroids'. */
+  def nearestCentroid(emb: Column, nrm: Column, ids: Array[Long],
+      embs: Array[Array[Double]], norms: Array[Double]): Column =
+    call_function("graft_nearest_centroid", emb, nrm,
+      typedLit(ids), typedLit(embs), typedLit(norms))
+
+  /** The `nProbe` nearest centroid ids, best first (see
+    * [[NearestCentroidIds]]). */
+  def topCentroids(emb: Column, nrm: Column, ids: Array[Long],
+      embs: Array[Array[Double]], norms: Array[Double], nProbe: Int): Column =
+    call_function("graft_top_centroids", emb, nrm,
+      typedLit(ids), typedLit(embs), typedLit(norms),
+      org.apache.spark.sql.functions.lit(nProbe))
 
   /** Signed-long key with the same total order as the double input. */
   def sortableDouble(c: Column): Column =

@@ -357,7 +357,14 @@ object Similarity {
     * the production shape: a coarse quantizer is trained once per corpus
     * snapshot and REUSED by every index/search/dedup query against it,
     * not re-trained per query. The centroid table is k×dim doubles
-    * (tiny), so it round-trips through the driver safely. */
+    * (tiny), so it round-trips through the driver safely. `train`
+    * returns the (c_id, c_emb) table; the store keeps it as a parquet
+    * sidecar and serves it decoded, ordered by c_id. */
+  private[graft] def storedCentroids(s: SparkSession, d: String, key: String)(
+      train: => DataFrame): Seq[(Long, Vector[Double])] =
+    graft.Tables.corpusValue(s, d, Seq("embeddings"), key, Seq("c_id"))(
+      train.select(col("c_id"), col("c_emb")))(
+      _.map(r => (r.getLong(0), r.getSeq[Double](1).toVector)).toSeq)
 
   /** Coarse-quantizer TRAINING CAP (mirrors [[PqTrainCap]]): Lloyd's
     * rounds broadcast k centroids against every training row, so
@@ -374,14 +381,13 @@ object Similarity {
   def trainedCentroids(s: SparkSession, d: String, k: Int): DataFrame = {
     // freshness-keyed per (corpus fingerprint, k): regenerating the
     // fixture in place must retrain, not serve the old snapshot's model
-    val rows = graft.Tables.corpusValue(d, Seq("embeddings"), s"centroids:$k") {
+    val rows = storedCentroids(s, d, s"centroids:$k") {
       val e = corpus(s, d)
       val n = e.count()
       val sample =
         if (n <= KmTrainCap) e
         else e.filter(pmod(xxhash64(col("vec_id")), lit(n)) < lit(KmTrainCap))
-      kmeansCentroids(sample, k).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toVector)).toSeq
+      kmeansCentroids(sample, k)
     }
     import s.implicits._
     rows.toDF("c_id", "c_emb")
@@ -406,23 +412,10 @@ object Similarity {
     val rows = centroids.select(col("c_id"), col("c_emb"), col("c_nrm"))
       .collect()
       .sortBy(_.getLong(0))
-    val ids = rows.map(_.getLong(0))
-    val embs = rows.map(_.getSeq[Double](1).toArray)
-    val norms = rows.map(_.getDouble(2))
-    // the expression captures the centroid constants, so it can't route
-    // through the static Native.functions table — register a
-    // content-addressed builder on the session instead (same registry
-    // mechanism; the hash key makes re-registration idempotent and keeps
-    // two coexisting centroid tables from colliding)
-    val fname = "graft_nearest_centroid_" +
-      ((scala.util.hashing.MurmurHash3.orderedHash(ids.toSeq) ^
-        scala.util.hashing.MurmurHash3.orderedHash(norms.toSeq)) & 0x7fffffff)
-    e.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname,
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.NearestCentroidId(exprs(0), exprs(1), ids, embs, norms),
-      "built-in")
-    e.withColumn("c_id", call_function(fname, col("embedding"), col("nrm")))
+    graft.functions.Native.register(e.sparkSession)
+    e.withColumn("c_id", graft.functions.Native.nearestCentroid(
+      col("embedding"), col("nrm"), rows.map(_.getLong(0)),
+      rows.map(_.getSeq[Double](1).toArray), rows.map(_.getDouble(2))))
   }
 
   /** Top-nProbe nearest cells per row as ONE codegen'd projection — the
@@ -436,19 +429,10 @@ object Similarity {
     val rows = centroids.select(col("c_id"), col("c_emb"), col("c_nrm"))
       .collect()
       .sortBy(_.getLong(0))
-    val ids = rows.map(_.getLong(0))
-    val embs = rows.map(_.getSeq[Double](1).toArray)
-    val norms = rows.map(_.getDouble(2))
-    val fname = "graft_top_centroids_" +
-      ((scala.util.hashing.MurmurHash3.orderedHash(ids.toSeq) ^
-        scala.util.hashing.MurmurHash3.orderedHash(norms.toSeq) ^
-        nProbe) & 0x7fffffff)
-    e.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname,
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.NearestCentroidIds(exprs(0), exprs(1), ids, embs, norms, nProbe),
-      "built-in")
-    e.withColumn("c_ids", call_function(fname, col("embedding"), col("nrm")))
+    graft.functions.Native.register(e.sparkSession)
+    e.withColumn("c_ids", graft.functions.Native.topCentroids(
+      col("embedding"), col("nrm"), rows.map(_.getLong(0)),
+      rows.map(_.getSeq[Double](1).toArray), rows.map(_.getDouble(2)), nProbe))
   }
 
   def ivfTopK(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
@@ -521,9 +505,26 @@ object Similarity {
   val PqTrainCap = 65536L
 
   private[graft] def pqCodebooks(s: SparkSession, d: String): Array[Array[Array[Double]]] =
-    graft.Tables.corpusValue(d, Seq("embeddings"), "pqCodebooks") {
-      trainPqCodebooks(s, corpus(s, d), d)
+    storedCodebooks(s, d, "pqCodebooks")(trainPqCodebooks(s, corpus(s, d), d))
+
+  /** A codebook as a stored corpus value: published as its (m, k, c_sub)
+    * table — the same table each Lloyd round broadcasts — and decoded
+    * back to `cb(m)(k)` in (m, k) order. */
+  private[graft] def storedCodebooks(s: SparkSession, d: String, key: String)(
+      train: => Array[Array[Array[Double]]]): Array[Array[Array[Double]]] =
+    graft.Tables.corpusValue(s, d, Seq("embeddings"), key, Seq("m", "k"))(
+      codebookTable(s, train)) { rows =>
+      val byM = rows.groupBy(_.getInt(0))
+      Array.tabulate(byM.size)(m => byM(m).map(_.getSeq[Double](2).toArray))
     }
+
+  private def codebookTable(s: SparkSession,
+      cb: Array[Array[Array[Double]]]): DataFrame = {
+    import s.implicits._
+    cb.zipWithIndex.flatMap { case (codes, m) =>
+      codes.zipWithIndex.map { case (c, k) => (m, k, c.toSeq) }
+    }.toSeq.toDF("m", "k", "c_sub")
+  }
 
   /** The Lloyd's training body behind [[pqCodebooks]], parameterized by
     * the training slice — the full corpus for the one-shot build, the
@@ -559,10 +560,7 @@ object Similarity {
         .select(col("vec_id"), col("e.m").as("m"), col("e.sub").as("sub"))
         .localCheckpoint(true)   // two Lloyd rounds re-read it; never re-derive
       for (_ <- 1 to 2) {
-        import s.implicits._
-        val cbDf = cb.zipWithIndex.flatMap { case (codes, m) =>
-          codes.zipWithIndex.map { case (c, k) => (m, k, c.toSeq) }
-        }.toSeq.toDF("m", "k", "c_sub")
+        val cbDf = codebookTable(s, cb)
         val dist = graft.functions.Native.dot(col("sub"), col("sub")) -
           lit(2.0) * graft.functions.Native.dot(col("sub"), col("c_sub")) +
           graft.functions.Native.dot(col("c_sub"), col("c_sub"))
@@ -642,7 +640,7 @@ object Similarity {
     * vec_ids are "added since the base snapshot" — same fraction and
     * same snapshot framing as [[graft.ops.TextOps.indexDeltaCut]]. */
   private[graft] def embedDeltaCut(s: SparkSession, d: String): Long = {
-    val mx = graft.Tables.corpusValue[java.lang.Long](d, Seq("embeddings"), "maxVecId") {
+    val mx = graft.Tables.artifact(s, d, Seq("embeddings"), "maxVecId") {
       java.lang.Long.valueOf(
         corpus(s, d).agg(max(col("vec_id"))).head().getLong(0))
     }.longValue
@@ -657,7 +655,7 @@ object Similarity {
     * that distribution (the companion pins the floor). */
   private[graft] def pqCodebooksBase(s: SparkSession, d: String): Array[Array[Array[Double]]] = {
     val cut = embedDeltaCut(s, d)
-    graft.Tables.corpusValue(d, Seq("embeddings"), s"pqCodebooksBase:lt=$cut") {
+    storedCodebooks(s, d, s"pqCodebooksBase:lt=$cut") {
       trainPqCodebooks(s, corpus(s, d).filter(col("vec_id") < cut), s"$d base<$cut")
     }
   }

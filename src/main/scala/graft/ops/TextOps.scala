@@ -607,7 +607,7 @@ object TextOps {
     * rewrite segments, never split postings across them.) */
   private[graft] def indexDeltaCut(s: SparkSession, d: String,
       blockSize: Int = 100): Long = {
-    val mx = Tables.corpusValue[java.lang.Long](d, Seq("documents"), "maxDocId") {
+    val mx = Tables.artifact(s, d, Seq("documents"), "maxDocId") {
       java.lang.Long.valueOf(
         Tables.documents(s, d).agg(max(col("doc_id"))).head().getLong(0))
     }.longValue
@@ -698,11 +698,7 @@ object TextOps {
       kind: String)(rebuild: => DataFrame): DataFrame =
     indexManifest(s, d, blockSize).collect()
       .find(_.getAs[String]("component") == kind) match {
-      case Some(r) =>
-        val p = r.getAs[String]("path")
-        if (java.nio.file.Files.isRegularFile(
-            java.nio.file.Paths.get(p, "_SUCCESS"))) s.read.parquet(p)
-        else rebuild
+      case Some(r) => Tables.readSidecar(s, r.getAs[String]("path")).getOrElse(rebuild)
       case None => rebuild
     }
 

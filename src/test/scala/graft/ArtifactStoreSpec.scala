@@ -53,21 +53,42 @@ class ArtifactStoreSpec extends SparkSpec {
     assert(iteration() === "build 2")
   }
 
-  test("no ConcurrentHashMap memo outside Tables.scala in src/main/scala") {
+  /** `path:line: text` of every src/main/scala line matching `pattern`
+    * in a file whose name `file` accepts. */
+  private def mainSourceLines(pattern: scala.util.matching.Regex,
+      file: String => Boolean = _ => true): Seq[String] = {
     val root = java.nio.file.Paths.get("src", "main", "scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the repo root (cwd has no $root)")
-    val memo = """new\s+(java\.util\.concurrent\.)?ConcurrentHashMap\b""".r
-    val offenders = scala.util.Using.resource(java.nio.file.Files.walk(root)) { files =>
+    scala.util.Using.resource(java.nio.file.Files.walk(root)) { files =>
       import scala.jdk.CollectionConverters._
       files.iterator().asScala.toSeq
-        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Tables.scala")
+        .filter(p => p.toString.endsWith(".scala") && file(p.getFileName.toString))
         .flatMap { p =>
           java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-            case (line, i) if memo.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+            case (line, i) if pattern.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
           }
         }
     }
+  }
+
+  test("no ConcurrentHashMap memo outside Tables.scala in src/main/scala") {
+    val offenders = mainSourceLines(
+      """new\s+(java\.util\.concurrent\.)?ConcurrentHashMap\b""".r, _ != "Tables.scala")
     assert(offenders.isEmpty,
       "store memos in Tables.artifact, not in a module-level map:\n" + offenders.mkString("\n"))
+  }
+
+  test("no Java serialization streams in src/main/scala") {
+    val offenders = mainSourceLines("""\bObject(Input|Output)Stream\b""".r)
+    assert(offenders.isEmpty,
+      "persist artifacts as parquet sidecars (Tables.dfArtifact / corpusValue):\n" +
+        offenders.mkString("\n"))
+  }
+
+  test("functions are registered only by Native.register") {
+    val sites = mainSourceLines("""\bcreateOrReplaceTempFunction\b""".r)
+    assert(sites.size === 1 && sites.head.contains("functions/Native.scala"),
+      "add the function to Native.functions (constants as literal arguments) " +
+        "instead of registering it per call:\n" + sites.mkString("\n"))
   }
 }

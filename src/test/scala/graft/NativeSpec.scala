@@ -283,4 +283,45 @@ class NativeSpec extends SparkSpec {
       }
     }
   }
+
+  test("centroid functions: two centroid tables in one session, one registered name each") {
+    import spark.implicits._
+    val vecs = Seq.tabulate(40)(i => i.toLong -> Array.tabulate(4)(j => math.sin(i * 4.0 + j)))
+    val e = vecs.toDF("vec_id", "embedding")
+      .withColumn("nrm", Similarity.l2norm(col("embedding")))
+    // table b repeats one embedding under c_id 7 and 2: every tie must
+    // go to the lower id
+    val a = Seq(0L -> Array(1.0, 0, 0, 0), 1L -> Array(0, 1.0, 0, 0),
+      2L -> Array(0, 0, 1.0, -1.0))
+    val b = Seq(7L -> Array(0.5, 0.5, 0, 0), 2L -> Array(0.5, 0.5, 0, 0),
+      3L -> Array(-1.0, 0, 0, 1.0), 9L -> Array(0, 0, -1.0, 0.25))
+    for (cs <- Seq(a, b)) {
+      val cents = cs.toDF("c_id", "c_emb")
+        .withColumn("c_nrm", Similarity.l2norm(col("c_emb")))
+      val cn = cents.collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      // plain-Scala reference: same left-to-right dot and norms, centroids
+      // in ascending c_id, (cos desc, c_id asc) order
+      def ranked(v: Array[Double], nv: Double): Seq[Long] =
+        cs.sortBy(_._1).map { case (id, c) =>
+          var acc = 0.0
+          for (i <- v.indices) acc += v(i) * c(i)
+          id -> acc / (nv * cn(id))
+        }.sortWith { case ((i1, c1), (i2, c2)) =>
+          val o = java.lang.Double.compare(c1, c2)
+          o > 0 || (o == 0 && i1 < i2)
+        }.map(_._1)
+      val got = Similarity.topCentroidIds(Similarity.assignToCentroids(e, cents), cents, 2)
+        .select(col("embedding"), col("nrm"), col("c_id"), col("c_ids")).collect()
+      assert(got.length === vecs.length)
+      got.foreach { r =>
+        val want = ranked(r.getSeq[Double](0).toArray, r.getDouble(1))
+        assert(r.getLong(2) === want.head)
+        assert(r.getSeq[Long](3) === want.take(2))
+      }
+      if (cs eq b) assert(got.exists(_.getLong(2) == 2L), "no row reached the tied pair")
+    }
+    val perTable = spark.sessionState.functionRegistry.listFunction().map(_.funcName)
+      .filter(n => n.startsWith("graft_nearest_centroid_") || n.startsWith("graft_top_centroids_"))
+    assert(perTable.isEmpty, s"per-table centroid functions registered: $perTable")
+  }
 }

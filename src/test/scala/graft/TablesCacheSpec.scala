@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.Similarity
 import org.apache.spark.sql.functions._
 
 /** Freshness contract of the table/plan/artifact caches: every cache key
@@ -35,7 +36,7 @@ class TablesCacheSpec extends SparkSpec {
     rewriteInPlace(part, writeTable(stage, "tbl", 5000L))
 
     assert(Tables.load(spark, dir.toString, "tbl").count() === 5000L,
-      "planCache served a stale file-listing snapshot after an in-place rewrite")
+      "load served a stale file-listing snapshot after an in-place rewrite")
     assert(Tables.rowCount(spark, dir.toString, "tbl") === 5000L,
       "rowCount served a stale count after an in-place rewrite")
   }
@@ -82,10 +83,10 @@ class TablesCacheSpec extends SparkSpec {
     val part = writeTable(dir, "embeddings", 9L)
 
     var builds = 0
-    def get(): Long = Tables.corpusValue(dir.toString, Seq("embeddings"), "spec-v") {
+    def get(): Long = Tables.corpusValue(spark, dir.toString, Seq("embeddings"), "spec-v", Nil) {
       builds += 1
-      java.lang.Long.valueOf(Tables.load(spark, dir.toString, "embeddings").count())
-    }.longValue()
+      Tables.load(spark, dir.toString, "embeddings").agg(count(lit(1)).as("n"))
+    }(rows => java.lang.Long.valueOf(rows.head.getLong(0))).longValue()
 
     assert(get() === 9L)
     assert(builds === 1)
@@ -142,67 +143,101 @@ class TablesCacheSpec extends SparkSpec {
     assert(builds === 2)
   }
 
-  test("corpusValue sidecars of the stored value types pass the deserialization filter") {
+  test("corpusValue round-trips the stored centroid and codebook shapes through a cold JVM") {
+    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_fp6_")
     writeTable(dir, "embeddings", 3L)
-    // the shapes the engine stores: k-means centroids (an ArraySeq of
-    // (id, Vector) — 40 wide, past Vector's one-block encoding) and PQ
-    // codebooks
-    val centroids = Array.tabulate(3)(i => (i.toLong, Vector.fill(40)(i + 0.5))).toSeq
-    val codebooks = Array.tabulate(2, 3, 4)((m, k, j) => m * 100.0 + k * 10 + j)
+    // the shapes the engine stores: k-means centroids (40 wide) and PQ
+    // codebooks, with doubles that have no short decimal form
+    val centroids = Seq.tabulate(3)(i => (i.toLong, Vector.tabulate(40)(j => (i * 40 + j) / 7.0)))
+    val codebooks = Array.tabulate(2, 3, 4)((m, k, j) => m * 100.0 + k * 10 + j / 3.0)
+    def deep(cb: Array[Array[Array[Double]]]) = cb.map(_.map(_.toSeq).toSeq).toSeq
     var builds = 0
-    def get[T <: AnyRef](key: String, v: T): T =
-      Tables.corpusValue(dir.toString, Seq("embeddings"), key) { builds += 1; v }
-    get("spec-centroids", centroids)
-    get("spec-codebooks", codebooks)
-    Tables.clearMemoryArtifactsForTest()
-    assert(get("spec-centroids", centroids) === centroids)
-    assert(get("spec-codebooks", codebooks).map(_.map(_.toSeq).toSeq).toSeq ===
-      codebooks.map(_.map(_.toSeq).toSeq).toSeq)
-    assert(builds === 2, "an allowed sidecar was rejected and rebuilt on a cold read")
-  }
-
-  test("a corpusValue sidecar of a disallowed class is never instantiated and rebuilds") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp7_")
-    writeTable(dir, "embeddings", 4L)
-    val planted = Tables.corpusValuePath(dir.toString, Seq("embeddings"), "spec-planted")
-    java.nio.file.Files.createDirectories(planted.getParent)
-    val out = new java.io.ObjectOutputStream(java.nio.file.Files.newOutputStream(planted))
-    try out.writeObject(new PlantedSidecar) finally out.close()
-    PlantedSidecar.deserialized.set(false)
-
-    var builds = 0
-    val v = Tables.corpusValue(dir.toString, Seq("embeddings"), "spec-planted") {
+    def getCentroids() = Similarity.storedCentroids(spark, dir.toString, "spec-centroids") {
       builds += 1
-      java.lang.Long.valueOf(42L)
+      centroids.reverse.toDF("c_id", "c_emb") // decoded in c_id order regardless
     }
-    assert(v === java.lang.Long.valueOf(42L))
-    assert(builds === 1, "the rejected sidecar must degrade to a rebuild")
-    assert(!PlantedSidecar.deserialized.get, "the filter let a disallowed class be instantiated")
-
-    // control: without the filter the same bytes DO run the class's hook
-    val bos = new java.io.ByteArrayOutputStream()
-    val o2 = new java.io.ObjectOutputStream(bos)
-    o2.writeObject(new PlantedSidecar); o2.close()
-    new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bos.toByteArray)).readObject()
-    assert(PlantedSidecar.deserialized.get)
+    def getCodebooks() = deep(Similarity.storedCodebooks(spark, dir.toString, "spec-codebooks") {
+      builds += 1
+      codebooks
+    })
+    assert(getCentroids() === centroids)
+    assert(getCodebooks() === deep(codebooks))
+    Tables.clearMemoryArtifactsForTest()
+    assert(getCentroids() === centroids)
+    assert(getCodebooks() === deep(codebooks))
+    assert(builds === 2, "a stored value was rebuilt on a cold read instead of read from its sidecar")
   }
-}
 
-/** A serializable class outside the sidecar allow-list; its readObject
-  * hook records that deserialization reached it. */
-class PlantedSidecar extends Serializable {
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    PlantedSidecar.deserialized.set(true)
-    in.defaultReadObject()
+  /** The ways a published sidecar can be damaged on disk. */
+  private val faults: Seq[(String, java.nio.file.Path => Unit)] = Seq(
+    "no _SUCCESS" -> (dir => java.nio.file.Files.delete(dir.resolve("_SUCCESS"))),
+    "a truncated part file that is not the first" -> { dir =>
+      val parts = TablesCacheSpec.files(dir).filter(_.getFileName.toString.startsWith("part-"))
+      assert(parts.size >= 2, s"the sidecar has one part file: $parts")
+      val last = parts.max
+      java.nio.file.Files.write(last,
+        java.util.Arrays.copyOf(java.nio.file.Files.readAllBytes(last),
+          (java.nio.file.Files.size(last) / 2).toInt))
+    },
+    "only a _SUCCESS file" -> { dir =>
+      TablesCacheSpec.files(dir).filter(_.getFileName.toString != "_SUCCESS")
+        .foreach(java.nio.file.Files.delete)
+    })
+
+  /** Build once, damage the published sidecar, then read on a cold JVM:
+    * the store must rebuild and return the built contents, and publish
+    * a whole sidecar the next cold read is served from. */
+  private def damagedSidecarRebuilds[T](sidecar: String,
+      damage: java.nio.file.Path => Unit)(get: (() => Unit) => T, want: T): Unit = {
+    var builds = 0
+    val count = () => builds += 1
+    assert(get(count) === want)
+    assert(builds === 1)
+    damage(java.nio.file.Paths.get(sidecar))
+    Tables.clearMemoryArtifactsForTest()
+    assert(get(count) === want, "a damaged sidecar was served")
+    assert(builds === 2, "a damaged sidecar was not rebuilt")
+    Tables.clearMemoryArtifactsForTest()
+    assert(get(count) === want)
+    assert(builds === 2, "the rebuild did not replace the damaged sidecar")
   }
-}
 
-object PlantedSidecar {
-  val deserialized = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private def fourParts = spark.range(0, 40, 1, 4).select(col("id"), (col("id") * 3).as("v"))
+  private val fourPartsRows = Seq.tabulate(40)(i => (i.toLong, i * 3L))
+
+  for (((fault, damage), i) <- faults.zipWithIndex) {
+    test(s"dfArtifact rebuilds over a sidecar with $fault") {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_fault_df${i}_")
+      writeTable(dir, "documents", 5L)
+      damagedSidecarRebuilds(Tables.dfArtifactDir(dir.toString, Seq("documents"), "spec-fault"),
+        damage)(built => Tables.dfArtifact(spark, dir.toString, Seq("documents"), "spec-fault") {
+          built()
+          fourParts
+        }.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq, fourPartsRows)
+    }
+
+    test(s"corpusValue rebuilds over a sidecar with $fault") {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_fault_cv${i}_")
+      writeTable(dir, "embeddings", 5L)
+      damagedSidecarRebuilds(Tables.corpusValueDir(dir.toString, Seq("embeddings"), "spec-fault"),
+        damage)(built => Tables.corpusValue(spark, dir.toString, Seq("embeddings"), "spec-fault",
+          Seq("id")) {
+          built()
+          fourParts
+        }(_.map(r => (r.getLong(0), r.getLong(1))).toSeq), fourPartsRows)
+    }
+  }
 }
 
 object TablesCacheSpec {
+
+  /** The regular files directly under `dir`. */
+  def files(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    scala.util.Using.resource(java.nio.file.Files.list(dir)) { ls =>
+      import scala.jdk.CollectionConverters._
+      ls.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).toList
+    }
 
   /** Write `df` as ONE parquet part file under `out`, returning it. */
   def writeSinglePart(df: org.apache.spark.sql.DataFrame,
