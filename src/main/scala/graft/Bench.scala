@@ -58,6 +58,13 @@ object Bench {
     * dead stores by a sufficiently aggressive JIT. */
   @volatile private var memProbeSink: Int = 0
 
+  /** Where the file artifact goes: SPARK_GRAFT_BENCH_OUT when set;
+    * otherwise the committed `bench_summary.json`, but only for a
+    * full-suite run — a SPARK_GRAFT_BENCH_ONLY subset must not overwrite
+    * the full-suite summary with its few queries. None: write no file. */
+  private[graft] def artifactPath(out: Option[String], only: Option[String]): Option[String] =
+    out.orElse(if (only.isEmpty) Some("bench_summary.json") else None)
+
   /** Pull the numeric mean_ms out of the stream-panel JSON fragment for
     * the short summary line. Pure and unit-tested (BenchFormatSpec):
     * the summary line is the artifact the driver machine-parses when
@@ -383,12 +390,15 @@ object Bench {
     // SELF-SUFFICIENT FILE ARTIFACT: the driver's log-tail capture has
     // truncated the full stdout line mid-map three rounds running
     // ("parsed": null in BENCH_r06/07/08 even on clean runs), leaving the
-    // per-query numbers recoverable only from SCALING.md prose. Every run
+    // per-query numbers recoverable only from SCALING.md prose. A run
     // therefore ALSO writes the complete artifact — summary totals, both
     // full per-query maps, the stream panel and curve — to a committed
-    // file, pretty-enough to diff and small enough to keep at HEAD.
-    try {
-      val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_summary.json")
+    // file, pretty-enough to diff and small enough to keep at HEAD
+    // (subset runs only where SPARK_GRAFT_BENCH_OUT points: artifactPath).
+    val outPath = artifactPath(sys.env.get("SPARK_GRAFT_BENCH_OUT"), only)
+    if (outPath.isEmpty) System.err.println(
+      "[bench] subset run: no bench_summary.json written (set SPARK_GRAFT_BENCH_OUT to keep one)")
+    else try {
       val body =
         s"""{
            |"summary":{"warm_total":$total,"cold_total":$coldTotal,"n_ok":${best.size},"n_errors":${errors.size},"probe_sum":$probeSum,"artifact_disk_hits":$artHits,"artifact_builds":$artBuilds,$meanMs,"unit":"sec","sf":"$sfDir","cpus":$cpus,"iters":$itersRun},
@@ -403,7 +413,7 @@ object Bench {
            |"errors":$errs
            |}
            |""".stripMargin
-      java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
+      java.nio.file.Files.write(java.nio.file.Paths.get(outPath.get),
         body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] bench_summary.json write skipped: ${e.getMessage}")

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.DataStreamReader
 
 /** Source/sink surface of the reference (SURVEY §2.1), transport-pluggable.
   *
@@ -17,8 +16,8 @@ object Sinks {
 
   /** The Kafka source option surface as PURE DATA: the exact keys Spark's
     * kafka-0-10 connector documents. Both the production reader
-    * ([[kafkaReader]], [[graft.sources.KafkaTickSource]]) and
-    * TransportSpec consume THIS map, so a wiring typo (the class of bug
+    * ([[graft.sources.KafkaTickSource]]) and TransportSpec consume THIS
+    * map, so a wiring typo (the class of bug
     * a compile can't catch on stringly-typed options) fails the spec,
     * not the first production deployment. */
   def kafkaSourceOptions(bootstrap: String, topic: String,
@@ -65,8 +64,9 @@ object Sinks {
     * This is the standard keyed-sink pattern when the store can't update
     * in place (parquet/object storage): an update-mode stream writes
     * only the rows a batch touched, and any reader reconstructs current
-    * state. Used by the event-time window pipeline; replay-safe because
-    * re-appending a batch rewrites the same (key, batch_id) verdicts. */
+    * state. Used by the update-mode drains and the stateful emission
+    * log; replay-safe because re-appending a batch rewrites the same
+    * (key, batch_id) verdicts. */
   def upsertAppend(batch: DataFrame, dir: String, batchId: Long): Unit =
     parquetAppend(batch.withColumn("batch_id",
       org.apache.spark.sql.functions.lit(batchId)), dir)
@@ -91,16 +91,6 @@ object Sinks {
       .options(jdbcOptions(url, table, user, password))
       .mode("append")
       .save()
-
-  /** S1 — the reference's Kafka source (topic `stock_ticks`, bootstrap
-    * `localhost:9092`, `stream_consumer.py:89-93`). Requires
-    * spark-sql-kafka-0-10 on the classpath; the returned reader yields
-    * the standard Kafka envelope (key/value binary + metadata), to be
-    * parsed with `from_json(cast(value as string), schema)` exactly as
-    * the streaming pipeline does with its file-source stand-in. */
-  def kafkaReader(s: SparkSession, bootstrap: String, topic: String): DataStreamReader =
-    s.readStream.format("kafka")
-      .options(kafkaSourceOptions(bootstrap, topic))
 
   /** S3 — the reference's manual JDBC pushdown subquery
     * (`batch_processor.py:72-79`): sort+limit executed inside the

@@ -186,9 +186,14 @@ object Pipeline {
   // are almost pure waiting — run one after another, 13 drains cost
   // ~13 × the floor; run together they cost ~max(drain) because the
   // micro-batch machinery of one query overlaps the idle floor of the
-  // others. This is also the production shape: one Spark app runs its
-  // streaming queries side by side off the shared source, not as a
-  // serial chain of separate drains.
+  // others. The drains do contend on the single driver (one
+  // DAGScheduler event loop + listener bus: ~3 s of the ~5 s group wall
+  // at sf0.1, PROFILE_r11), yet splitting the group into sequential
+  // waves measured slower — 1 wave 5.0 s, 2 waves 6.8 s, 3 waves 8.6 s
+  // (sf0.1, best of 3, PROFILE_r12): the overlapped idle floors are
+  // worth more than the contention costs. This is also the production
+  // shape: one Spark app runs its streaming queries side by side off
+  // the shared source, not as a serial chain of separate drains.
   //
   // The group result is one Tables.Iteration entry per corpus: the
   // drained sinks are consumed by multiple queries (e.g. the stateful
@@ -244,49 +249,24 @@ object Pipeline {
     prestageOrdered(s, d)
     val lst = new GraftQueryListener()
     s.streams.addListener(lst)
-    try {
-      withStreamShuffle(s) {
-        val started = scala.collection.mutable.ArrayBuffer[(String, String, StreamingQuery)]()
-        try {
-          // Wave knob (SPARK_GRAFT_DRAIN_WAVES, default 1 = one fully
-          // concurrent group): the 14 concurrent drains contend on the
-          // shared single-driver machinery (one DAGScheduler event loop
-          // + listener bus — PROFILE_r11 measured ~3 s of the ~5 s group
-          // wall as cross-stream contention, invariant under per-drain
-          // child sessions). Waves trade concurrency for contention;
-          // semantics are untouched either way (each drain keeps its own
-          // checkpoint/sink/state — only WHEN micro-batches run moves).
-          // malformed values degrade to the default single wave rather
-          // than failing the whole 14-stream group on a typo'd env var
-          val waves = math.max(1,
-            scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_DRAIN_WAVES", "1").trim.toInt)
-              .getOrElse(1))
-          val perWave = (drainLaunchers.size + waves - 1) / waves
-          drainLaunchers.grouped(perWave).foreach { wave =>
-            val launched = wave.map { case (name, launch) =>
-              val (sink, q) = launch(s, d)
-              started += ((name, sink, q))
-              q
-            }
-            launched.foreach(_.awaitTermination())
-          }
-        } catch {
-          case e: Throwable =>
-            // stop the survivors so a failed group never leaks running
-            // queries into the next attempt
-            started.foreach(t => try t._3.stop() catch { case _: Throwable => () })
-            throw e
+    try withStreamShuffle(s) {
+      val started = scala.collection.mutable.ArrayBuffer[(String, String, StreamingQuery)]()
+      try {
+        drainLaunchers.foreach { case (name, launch) =>
+          val (sink, q) = launch(s, d)
+          started += ((name, sink, q))
         }
-        // listener events are async relative to awaitTermination — wait
-        // for every drain's terminated event so the metrics snapshot is
-        // complete before it is stored
-        started.foreach { case (name, _, q) =>
-          require(lst.awaitTerminated(q.runId.toString),
-            s"listener terminated event for drain '$name' not received in time")
-        }
-        DrainGroup(started.map(t => t._1 -> t._2).toMap,
-          started.map(t => t._1 -> t._3.runId.toString).toMap, lst.collected)
+        started.foreach(_._3.awaitTermination())
+      } catch {
+        case e: Throwable =>
+          // stop the survivors so a failed group never leaks running
+          // queries into the next attempt
+          started.foreach(t => try t._3.stop() catch { case _: Throwable => () })
+          throw e
       }
+      started.foreach { case (name, _, q) => requireTerminated(lst, q, s"drain '$name'") }
+      DrainGroup(started.map(t => t._1 -> t._2).toMap,
+        started.map(t => t._1 -> t._3.runId.toString).toMap, lst.collected)
     } finally s.streams.removeListener(lst)
   }
 
@@ -297,6 +277,58 @@ object Pipeline {
     g.runIds.map { case (n, rid) => n -> g.metrics.count(_.run_id == rid).toLong }
   }
 
+  /** THE bounded drain every engine stream runs through: `stream` drains
+    * AvailableNow into a fresh `sinkPrefix` dir, and each micro-batch
+    * calls `write(batch, sinkDir, batchId)`. foreachBatch is
+    * at-least-once — a batch that fails before its commit replays under
+    * the same id from the offset WAL — so exactly-once CONTENTS come
+    * from the sink: an idempotent `write` (Sinks.parquetBatchOverwrite,
+    * Sinks.upsertAppend read through readLatest) converges under replay
+    * (StreamingSpec T8 crashes this path at both sides of the write).
+    * `checkpoint` defaults to a fresh dir; T8 passes a fixed one to
+    * restart a crashed drain from its offsets. */
+  private[graft] def drain(stream: DataFrame, mode: String, sinkPrefix: String,
+      checkpoint: String = tmp("graft_ckpt_"))(
+      write: (DataFrame, String, Long) => Unit): (String, StreamingQuery) = {
+    val sinkDir = tmp(sinkPrefix)
+    val q = stream.writeStream.outputMode(mode)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch((batch: DataFrame, batchId: Long) => write(batch, sinkDir, batchId))
+      .start()
+    (sinkDir, q)
+  }
+
+  /** [[drain]]'s write for the plain append sinks (batch id unused). */
+  private val appendBatch: (DataFrame, String, Long) => Unit =
+    (batch, sinkDir, _) => graft.sources.Sinks.parquetAppend(batch, sinkDir)
+
+  /** Runs one drain ALONE, outside the group: its own listener (echoing
+    * one line per micro-batch when `echo`), awaited to completion.
+    * Returns the sink dir and the drain's per-micro-batch metrics. */
+  private[graft] def solo(s: SparkSession, echo: Boolean = false)(
+      launch: => (String, StreamingQuery)): (String, DataFrame) = {
+    val lst = new GraftQueryListener(echo)
+    s.streams.addListener(lst)
+    try {
+      val (sinkDir, q) = withStreamShuffle(s) {
+        val (dir, q) = launch
+        q.awaitTermination()
+        (dir, q)
+      }
+      requireTerminated(lst, q, s"run ${q.runId}")
+      (sinkDir, lst.metricsDf(s, q.runId.toString))
+    } finally s.streams.removeListener(lst)
+  }
+
+  /** Listener events are async relative to awaitTermination: fail loudly
+    * if `q`'s terminated event never lands, so an incomplete metrics
+    * buffer can't masquerade as a successful run. */
+  private def requireTerminated(lst: GraftQueryListener, q: StreamingQuery,
+      what: String): Unit =
+    require(lst.awaitTerminated(q.runId.toString),
+      s"listener terminated event for $what not received in time")
+
   // ————————————————— the drains ————————————————————————————————————
 
   /** The reference's full stream pipeline (S1→P1-P3→S4: source → JSON
@@ -306,7 +338,6 @@ object Pipeline {
     * mirrors producer `json.dumps` → consumer `from_json`
     * (`producer.py:9` / `stream_consumer.py:96-98`). */
   private def launchPipeline(s: SparkSession, d: String): (String, StreamingQuery) = {
-    val sinkDir = tmp("graft_sink_")
     val envelopeSchema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", TimestampType),
       StructField("event_type", StringType), StructField("value", DoubleType)))
@@ -315,23 +346,16 @@ object Pipeline {
         col("value"))).as("value"))                       // wire format
       .select(from_json(col("value").cast(StringType), envelopeSchema).as("data"))
       .select(col("data.*"))                              // struct flatten
-    val q = parsed.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", tmp("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // S2 parity: append the raw micro-batch to the tick table,
-        // through the config-selected transport (parquet default, JDBC
-        // via graft.stream.sink — sources.TickTransport). No isEmpty
-        // pre-check (P4): an AvailableNow file source never delivers an
-        // empty batch, and the guard itself costs one extra Spark job
-        // per micro-batch; an empty batch would just append zero rows,
-        // which is already correct.
-        graft.sources.TickTransport.sink(s, sinkDir).append(batch, batchId)
-        ()
-      }
-      .start()
-    (sinkDir, q)
+    drain(parsed, "append", "graft_sink_") { (batch, sinkDir, batchId) =>
+      // S2 parity: append the raw micro-batch to the tick table,
+      // through the config-selected transport (parquet default, JDBC
+      // via graft.stream.sink — sources.TickTransport). No isEmpty
+      // pre-check (P4): an AvailableNow file source never delivers an
+      // empty batch, and the guard itself costs one extra Spark job
+      // per micro-batch; an empty batch would just append zero rows,
+      // which is already correct.
+      graft.sources.TickTransport.sink(s, sinkDir).append(batch, batchId)
+    }
   }
 
   def streamPipeline(s: SparkSession, d: String): DataFrame = {
@@ -364,15 +388,14 @@ object Pipeline {
     * only ever moves the windows a batch actually touched, written by
     * executors. */
   private def launchEventWindow(s: SparkSession, d: String): (String, StreamingQuery) = {
-    val sinkDir = tmp("graft_evw_")
     // watermark delay must cover the source's arrival DISORDER: the
     // staged files are hash-partitioned, so a micro-batch can carry
     // events older than any previous batch's max. In update mode a
     // window whose state was watermark-evicted silently drops late
     // rows, so the delay derives from the corpus's actual span
     // (watermarkDelay); with a time-ordered production source this
-    // would be minutes. Kept at 1-file triggers — the canonical 4-batch
-    // multi-batch update-mode demo.
+    // would be minutes. The default 2-file triggers give 2 data
+    // micro-batches — the canonical multi-batch update-mode demo.
     val agg = eventsStream(s, d)
       .withWatermark("ts", watermarkDelay(s, d))
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
@@ -380,15 +403,7 @@ object Pipeline {
         sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("total"))
       .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("n"), col("total"))
-    val q = agg.writeStream.outputMode("update")
-      .option("checkpointLocation", tmp("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.upsertAppend(batch, sinkDir, batchId)
-        ()
-      }
-      .start()
-    (sinkDir, q)
+    drain(agg, "update", "graft_evw_")(graft.sources.Sinks.upsertAppend)
   }
 
   /** STREAMING DRIFT MONITOR (the drift family's production shape):
@@ -403,7 +418,6 @@ object Pipeline {
     * itself runs on the drained counts at read time — integer counts
     * stream; the transcendental scoring stays a batch projection. */
   private def launchDriftMonitor(s: SparkSession, d: String): (String, StreamingQuery) = {
-    val sinkDir = tmp("graft_drm_")
     val ranges = graft.ops.Drift.psiRanges(s, d)
     val agg = eventsStream(s, d)
       .withWatermark("ts", watermarkDelay(s, d))
@@ -414,15 +428,7 @@ object Pipeline {
       .agg(count(lit(1)).as("n"))
       .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("bin"), col("n"))
-    val q = agg.writeStream.outputMode("update")
-      .option("checkpointLocation", tmp("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.upsertAppend(batch, sinkDir, batchId)
-        ()
-      }
-      .start()
-    (sinkDir, q)
+    drain(agg, "update", "graft_drm_")(graft.sources.Sinks.upsertAppend)
   }
 
   def streamDrift(s: SparkSession, d: String): DataFrame = {
@@ -471,11 +477,9 @@ object Pipeline {
     * sums keep the drained table equal to the batch equivalent bit for
     * bit (the oracle enumerates both windows per row in SQL). */
   private def launchSliding(s: SparkSession, d: String): (String, StreamingQuery) = {
-    val sinkDir = tmp("graft_slw_")
     // 2-file triggers: still a genuine cross-batch incremental update
     // (the second batch rewrites windows the first opened) at half the
-    // per-batch state-store machinery — q_event_window keeps the
-    // 4-batch drain as the canonical multi-batch update-mode demo
+    // per-batch state-store machinery of 1-file triggers
     val agg = eventsStream(s, d, filesPerTrigger = 2)
       .withWatermark("ts", watermarkDelay(s, d))
       .groupBy(window(col("ts"), "1 day", "12 hours").as("w"), col("event_type"))
@@ -483,15 +487,7 @@ object Pipeline {
         sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("total"))
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
         col("event_type"), col("n"), col("total"))
-    val q = agg.writeStream.outputMode("update")
-      .option("checkpointLocation", tmp("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.upsertAppend(batch, sinkDir, batchId)
-        ()
-      }
-      .start()
-    (sinkDir, q)
+    drain(agg, "update", "graft_slw_")(graft.sources.Sinks.upsertAppend)
   }
 
   def slidingEventWindow(s: SparkSession, d: String): DataFrame = {
@@ -512,7 +508,6 @@ object Pipeline {
     * and the tail flushes before termination, so the drained table
     * equals the batch session_window oracle row for row. */
   private def launchSessionWindows(s: SparkSession, d: String): (String, StreamingQuery) = {
-    val sinkDir = tmp("graft_ssw_")
     // NO pre-aggregate heartbeat filter: Catalyst pushes filters BELOW
     // the EventTimeWatermark node, so a `user_id >= 0` here would kill
     // the heartbeat before it reaches the watermark collector and the
@@ -525,15 +520,7 @@ object Pipeline {
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), unix_micros(col("sw.start")).as("start_us"),
         unix_micros(col("sw.end")).as("end_us"), col("n_events"))
-    val q = agg.writeStream.outputMode("append")
-      .option("checkpointLocation", tmp("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Sinks.parquetAppend(batch, sinkDir)
-        ()
-      }
-      .start()
-    (sinkDir, q)
+    drain(agg, "append", "graft_ssw_")(appendBatch)
   }
 
   def streamSessionWindows(s: SparkSession, d: String): DataFrame = {
@@ -552,7 +539,6 @@ object Pipeline {
     * runs fine on the hash-split replay while this one needs the
     * ordered one. Drained result == the batch LEFT JOIN oracle. */
   private def launchOuterJoin(s: SparkSession, d: String): (String, StreamingQuery) = {
-    val sinkDir = tmp("graft_soj_")
     // rename FIRST so each branch carries exactly one watermark (on
     // the join's event-time column). The event-type filters KEEP the
     // heartbeat rows: Catalyst pushes predicates below the
@@ -583,15 +569,7 @@ object Pipeline {
         col("c_ts") <= col("p_ts"),
       "left_outer")
       .select(col("p_id"), col("c_id"), col("click_value"))
-    val q = joined.writeStream.outputMode("append")
-      .option("checkpointLocation", tmp("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Sinks.parquetAppend(batch, sinkDir)
-        ()
-      }
-      .start()
-    (sinkDir, q)
+    drain(joined, "append", "graft_soj_")(appendBatch)
   }
 
   def streamOuterJoin(s: SparkSession, d: String): DataFrame = {
@@ -610,7 +588,6 @@ object Pipeline {
     * by hash). Decimal sums make the convergence exact: partial
     * per-batch state + final merge cannot perturb bits. */
   private def launchVwap(s: SparkSession, d: String): (String, StreamingQuery) = {
-    val sinkDir = tmp("graft_svwap_")
     val propsSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("k",
         org.apache.spark.sql.types.LongType)))
@@ -623,15 +600,7 @@ object Pipeline {
         sum(col("value").cast(DecimalType(18, 2)) * col("k")).as("pv"))
       .select(col("symbol"), date_format(col("w.start"), "yyyy-MM-dd").as("day"),
         col("size_sum"), col("pv"))
-    val q = agg.writeStream.outputMode("update")
-      .option("checkpointLocation", tmp("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.upsertAppend(batch, sinkDir, batchId)
-        ()
-      }
-      .start()
-    (sinkDir, q)
+    drain(agg, "update", "graft_svwap_")(graft.sources.Sinks.upsertAppend)
   }
 
   def streamingVwap(s: SparkSession, d: String): DataFrame = {
@@ -651,7 +620,6 @@ object Pipeline {
     * sums ⇒ the drained table equals the batch equivalent exactly
     * (oracle = batch SQL). */
   private def launchEnrich(s: SparkSession, d: String): (String, StreamingQuery) = {
-    val sinkDir = tmp("graft_senrich_")
     val dim = Tables.events(s, d).select(col("event_type")).distinct()
       .withColumn("weight", length(col("event_type")).cast(LongType))
     val agg = eventsStream(s, d, filesPerTrigger = 2)
@@ -660,15 +628,7 @@ object Pipeline {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 2)) * col("weight")).as("wsum"))
-    val q = agg.writeStream.outputMode("update")
-      .option("checkpointLocation", tmp("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.upsertAppend(batch, sinkDir, batchId)
-        ()
-      }
-      .start()
-    (sinkDir, q)
+    drain(agg, "update", "graft_senrich_")(graft.sources.Sinks.upsertAppend)
   }
 
   def streamEnrich(s: SparkSession, d: String): DataFrame = {
@@ -686,22 +646,13 @@ object Pipeline {
     * domain is small so state is bounded by construction. Output keys ==
     * batch DISTINCT over the same data, which is what the oracle checks. */
   private def launchDedup(s: SparkSession, d: String): (String, StreamingQuery) = {
-    val sinkDir = tmp("graft_ddsink_")
-    val q = eventsStream(s, d)
+    val keys = eventsStream(s, d)
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", tmp("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // executor-side parquet append — a memory sink would funnel
-        // every first-seen key through the driver (the scale cliff the
-        // other drains already avoid)
-        graft.sources.Sinks.parquetAppend(batch, sinkDir)
-        ()
-      }
-      .start()
-    (sinkDir, q)
+    // executor-side parquet append — a memory sink would funnel every
+    // first-seen key through the driver (the scale cliff the other
+    // drains already avoid)
+    drain(keys, "append", "graft_ddsink_")(appendBatch)
   }
 
   def streamDedup(s: SparkSession, d: String): DataFrame = {
@@ -721,21 +672,12 @@ object Pipeline {
     * the same code with a minutes-scale delay is the bounded-state
     * dedupe. */
   private def launchDedupBounded(s: SparkSession, d: String): (String, StreamingQuery) = {
-    val sinkDir = tmp("graft_ddwsink_")
-    val q = eventsStream(s, d)
+    val keys = eventsStream(s, d)
       .withWatermark("ts", watermarkDelay(s, d))
       .select(col("user_id"), col("event_type"), col("ts"))
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", tmp("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Sinks.parquetAppend(batch, sinkDir)
-        ()
-      }
-      .start()
-    (sinkDir, q)
+    drain(keys, "append", "graft_ddwsink_")(appendBatch)
   }
 
   def streamDedupBounded(s: SparkSession, d: String): DataFrame = {
@@ -753,7 +695,6 @@ object Pipeline {
     * oracle states it in SQL). Watermark sized past the staged files'
     * arrival disorder, as in [[eventTimeWindow]]. */
   private def launchStreamStreamJoin(s: SparkSession, d: String): (String, StreamingQuery) = {
-    val sinkDir = tmp("graft_ssj_")
     // 2-file triggers: still a genuine multi-batch drain (pairs split
     // across batches exercise the cross-batch join state) at half the
     // per-batch state machinery of the 1-file drains
@@ -772,15 +713,7 @@ object Pipeline {
         col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("c_ts") <= col("p_ts"))
       .select(col("p_id"), col("c_id"), col("click_value"))
-    val q = joined.writeStream.outputMode("append")
-      .option("checkpointLocation", tmp("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Sinks.parquetAppend(batch, sinkDir)
-        ()
-      }
-      .start()
-    (sinkDir, q)
+    drain(joined, "append", "graft_ssj_")(appendBatch)
   }
 
   def streamStreamJoin(s: SparkSession, d: String): DataFrame = {
@@ -818,20 +751,12 @@ object Pipeline {
     * retry overwrite its own previous attempt instead. */
   private def launchIndexAppend(s: SparkSession, d: String): (String, StreamingQuery) = {
     val staged = prestageDocs(s, d)
-    val sinkDir = tmp("graft_idxsink_")
-    val schema = s.read.parquet(staged).schema
-    val q = s.readStream.schema(schema)
+    val docs = s.readStream.schema(s.read.parquet(staged).schema)
       .option("maxFilesPerTrigger", "2").parquet(staged)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", tmp("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.parquetBatchOverwrite(
-          graft.ops.TextOps.partialSegments(batch), sinkDir, batchId)
-        ()
-      }
-      .start()
-    (sinkDir, q)
+    drain(docs, "append", "graft_idxsink_") { (batch, sinkDir, batchId) =>
+      graft.sources.Sinks.parquetBatchOverwrite(
+        graft.ops.TextOps.partialSegments(batch), sinkDir, batchId)
+    }
   }
 
   /** T7 — a driven stream instrumented with [[GraftQueryListener]]:
@@ -842,22 +767,12 @@ object Pipeline {
     * rows (keyed by run id); [[streamWithMetrics]] returns them as the
     * per-batch metrics table. Latencies are wall-clock, so the query is
     * rows-only by design (StreamingSpec pins the deterministic parts:
-    * one row per micro-batch, rows summing to the source count). Kept at
-    * 1-file triggers: the 4-row metrics table is the spec's contract. */
-  private def launchMetricsAppend(s: SparkSession, d: String): (String, StreamingQuery) = {
-    val sinkDir = tmp("graft_msink_")
-    val q = eventsStream(s, d)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", tmp("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Sinks.parquetAppend(batch, sinkDir)
-        ()
-      }
-      .start()
-    (sinkDir, q)
-  }
+    * one row per micro-batch, rows summing to the source count). At the
+    * default 2-file triggers: the 2-row metrics table is the spec's
+    * contract. */
+  private def launchMetricsAppend(s: SparkSession, d: String): (String, StreamingQuery) =
+    drain(eventsStream(s, d).select(col("event_id"), col("event_type"), col("value")),
+      "append", "graft_msink_")(appendBatch)
 
   def streamWithMetrics(s: SparkSession, d: String,
       echo: Boolean = false): DataFrame =
@@ -879,32 +794,8 @@ object Pipeline {
     * drains, so the like-for-like per-batch number must come from a
     * drain that runs alone. */
   def standaloneMetricsDrain(s: SparkSession, d: String,
-      echo: Boolean = false): DataFrame = {
-    val lst = new GraftQueryListener(echo)
-    s.streams.addListener(lst)
-    try {
-      val sinkDir = tmp("graft_msink_")
-      val runId = withStreamShuffle(s) {
-        val q = eventsStream(s, d)
-          .select(col("event_id"), col("event_type"), col("value"))
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", tmp("graft_ckpt_"))
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            graft.sources.Sinks.parquetAppend(batch, sinkDir)
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        q.runId.toString
-      }
-      // fail loudly if the terminated event never lands: an incomplete
-      // listener buffer must not masquerade as a successful metrics run
-      require(lst.awaitTerminated(runId),
-        s"listener terminated event for run $runId not received in time")
-      lst.metricsDf(s, runId)
-    } finally s.streams.removeListener(lst)
-  }
+      echo: Boolean = false): DataFrame =
+    solo(s, echo)(launchMetricsAppend(s, d))._2
 
   /** Per-micro-batch LATENCY PROBE against the reference's stream panel
     * (BASELINE.md: ~18–41 ms/batch, mean ≈ 30 ms, ~100 plotted batches
@@ -928,33 +819,17 @@ object Pipeline {
       .orderBy(col("ts")).limit(rowsPerBatch * nBatches)
       .repartition(nBatches)
       .write.mode("overwrite").parquet(src)
-    val lst = new GraftQueryListener()
-    s.streams.addListener(lst)
-    try {
-      val sinkDir = tmp("graft_lat_sink_")
-      val runId = withStreamShuffle(s) {
-        val q = s.readStream.schema(Tables.eventsSchema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", tmp("graft_ckpt_"))
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            graft.sources.Sinks.parquetAppend(batch, sinkDir)
-            // the reference's per-batch predict: ORDER BY ts DESC LIMIT 5,
-            // driver-side collect, one forward pass (stream_consumer.py:51,75)
-            val last5 = batch.orderBy(col("ts").desc).limit(5)
-              .collect().map(_.getAs[Double]("value")).reverse
-            if (last5.length == 5) { Predict.LinearPredictor.predict(last5.toSeq); () }
-          }
-          .start()
-        q.awaitTermination()
-        q.runId.toString
-      }
-      require(lst.awaitTerminated(runId),
-        s"listener terminated event for latency probe $runId not received in time")
-      lst.metricsDf(s, runId)
-    } finally s.streams.removeListener(lst)
+    val ticks = s.readStream.schema(Tables.eventsSchema)
+      .option("maxFilesPerTrigger", "1").parquet(src)
+      .select(col("event_id"), col("ts"), col("event_type"), col("value"))
+    solo(s)(drain(ticks, "append", "graft_lat_sink_") { (batch, sinkDir, _) =>
+      graft.sources.Sinks.parquetAppend(batch, sinkDir)
+      // the reference's per-batch predict: ORDER BY ts DESC LIMIT 5,
+      // driver-side collect, one forward pass (stream_consumer.py:51,75)
+      val last5 = batch.orderBy(col("ts").desc).limit(5)
+        .collect().map(_.getAs[Double]("value")).reverse
+      if (last5.length == 5) { Predict.LinearPredictor.predict(last5.toSeq); () }
+    })._2
   }
 
   /** In-JVM sink for [[continuousFloorProbe]]: accumulators only report
@@ -1060,11 +935,7 @@ object Pipeline {
     val sinkDir =
       if (k == DefaultLastK) drainGroup(s, d)("stateful")
       else Tables.artifact(s, d, Seq("events"), ("statefulSink", k), Tables.Iteration)(
-        withStreamShuffle(s) {
-          val (sink, q) = launchStateful(s, d, k)
-          q.awaitTermination()
-          sink
-        })
+        solo(s)(launchStateful(s, d, k))._1)
     s.read.parquet(sinkDir)
       .orderBy(col("event_type"), col("batch_id"))
   }
@@ -1072,7 +943,6 @@ object Pipeline {
   private def launchStateful(s: SparkSession, d: String, k: Int): (String, StreamingQuery) = {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val sinkDir = tmp("graft_stsink_")
     val src = eventsStream(s, d)
       .select($"event_type", $"ts", $"event_id", $"value").as[E]
     val fn = (key: String, rows: Iterator[E],
@@ -1091,22 +961,13 @@ object Pipeline {
         Iterator((key, Predict.LinearPredictor.predict(hist.map(_._3)), hist.size))
       else Iterator.empty
     }
-    val q = src.groupByKey(_.event_type)
+    val predictions = src.groupByKey(_.event_type)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
       .toDF("event_type", "predicted", "n_obs")
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", tmp("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        // executor-side sink, same pattern as every other drain here;
-        // the batch id rides along so the FINAL emission per series
-        // is identifiable from the sink (statefulFinal)
-        graft.sources.Sinks.parquetAppend(
-          batch.withColumn("batch_id", lit(bid)), sinkDir)
-        ()
-      }
-      .start()
-    (sinkDir, q)
+    // executor-side sink, same pattern as every other drain here; the
+    // batch id rides along so the FINAL emission per series is
+    // identifiable from the sink (statefulFinal)
+    drain(predictions, "append", "graft_stsink_")(graft.sources.Sinks.upsertAppend)
   }
 
   /** The stateful drain's FINAL prediction per series: the emission from

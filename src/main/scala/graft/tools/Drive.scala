@@ -95,31 +95,20 @@ object Drive {
     * batch_processor.py composed). */
   private def endToEnd(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.streaming.Trigger
-    val wireDir = java.nio.file.Files.createTempDirectory("graft_e2e_src_").toString
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_e2e_sink_").toString
+    val wireDir = graft.Tuning.fastTmpDir("graft_e2e_src_").toString
     // producer: deterministic ticks, JSON wire format, 4 files = 4 batches
     graft.gen.Ticks.asJson(
       graft.gen.Ticks.generate(spark, Seq("AAPL", "MSFT", "GOOG"), 2000L))
       .repartition(4).write.mode("overwrite").text(wireDir)
     // streaming consumer: parse envelope, append to the raw table,
-    // listener captures per-batch metrics
-    val lst = new graft.streaming.GraftQueryListener(echo = true)
-    spark.streams.addListener(lst)
-    val q = spark.readStream.schema("value STRING")
+    // listener captures (and echoes) per-batch metrics
+    val ticks = spark.readStream.schema("value STRING")
       .option("maxFilesPerTrigger", "1").text(wireDir)
       .select(from_json(col("value"), graft.Tables.tickSchema).as("t"))
       .select(col("t.*"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_e2e_ckpt_").toString)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        graft.sources.Sinks.parquetAppend(b, sinkDir); ()
-      }.start()
-    q.awaitTermination()
-    lst.awaitTerminated(q.runId.toString)
-    spark.streams.removeListener(lst)
+    val (sinkDir, _) = graft.streaming.Pipeline.solo(spark, echo = true)(
+      graft.streaming.Pipeline.drain(ticks, "append", "graft_e2e_sink_")((b, dir, _) =>
+        graft.sources.Sinks.parquetAppend(b, dir)))
     // batch path: stride-1 windows over the persisted table, batched
     // GRU inference, per-symbol summary
     val raw = spark.read.parquet(sinkDir)

@@ -91,4 +91,21 @@ class ArtifactStoreSpec extends SparkSpec {
       "add the function to Native.functions (constants as literal arguments) " +
         "instead of registering it per call:\n" + sites.mkString("\n"))
   }
+
+  test("streams are started only by Pipeline.drain and continuousFloorProbe") {
+    import scala.jdk.CollectionConverters._
+    val sites = mainSourceLines("""\bwriteStream\b""".r)
+    // the object-level def (2-space indent) enclosing each site
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r
+    val enclosing = sites.map { site =>
+      val Array(path, line, _) = site.split(":", 3)
+      val file = java.nio.file.Paths.get(path)
+      java.nio.file.Files.readAllLines(file).asScala.take(line.toInt).reverseIterator
+        .flatMap(member.findFirstMatchIn(_)).nextOption()
+        .fold(site)(m => s"${file.getFileName}.${m.group(1)}")
+    }
+    assert(enclosing.sorted == Seq("Pipeline.scala.continuousFloorProbe", "Pipeline.scala.drain"),
+      "run a bounded drain through Pipeline.drain (and Pipeline.solo to await it alone):\n" +
+        sites.mkString("\n"))
+  }
 }

@@ -36,4 +36,11 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(Bench.jsonEscape(raw) == "a\\\"b\\\\c\\nd\\re\\tf\\u0001g")
     assert(Bench.jsonEscape("plain SELECT 1") == "plain SELECT 1")
   }
+
+  test("only a full-suite run writes the default artifact; a subset writes only where told") {
+    assert(Bench.artifactPath(None, None) == Some("bench_summary.json"))
+    assert(Bench.artifactPath(None, Some("q_count,q_sort")) == None)
+    assert(Bench.artifactPath(Some("/tmp/subset.json"), Some("q_count")) == Some("/tmp/subset.json"))
+    assert(Bench.artifactPath(Some("/tmp/full.json"), None) == Some("/tmp/full.json"))
+  }
 }

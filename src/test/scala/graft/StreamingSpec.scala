@@ -1,6 +1,7 @@
 package graft
 
 import graft.gen.Ticks
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming pipelines + generator (SURVEY §2.1, §2.9). */
@@ -246,39 +247,88 @@ class StreamingSpec extends SparkSpec {
       "every purchase appears: matched with clicks or null-extended")
   }
 
-  test("checkpoint recovery (T8): a crashed stream resumes from offsets, no loss, no dupes") {
-    import org.apache.spark.sql.streaming.Trigger
-    def dir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
-    val src = dir("ckpt_src_")
-    val ckpt = dir("ckpt_ck_")
-    val sink = dir("ckpt_sink_")
-    val n = 400
-    Tables.events(spark, sf).orderBy(col("event_id")).limit(n)
+  // T8 runs the engine's own drain path (Pipeline.drain) on a fixed
+  // checkpoint: n events in 4 files, one file per micro-batch
+  private val t8Rows = 400
+  private lazy val t8Source: String = {
+    val src = Tuning.fastTmpDir("graft_t8_src_").toString
+    Tables.events(spark, sf).orderBy(col("event_id")).limit(t8Rows)
       .repartition(4).write.mode("overwrite").parquet(src)
-    def start(failFromBatch: Long) = spark.readStream
-      .schema(graft.Tables.eventsSchema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        // crash BEFORE the sink write, so the failed batch leaves no
-        // partial output — the restart must re-deliver it exactly once
-        if (id >= failFromBatch) sys.error(s"injected crash at batch $id")
-        graft.sources.Sinks.parquetAppend(batch, sink)
-        ()
-      }
-      .start()
-    val q1 = start(failFromBatch = 1L)
-    intercept[Exception] { q1.awaitTermination() } // crashed at batch 1
-    val mid = spark.read.parquet(sink).count()
-    assert(mid > 0 && mid < n, s"first run committed a strict prefix, got $mid")
-    val q2 = start(failFromBatch = Long.MaxValue)
-    q2.awaitTermination() // resumes from the checkpoint, drains the rest
+    src
+  }
+  private def t8Stream = spark.readStream.schema(Tables.eventsSchema)
+    .option("maxFilesPerTrigger", "1").parquet(t8Source)
+
+  /** Starts `stream` through Pipeline.drain on checkpoint `ckpt`, each
+    * batch written by `write` into the fixed `sink`; batch `crashAt`
+    * throws before or after its write (a crash after the write is one
+    * between the sink and the commit log, so the batch replays). */
+  private def t8Drain(stream: DataFrame, mode: String,
+      ckpt: String, sink: String, crashAt: Long, afterWrite: Boolean)(
+      write: (DataFrame, String, Long) => Unit) =
+    graft.streaming.Pipeline.drain(stream, mode, "graft_t8_sink_", checkpoint = ckpt) {
+      (batch, _, id) =>
+        if (id == crashAt && !afterWrite) sys.error(s"injected crash before the write of batch $id")
+        write(batch, sink, id)
+        if (id == crashAt && afterWrite) sys.error(s"injected crash after the write of batch $id")
+    }._2
+
+  /** Crashes a drain at batch 1, restarts it on the same checkpoint and
+    * returns its sink, after `afterCrash` has seen the crashed run's sink. */
+  private def t8CrashAndResume(stream: => DataFrame, mode: String,
+      afterWrite: Boolean, afterCrash: String => Unit = _ => ())(
+      write: (DataFrame, String, Long) => Unit): String = {
+    val ckpt = Tuning.fastTmpDir("graft_t8_ckpt_").toString
+    val sink = Tuning.fastTmpDir("graft_t8_out_").toString
+    val crashed = t8Drain(stream, mode, ckpt, sink, crashAt = 1L, afterWrite)(write)
+    intercept[Exception] { crashed.awaitTermination() }
+    afterCrash(sink)
+    // resumes from the checkpoint: the uncommitted batch 1 replays, then the rest
+    t8Drain(stream, mode, ckpt, sink, crashAt = -1L, afterWrite)(write).awaitTermination()
+    sink
+  }
+
+  /** The same drain with no crash, into its own sink. */
+  private def t8Clean(stream: DataFrame, mode: String)(
+      write: (DataFrame, String, Long) => Unit): String = {
+    val sink = Tuning.fastTmpDir("graft_t8_out_").toString
+    t8Drain(stream, mode, Tuning.fastTmpDir("graft_t8_ckpt_").toString, sink,
+      crashAt = -1L, afterWrite = false)(write).awaitTermination()
+    sink
+  }
+
+  test("checkpoint recovery (T8): a crashed stream resumes from offsets, no loss, no dupes") {
+    // crash BEFORE the sink write, so the failed batch leaves no partial
+    // output — the restart must re-deliver it exactly once
+    val sink = t8CrashAndResume(t8Stream, "append", afterWrite = false, afterCrash = { sink =>
+      val mid = spark.read.parquet(sink).count()
+      assert(mid > 0 && mid < t8Rows, s"first run committed a strict prefix, got $mid")
+    })((batch, dir, _) => graft.sources.Sinks.parquetAppend(batch, dir))
     val fin = spark.read.parquet(sink)
-    assert(fin.count() == n, "no loss across the crash/restart boundary")
-    assert(fin.select(col("event_id")).distinct().count() == n,
+    assert(fin.count() == t8Rows, "no loss across the crash/restart boundary")
+    assert(fin.select(col("event_id")).distinct().count() == t8Rows,
       "no duplicates: the crashed batch re-delivered exactly once")
+  }
+
+  test("checkpoint recovery (T8): after a crash between sink write and commit, the idempotent sinks equal a clean run") {
+    import graft.sources.Sinks
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // batch-keyed overwrite: the replayed batch rewrites its own batch_id=1 dir
+    val replayed = t8CrashAndResume(t8Stream, "append", afterWrite = true)(Sinks.parquetBatchOverwrite)
+    val clean = t8Clean(t8Stream, "append")(Sinks.parquetBatchOverwrite)
+    assert(spark.read.parquet(clean).count() == t8Rows)
+    assert(rows(spark.read.parquet(replayed)) == rows(spark.read.parquet(clean)))
+    // update-log upsert of a stateful aggregate: the replay re-appends
+    // batch 1's rows under the same batch id, and readLatest keeps one
+    def counts = t8Stream.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))).as("total"))
+    val replayedLog = t8CrashAndResume(counts, "update", afterWrite = true)(Sinks.upsertAppend)
+    val cleanLog = t8Clean(counts, "update")(Sinks.upsertAppend)
+    val latest = (dir: String) => rows(Sinks.readLatest(spark, dir, Seq("event_type")))
+    assert(latest(replayedLog) == latest(cleanLog))
+    assert(Sinks.readLatest(spark, cleanLog, Seq("event_type"))
+      .agg(sum(col("n"))).head().getLong(0) == t8Rows)
   }
 
   test("streaming drift: one PSI per (day, series), psi ≥ 0, day totals conserve") {

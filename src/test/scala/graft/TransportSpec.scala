@@ -67,9 +67,9 @@ class TransportSpec extends SparkSpec {
 
   test("kafka/jdbc option surfaces carry the exact documented keys") {
     // These maps are what the production reader/writer .options(...)
-    // consume verbatim (Sinks.kafkaReader, KafkaTickSource.read,
-    // Sinks.jdbcAppend, Sinks.jdbcTopK) — pinning them here catches the
-    // wiring typos a compile can't (stringly-typed connector options).
+    // consume verbatim (KafkaTickSource.read, Sinks.jdbcAppend,
+    // Sinks.jdbcTopK) — pinning them here catches the wiring typos a
+    // compile can't (stringly-typed connector options).
     val k = Sinks.kafkaSourceOptions("broker:9092", "stock_ticks")
     assert(k == Map(
       "kafka.bootstrap.servers" -> "broker:9092",
@@ -91,8 +91,9 @@ class TransportSpec extends SparkSpec {
   }
 
   test("kafka reader wiring reaches Spark's source resolution") {
-    // No connector jar in the sandbox, so .load() must fail at SOURCE
-    // LOOKUP (proving the format string + option plumbing executed) —
+    // No connector jar on the test classpath, so the production reader's
+    // .load() (KafkaTickSource.read) must fail at SOURCE LOOKUP
+    // (proving the format string + option plumbing executed) —
     // not with an option-validation or NPE-shaped error. Gated on the
     // connector actually being absent: if spark-sql-kafka ever lands on
     // the classpath, load() succeeds lazily and the intercept would
@@ -101,7 +102,7 @@ class TransportSpec extends SparkSpec {
       "org.apache.spark.sql.kafka010.KafkaSourceProvider")).isFailure,
       "kafka connector present on classpath; lookup-failure test not applicable")
     val e = intercept[Exception] {
-      Sinks.kafkaReader(spark, "localhost:9092", "stock_ticks").load()
+      KafkaTickSource("localhost:9092", "stock_ticks").read(spark)
     }
     assert(e.getMessage.toLowerCase.contains("kafka"),
       s"expected a kafka source-lookup failure, got: ${e.getMessage}")
