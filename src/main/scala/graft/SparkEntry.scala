@@ -27,7 +27,7 @@ object SparkEntry {
     * The reference's core computation: last-5 lookback → next-price
     * prediction per series (`stream_consumer.py:50-54,72-76`). */
   def entry(spark: SparkSession): DataFrame =
-    Predict.predictNext(spark, "/root/testdata/sf0.001")
+    Predict.predictNext(Tables.events(spark, "/root/testdata/sf0.001"))
 
   sealed trait Verdict
   /** Value-exact against this DuckDB SQL over the same parquet tables. */
@@ -1492,17 +1492,8 @@ object SparkEntry {
     // exact linear predictor; q_predict_gru runs the same operator with
     // the recurrent-cell forward pass (not SQL-expressible → rows-only,
     // spec-verified batch==row-at-a-time).
-    QuerySpec("q_predict_next", (s, d) => Predict.predictNext(s, d, 5), Oracle(
-      """WITH r AS (SELECT event_type, value,
-         row_number() OVER (PARTITION BY event_type ORDER BY ts DESC, event_id DESC) AS rn
-         FROM events),
-         lk AS (SELECT event_type,
-           max(CASE WHEN rn = 1 THEN value END) AS last_v,
-           max(CASE WHEN rn = 5 THEN value END) AS first_v,
-           count(*) AS n
-           FROM r WHERE rn <= 5 GROUP BY event_type)
-         SELECT event_type, last_v + (last_v - first_v) / 4.0 AS predicted
-         FROM lk WHERE n = 5 ORDER BY event_type""")),
+    QuerySpec("q_predict_next", (s, d) => Predict.predictNext(Tables.events(s, d), 5), Oracle(
+      last5LinearOracleSql)),
     QuerySpec("q_predict_windows", (s, d) => Predict.predictAllWindowsBatched(s, d, 60), Oracle(
       """SELECT event_id, event_type,
          last_v + (last_v - first_v) / 59.0 AS predicted FROM (
@@ -1540,15 +1531,9 @@ object SparkEntry {
       // whole corpus, so the bound is also cross-checked against the
       // unbounded derivation there); the value laws valid under the
       // reference's relu cell (finiteness, zero-base) ride as booleans
-      """WITH s AS (SELECT event_id, event_type, ts FROM events
-           ORDER BY ts DESC, event_id DESC LIMIT 10000),
-         t AS (SELECT event_id, event_type,
-           row_number() OVER (PARTITION BY event_type ORDER BY ts, event_id) AS rn
-         FROM s)
-         SELECT count(*) AS n_rows, count(DISTINCT event_type) AS n_series,
-           min(event_id) AS min_id, max(event_id) AS max_id,
-           TRUE AS all_finite, TRUE AS zero_base_zero_pred
-         FROM t WHERE rn >= 60""")),
+      fetchSliceWindowsOracleSql(
+        """TRUE AS all_finite, TRUE AS zero_base_zero_pred
+         FROM t WHERE rn >= 60"""))),
     // the artifact's TRAINED weights (ported from lstm_model.keras by
     // tools/dump_keras_weights.py) + frozen scaler.pkl constants, at the
     // model's true (5,1) input shape; rows-only + hash-gated companion
@@ -1559,17 +1544,11 @@ object SparkEntry {
       // artifact's true (5,1) window shape, and the oracle pins the EXACT
       // frozen-scaler doubles decoded from the reference's scaler.pkl — a
       // bad weight extraction or swapped resource flips the hash
-      """WITH s AS (SELECT event_id, event_type, ts FROM events
-           ORDER BY ts DESC, event_id DESC LIMIT 10000),
-         t AS (SELECT event_id, event_type,
-           row_number() OVER (PARTITION BY event_type ORDER BY ts, event_id) AS rn
-         FROM s)
-         SELECT count(*) AS n_rows, count(DISTINCT event_type) AS n_series,
-           min(event_id) AS min_id, max(event_id) AS max_id,
-           TRUE AS all_finite,
+      fetchSliceWindowsOracleSql(
+        """TRUE AS all_finite,
            170.75782116164527 AS scaler_min,
            189.0292566483142 AS scaler_max
-         FROM t WHERE rn >= 5""")),
+         FROM t WHERE rn >= 5"""))),
     // §2.8 scalar functions
     QuerySpec("q_string_date_math", (s, d) => Scalars.stringDateMath(s, d), Oracle(
       """SELECT o_orderkey,
@@ -2559,16 +2538,7 @@ object SparkEntry {
       // the stream pipeline's final output IS the last-5 linear prediction
       // per series over the full event stream (stream == batch parity,
       // also asserted in StreamingSpec), so the batch oracle applies
-      """WITH r AS (SELECT event_type, value,
-         row_number() OVER (PARTITION BY event_type ORDER BY ts DESC, event_id DESC) AS rn
-         FROM events),
-         lk AS (SELECT event_type,
-           max(CASE WHEN rn = 1 THEN value END) AS last_v,
-           max(CASE WHEN rn = 5 THEN value END) AS first_v,
-           count(*) AS n
-           FROM r WHERE rn <= 5 GROUP BY event_type)
-         SELECT event_type, last_v + (last_v - first_v) / 4.0 AS predicted
-         FROM lk WHERE n = 5 ORDER BY event_type""")),
+      last5LinearOracleSql)),
     QuerySpec("q_event_window", (s, d) => graft.streaming.Pipeline.eventTimeWindow(s, d), Oracle(
       """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
          count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
@@ -2630,18 +2600,9 @@ object SparkEntry {
     QuerySpec("q_stateful_final", (s, d) => graft.streaming.Pipeline.statefulFinal(s, d), Oracle(
       // the stateful drain's final emission per series is computed from the
       // arrival-order-robust last-5 state, so it equals the batch last-5
-      // prediction — the q_predict_next oracle verbatim (stream == batch
-      // parity as a HASH row)
-      """WITH r AS (SELECT event_type, value,
-         row_number() OVER (PARTITION BY event_type ORDER BY ts DESC, event_id DESC) AS rn
-         FROM events),
-         lk AS (SELECT event_type,
-           max(CASE WHEN rn = 1 THEN value END) AS last_v,
-           max(CASE WHEN rn = 5 THEN value END) AS first_v,
-           count(*) AS n
-           FROM r WHERE rn <= 5 GROUP BY event_type)
-         SELECT event_type, last_v + (last_v - first_v) / 4.0 AS predicted
-         FROM lk WHERE n = 5 ORDER BY event_type""")),
+      // prediction — the q_predict_next oracle (stream == batch parity as
+      // a HASH row)
+      last5LinearOracleSql)),
     QuerySpec("q_stream_metrics", (s, d) => graft.streaming.Pipeline.streamWithMetrics(s, d),
       CheckedBy("q_stream_metrics_conservation")),
     QuerySpec("q_stream_metrics_conservation", (s, d) => Checks.streamMetricsConservation(s, d), Oracle(
@@ -2692,6 +2653,36 @@ object SparkEntry {
          WHERE p.event_type = 'purchase'
          ORDER BY p_id, c_id""")),
   )
+
+  /** The last-5 linear prediction per series over `events` — the oracle
+    * of the batch query and of both stream forms of it
+    * (`q_predict_next`, `q_stream_pipeline`, `q_stateful_final`). */
+  private val last5LinearOracleSql =
+    """WITH r AS (SELECT event_type, value,
+         row_number() OVER (PARTITION BY event_type ORDER BY ts DESC, event_id DESC) AS rn
+         FROM events),
+         lk AS (SELECT event_type,
+           max(CASE WHEN rn = 1 THEN value END) AS last_v,
+           max(CASE WHEN rn = 5 THEN value END) AS first_v,
+           count(*) AS n
+           FROM r WHERE rn <= 5 GROUP BY event_type)
+         SELECT event_type, last_v + (last_v - first_v) / 4.0 AS predicted
+         FROM lk WHERE n = 5 ORDER BY event_type"""
+
+  /** Row identity of the windows derived inside the reference's bounded
+    * fetch slice (`ORDER BY ts DESC LIMIT 10000`, `batch_processor.py:76`),
+    * for the two LSTM companions: the slice CTE `s`, its per-series
+    * `row_number` `t`, and the identity columns, followed by `tail` (the
+    * companion's own columns, its FROM and its window-length filter). */
+  private def fetchSliceWindowsOracleSql(tail: String): String =
+    """WITH s AS (SELECT event_id, event_type, ts FROM events
+           ORDER BY ts DESC, event_id DESC LIMIT 10000),
+         t AS (SELECT event_id, event_type,
+           row_number() OVER (PARTITION BY event_type ORDER BY ts, event_id) AS rn
+         FROM s)
+         SELECT count(*) AS n_rows, count(DISTINCT event_type) AS n_series,
+           min(event_id) AS min_id, max(event_id) AS max_id,
+           """ + tail
 
   /** DECIMAL-exact sum fragment shared by several oracles. */
   private def dsum(col: String) = s"CAST(sum(CAST($col AS DECIMAL(18,2))) AS DOUBLE)"

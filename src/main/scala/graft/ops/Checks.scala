@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -392,6 +392,28 @@ object Checks {
         sum(col("input_rows")).as("total_rows"),
         (count(lit(1)) >= 1).as("has_batches"))
 
+  /** The ROW-IDENTITY aggregate the three predict companions share: a
+    * pass emits exactly one row per complete window, so its count,
+    * series count and event_id range hash-check value-for-value against
+    * the oracle's own window derivation. */
+  private val predictedRows: Seq[Column] = Seq(
+    count(lit(1)).as("n_rows"),
+    countDistinct(col("event_type")).as("n_series"),
+    min(col("event_id")).as("min_id"),
+    max(col("event_id")).as("max_id"))
+
+  /** One row: [[predictedRows]] over a stored pass, then the companion's
+    * own `laws`. */
+  private def predictCompanion(pass: DataFrame, laws: Column*): DataFrame =
+    pass.agg(predictedRows.head, predictedRows.tail ++ laws: _*)
+
+  /** 1 for a NaN or infinite prediction: sigmoid/relu/linear over finite
+    * inputs compose to finite outputs, so the LSTM companions pin the
+    * sum of this at 0. */
+  private val nonFinite: Column = when(col("predicted").isNaN ||
+    col("predicted") === Double.PositiveInfinity ||
+    col("predicted") === Double.NegativeInfinity, 1L).otherwise(0L)
+
   /** GRU inference companion — the conserved projections of
     * [[Predict.predictAllWindowsBatched]] with the GRU predictor, the
     * last rows-only query without a hash gate. The predicted VALUES are
@@ -411,8 +433,7 @@ object Checks {
     *      exactly). NaN/violations count into the boolean the oracle
     *      pins TRUE. */
   def gruPredictCheck(s: SparkSession, d: String): DataFrame = {
-    val predictor = new Predict.GruPredictor()
-    val bound = predictor.weights.wOut.map(math.abs).sum
+    val bound = Predict.seededGru.weights.wOut.map(math.abs).sum
     // the same cached pass q_predict_gru serves — the recurrence runs
     // once per bench iteration, not once per consumer
     val gru = Predict.gruPredictions(s, d, 60)
@@ -423,13 +444,8 @@ object Checks {
       .otherwise(
         when(abs(col("predicted") / col("value") - 1.0) <= bound, 0L)
           .otherwise(1L))
-    gru.join(ev, Seq("event_id"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        countDistinct(col("event_type")).as("n_series"),
-        min(col("event_id")).as("min_id"),
-        max(col("event_id")).as("max_id"),
-        (sum(bad) === 0L).as("within_gru_bound"))
+    predictCompanion(gru.join(ev, Seq("event_id")),
+      (sum(bad) === 0L).as("within_gru_bound"))
   }
 
   /** Stacked-LSTM inference companion, mirroring [[gruPredictCheck]].
@@ -449,19 +465,11 @@ object Checks {
   def lstmPredictCheck(s: SparkSession, d: String): DataFrame = {
     val lstm = Predict.lstmPredictions(s, d, 60)
     val ev = Tables.events(s, d).select(col("event_id"), col("value"))
-    val nonFinite = when(col("predicted").isNaN ||
-      col("predicted") === Double.PositiveInfinity ||
-      col("predicted") === Double.NegativeInfinity, 1L).otherwise(0L)
     val zeroBaseBad = when(col("value") === 0.0 && col("predicted") =!= 0.0, 1L)
       .otherwise(0L)
-    lstm.join(ev, Seq("event_id"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        countDistinct(col("event_type")).as("n_series"),
-        min(col("event_id")).as("min_id"),
-        max(col("event_id")).as("max_id"),
-        (sum(nonFinite) === 0L).as("all_finite"),
-        (sum(zeroBaseBad) === 0L).as("zero_base_zero_pred"))
+    predictCompanion(lstm.join(ev, Seq("event_id")),
+      (sum(nonFinite) === 0L).as("all_finite"),
+      (sum(zeroBaseBad) === 0L).as("zero_base_zero_pred"))
   }
 
   /** Trained-weights LSTM companion (`q_predict_lstm_ref`): the same
@@ -483,15 +491,7 @@ object Checks {
     val (scalerMin, scalerMax) =
       Predict.LstmPredictor.reference.weights.scaler.getOrElse(
         throw new IllegalStateException("reference weights lost their scaler"))
-    val lstm = Predict.lstmRefPredictions(s, d, 5)
-    val nonFinite = when(col("predicted").isNaN ||
-      col("predicted") === Double.PositiveInfinity ||
-      col("predicted") === Double.NegativeInfinity, 1L).otherwise(0L)
-    lstm.agg(
-      count(lit(1)).as("n_rows"),
-      countDistinct(col("event_type")).as("n_series"),
-      min(col("event_id")).as("min_id"),
-      max(col("event_id")).as("max_id"),
+    predictCompanion(Predict.lstmRefPredictions(s, d, 5),
       (sum(nonFinite) === 0L).as("all_finite"),
       lit(scalerMin).as("scaler_min"),
       lit(scalerMax).as("scaler_max"))

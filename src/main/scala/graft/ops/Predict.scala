@@ -8,15 +8,17 @@ import org.apache.spark.sql.functions._
 /** Model-inference surface (SURVEY.md §2.10 M1-M3).
   *
   * The reference runs a Keras LSTM on the driver over collected series
-  * (`stream_consumer.py:50-54`, `batch_processor.py:88-101`). The LSTM
-  * weights can't be exported in this sandbox (SURVEY §7 R1), so the
-  * predictor is a pluggable trait with a deterministic linear-extrapolation
-  * default that has the exact same dataflow signature: last-k ordered
-  * prices in → one predicted price out. The predictor runs INSIDE the plan
-  * as a UDF over a window-collected array — executors each predict their
-  * own series; only final prediction rows move, never raw series
-  * (eliminates the reference's driver-collect cliff at
-  * `stream_consumer.py:72` / `batch_processor.py:114`).
+  * (`stream_consumer.py:50-54`, `batch_processor.py:88-101`). Here the
+  * predictor is a pluggable trait with the same signature (last-k
+  * ordered prices in → one predicted price out): linear extrapolation
+  * (oracle-comparable), a seeded GRU, and the stacked LSTM with the
+  * reference's trained weights ([[LstmPredictor.reference]]). It runs
+  * INSIDE the plan, so only prediction rows move, never raw series (no
+  * driver-collect cliff as at `stream_consumer.py:72` /
+  * `batch_processor.py:114`). One builder per shape: [[lastK]] +
+  * [[predictNext]] (last-k → next price, per-series UDF),
+  * [[inferBatched]] (windows → one `predictBatch` per buffer in
+  * mapPartitions), and [[storedPass]] for the GRU/LSTM passes.
   */
 object Predict {
 
@@ -51,6 +53,23 @@ object Predict {
     }
   }
 
+  /** The plain-text tensor format both `parseWeights` read: one
+    * `name:v1,v2,...` line per tensor, `#` comments and blank lines
+    * skipped. Returns name → the value text after the colon. */
+  private def tensorLines(text: String): Map[String, String] =
+    text.linesIterator
+      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
+      .map { l =>
+        val parts = l.split(":", 2)
+        require(parts.length == 2, s"malformed weight line: '$l'")
+        parts(0).trim -> parts(1).trim
+      }.toMap
+
+  /** Tensor `name` of a [[tensorLines]] map, parsed to doubles. */
+  private def tensor(m: Map[String, String], name: String): Array[Double] =
+    m.getOrElse(name, throw new IllegalArgumentException(s"missing tensor '$name'"))
+      .split(",").map(_.trim).filter(_.nonEmpty).map(_.toDouble)
+
   /** GRU cell weights, row-major (`u*` are hidden×hidden). A plain data
     * holder so TRAINED weights drop in without code changes — see
     * [[GruPredictor.fromFile]] for the on-disk format. */
@@ -73,8 +92,8 @@ object Predict {
     * Keras LSTM, `stream_consumer.py:50-54`): a single GRU cell (standard
     * public formulation — update/reset gates + candidate state) unrolled
     * over the window, hidden state read out through a linear head. The
-    * sandbox has no trained weights (SURVEY §7 R1), so the default
-    * constructor fills [[GruWeights]] from a seeded PRNG — the POINT is
+    * reference ships no GRU, so the default constructor fills
+    * [[GruWeights]] from a seeded PRNG — the POINT is
     * the batched dataflow (weights broadcast once, one matrix-style pass
     * per buffered batch), not the learned function; a REAL trained model
     * swaps in via [[GruPredictor.fromFile]] with no other code change.
@@ -124,7 +143,7 @@ object Predict {
   }
 
   object GruPredictor {
-    /** Deterministic stand-in weights (no trained model in the sandbox). */
+    /** Deterministic stand-in weights (the reference ships no GRU). */
     def seededWeights(hidden: Int, seed: Long): GruWeights = {
       val rnd = new scala.util.Random(seed)
       def mat(n: Int): Array[Double] = Array.fill(n)(rnd.nextGaussian() * 0.3)
@@ -147,15 +166,8 @@ object Predict {
         java.nio.charset.StandardCharsets.UTF_8)))
 
     private[graft] def parseWeights(text: String): GruWeights = {
-      val m: Map[String, Array[Double]] = text.linesIterator
-        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map { l =>
-          val parts = l.split(":", 2)
-          require(parts.length == 2, s"malformed weight line: '$l'")
-          parts(0).trim -> parts(1).split(",").map(_.trim).filter(_.nonEmpty).map(_.toDouble)
-        }.toMap
-      def g(name: String): Array[Double] =
-        m.getOrElse(name, throw new IllegalArgumentException(s"missing tensor '$name'"))
+      val m = tensorLines(text)
+      def g(name: String): Array[Double] = tensor(m, name)
       val hidden = g("hidden").head.toInt
       GruWeights(hidden,
         g("wz"), g("uz"), g("bz"),
@@ -218,10 +230,11 @@ object Predict {
     * sequence, linear head on the last layer's final h. Same scale-free
     * input convention as [[GruPredictor]] (x = v/base − 1, output =
     * base·(1+out)) so untrained weights still emit price-magnitude
-    * values. No trained weights in the sandbox (SURVEY §7 R1): the
-    * default constructor seeds the reference's 64→32 shape
-    * deterministically; trained weights drop in via
-    * [[LstmPredictor.fromFile]] with no other code change. */
+    * values. The default constructor seeds the reference's 64→32 shape
+    * deterministically; the reference artifact's trained weights are
+    * [[LstmPredictor.reference]], and other trained weights drop in via
+    * [[LstmPredictor.fromFile]] or [[LstmPredictor.fromKeras]] with no
+    * other code change. */
   class LstmPredictor(val weights: LstmWeights) extends Predictor {
     def this(hidden: Seq[Int] = Seq(64, 32), seed: Long = 7L,
         activation: String = "relu") =
@@ -358,17 +371,8 @@ object Predict {
         KerasH5.readKerasArchive(path), layerNames, denseName, scaler))
 
     private[graft] def parseWeights(text: String): LstmWeights = {
-      val m: Map[String, String] = text.linesIterator
-        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map { l =>
-          val parts = l.split(":", 2)
-          require(parts.length == 2, s"malformed weight line: '$l'")
-          parts(0).trim -> parts(1).trim
-        }.toMap
-      def nums(name: String): Array[Double] =
-        m.getOrElse(name, throw new IllegalArgumentException(
-          s"missing tensor '$name'"))
-          .split(",").map(_.trim).filter(_.nonEmpty).map(_.toDouble)
+      val m = tensorLines(text)
+      def nums(name: String): Array[Double] = tensor(m, name)
       val hidden = nums("hidden").map(_.toInt).toSeq
       val layers = hidden.zip(1 +: hidden.dropRight(1)).zipWithIndex.map {
         case ((n, in), idx) =>
@@ -388,20 +392,86 @@ object Predict {
     }
   }
 
-  /** M2's REAL shape — batched inference over every stride-1 length-k
-    * window: windows are materialized by the (deterministic, ordered)
-    * frame exactly as [[predictAllWindows]], then a mapPartitions stage
-    * buffers each partition's windows and calls the predictor ONCE per
-    * buffer (`predictor.predictBatch` — the analog of the reference
-    * batching every sequence into one `model.predict(sequences)` call,
-    * `batch_processor.py:88-101`). The predictor rides an explicit
-    * broadcast, so weights ship once per executor, not per task
-    * (`stream_consumer.py:43-45` loads the model once per process);
-    * `prepare()` fires once per partition. */
+  /** Each series' k newest values (by `ts`, then `event_id`) as `vals`,
+    * newest first, over any frame with the events' columns — the
+    * reference's `prices[-5:]` (`stream_consumer.py:51`). TWO-PHASE: the
+    * bounded [[graft.functions.TopKByAgg]] reduces each map task to k
+    * values before the shuffle, so no task sorts a whole series (a
+    * `row_number` over `partitionBy(event_type)` funnels a hot series
+    * through one sorting task). */
+  def lastK(events: DataFrame, k: Int): DataFrame = {
+    import graft.functions.Native
+    Native.register(events.sparkSession)
+    events
+      .groupBy(col("event_type"))
+      .agg(Native.topKBy(col("ts"), col("event_id"), col("value"), k).as("vals"))
+  }
+
+  /** M1 — next-value prediction per series from its last k rows of
+    * `events` (`stream_consumer.py:50-54`); series with fewer than k rows
+    * emit nothing. The stream pipeline passes its drained sink. */
+  def predictNext(events: DataFrame, k: Int = 5,
+      predictor: Predictor = LinearPredictor): DataFrame = {
+    val predictUdf = udf((xs: Seq[Double]) => predictor.predict(xs))
+    lastK(events, k)
+      .filter(size(col("vals")) === k)
+      // topKBy emits newest-first; the predictor wants chronological
+      .select(col("event_type"), predictUdf(reverse(col("vals"))).as("predicted"))
+      .orderBy(col("event_type"))
+  }
+
+  /** M2 — batch inference over every stride-1 length-k window (reference
+    * `make_predictions`, `batch_processor.py:88-101`): one prediction per
+    * complete window, row at a time. The reference form the batched path
+    * is checked against. */
+  def predictAllWindows(s: SparkSession, d: String, k: Int = 60,
+      predictor: Predictor = LinearPredictor): DataFrame = {
+    val predictUdf = udf((xs: Seq[Double]) => predictor.predict(xs))
+    val frame = Window.partitionBy(col("event_type"))
+      .orderBy(col("ts"), col("event_id")).rowsBetween(-(k - 1), 0)
+    Tables.events(s, d)
+      .select(col("event_id"), col("event_type"),
+        collect_list(col("value")).over(frame).as("w"))
+      .filter(size(col("w")) === k)
+      .select(col("event_id"), col("event_type"),
+        predictUdf(col("w")).as("predicted"))
+      .orderBy(col("event_id"))
+  }
+
+  /** Batched inference over `windows` = (id: long, key: string,
+    * window: array<double>) → (id, key, `predicted`), keeping the first
+    * two column names. A mapPartitions stage calls the predictor ONCE
+    * per buffer of `batchSize` windows (`predictBatch` — the reference's
+    * one `model.predict(sequences)`, `batch_processor.py:88-101`). The
+    * predictor rides a broadcast, so weights ship once per executor
+    * (`stream_consumer.py:43-45` loads the model once per process), and
+    * `prepare()` fires once per partition. The input's partitioning is
+    * kept: repartition `windows` first for more parallelism. */
+  def inferBatched(windows: DataFrame, predictor: Predictor,
+      batchSize: Int = 1024): DataFrame = {
+    val s = windows.sparkSession
+    import s.implicits._
+    val Array(id, key, _) = windows.columns
+    val bc = s.sparkContext.broadcast(predictor)
+    windows.as[(Long, String, Array[Double])].mapPartitions { it =>
+      val p = bc.value
+      p.prepare()
+      it.grouped(batchSize).flatMap { chunk =>
+        val preds = p.predictBatch(chunk.map(_._3).toArray)
+        chunk.iterator.zip(preds.iterator).map { case ((i, k, _), pred) =>
+          (i, k, pred)
+        }
+      }
+    }.toDF(id, key, "predicted")
+  }
+
+  /** M2's REAL shape — [[inferBatched]] over every stride-1 length-k
+    * window, windows materialized by the (deterministic, ordered) frame
+    * exactly as [[predictAllWindows]]. */
   def predictAllWindowsBatched(s: SparkSession, d: String, k: Int = 60,
       predictor: Predictor = LinearPredictor, batchSize: Int = 1024,
       spread: Boolean = false): DataFrame =
-    predictAllWindowsBatchedRaw(s, d, k, predictor, batchSize, spread)
+    allWindowsBatched(s, d, k, predictor, batchSize, spread)
       .orderBy(col("event_id"))
 
   /** [[predictAllWindowsBatched]] WITHOUT the final global sort. The
@@ -411,10 +481,8 @@ object Predict {
     * whole inference pipeline twice (measured: the sorted write cost
     * ~2× the pass; under a bare count() the optimizer eliminates the
     * sort, which is why the query form never showed it). */
-  private def predictAllWindowsBatchedRaw(s: SparkSession, d: String, k: Int,
+  private def allWindowsBatched(s: SparkSession, d: String, k: Int,
       predictor: Predictor, batchSize: Int, spread: Boolean): DataFrame = {
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(predictor)
     // windows come from the shared per-(corpus, k) artifact
     // (Chunked.windowArrays): one chunked collect_list frame pass per
     // JVM, consumed here and by the sliding stats + GRU/LSTM passes.
@@ -432,46 +500,68 @@ object Predict {
     // keeps the artifact's layout. Per-row map work is
     // partition-invariant, so values are unchanged either way.
     val base = Chunked.windowArrays(s, d, k)
-    val windows = (if (spread) base.repartition(s.sparkContext.defaultParallelism)
-                   else base)
-      .as[(Long, String, Array[Double])]
-    windows.mapPartitions { it =>
-      val p = bc.value
-      p.prepare()
-      it.grouped(batchSize).flatMap { chunk =>
-        val preds = p.predictBatch(chunk.map(_._3).toArray)
-        chunk.iterator.zip(preds.iterator).map { case ((id, et, _), pred) =>
-          (id, et, pred)
-        }
-      }
-    }.toDF("event_id", "event_type", "predicted")
+    inferBatched(
+      if (spread) base.repartition(s.sparkContext.defaultParallelism) else base,
+      predictor, batchSize)
   }
 
-  /** The GRU inference pass ([[predictAllWindowsBatched]] with the
-    * seeded [[GruPredictor]]) materialized ONCE per (corpus, window
-    * size) as a parquet dir and shared by `q_predict_gru` and its
-    * hash-gated companion (`Checks.gruPredictCheck`) — the same
-    * share-the-intermediate discipline as the stateful drain sink,
-    * which both `q_stateful_predict` and `q_stateful_final`
-    * post-process. An [[Tables.Iteration]] entry: every iteration —
-    * warm included — re-pays exactly ONE recurrence pass (carried by
-    * whichever consumer runs first), never zero and never one per
-    * consumer. */
-  def gruPredictionsDir(s: SparkSession, d: String, k: Int = 60): String =
-    Tables.artifact(s, d, Seq("events"), ("gruPredictionsDir", k), Tables.Iteration) {
-      // ephemeral shared intermediate, re-built per bench iteration —
-      // rides the tmpfs lever like the streaming scratch (Tuning doc)
-      val out = graft.Tuning.fastTmpDir("graft_gru_").toString
-      predictAllWindowsBatchedRaw(s, d, k, new GruPredictor(), 1024,
-          spread = true)
-        .write.mode("overwrite").parquet(out)
+  /** Windows within the reference's bounded fetch slice → batched
+    * inference. The slice is ≤fetch rows, so its per-series window sort
+    * is trivially small — but the INFERENCE is not (reference shape ≈
+    * 3.5 MFLOP/window), so the window rows are explicitly repartitioned
+    * to the session's parallelism before the predict stage: without it
+    * the ≤fetch rows sit in a handful of per-series sort outputs and the
+    * recurrence runs nearly serial (measured 112 s for the unbounded ×
+    * underparallelized variant at sf0.1 vs ~2 s bounded + spread). */
+  private def fetchWindowsBatched(s: SparkSession, d: String,
+      k: Int, fetch: Int, predictor: Predictor): DataFrame = {
+    val slice = Tables.events(s, d)
+      .select(col("event_id"), col("event_type"), col("ts"), col("value"))
+      .orderBy(col("ts").desc, col("event_id").desc).limit(fetch)
+    val frame = Window.partitionBy(col("event_type"))
+      .orderBy(col("ts"), col("event_id")).rowsBetween(-(k - 1), 0)
+    inferBatched(slice
+      .select(col("event_id"), col("event_type"),
+        collect_list(col("value")).over(frame).as("w"))
+      .filter(size(col("w")) === k)
+      .repartition(s.sparkContext.defaultParallelism), predictor)
+  }
+
+  /** The seeded GRU the stored GRU pass runs. `Checks.gruPredictCheck`
+    * reads its output bound from this same value, so the bound cannot
+    * drift from the weights the pass ran. */
+  val seededGru: GruPredictor = new GruPredictor()
+
+  /** A stored inference pass: `build` written ONCE per iteration as a
+    * parquet dir shared by a rows-only query and its hash-gated
+    * companion (as the stateful drain sink is shared). A
+    * [[Tables.Iteration]] entry: every iteration, warm included, re-pays
+    * exactly ONE pass, carried by whichever consumer runs first. `key`
+    * names every parameter that changes the pass. The ephemeral dir
+    * rides the tmpfs lever like the streaming scratch (Tuning doc). */
+  private def storedPass(s: SparkSession, d: String, key: Any, prefix: String)(
+      build: => DataFrame): String =
+    Tables.artifact(s, d, Seq("events"), key, Tables.Iteration) {
+      val out = graft.Tuning.fastTmpDir(prefix).toString
+      build.write.mode("overwrite").parquet(out)
       out
     }
 
-  /** `q_predict_gru`'s registered form: the cached pass, re-sorted on
-    * read (parquet does not preserve the operator's event_id order). */
+  /** A stored pass's registered form: re-sorted on read (parquet does
+    * not preserve the operator's event_id order). */
+  private def readPass(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(dir).orderBy(col("event_id"))
+
+  /** The GRU inference pass ([[predictAllWindowsBatched]] with
+    * [[seededGru]]), stored per (corpus, window size) for
+    * `q_predict_gru` and `Checks.gruPredictCheck`. */
+  def gruPredictionsDir(s: SparkSession, d: String, k: Int = 60): String =
+    storedPass(s, d, ("gruPredictionsDir", k), "graft_gru_")(
+      allWindowsBatched(s, d, k, seededGru, 1024, spread = true))
+
+  /** `q_predict_gru`'s registered form. */
   def gruPredictions(s: SparkSession, d: String, k: Int = 60): DataFrame =
-    s.read.parquet(gruPredictionsDir(s, d, k)).orderBy(col("event_id"))
+    readPass(s, gruPredictionsDir(s, d, k))
 
   /** Delegate of [[Tables.beginIteration]] (which drops the GRU, LSTM
     * and drain entries alike), kept for callers built against this name:
@@ -492,21 +582,18 @@ object Predict {
     * [[predictAllWindowsBatched]] with an [[LstmPredictor]] — the GRU
     * query keeps exercising that all-windows shape cheaply.)
     *
-    * Materialized once per (corpus, window size) and shared by
-    * `q_predict_lstm` and its hash-gated companion — the same
-    * per-iteration lifecycle as [[gruPredictionsDir]]. Keyed by every
-    * parameter that changes the slice (k, fetch, predictor), so a
-    * non-default fetch or the trained-weights variant never aliases the
-    * default run. */
+    * Stored per (corpus, window size) for `q_predict_lstm` and its
+    * hash-gated companion. Keyed by every parameter that changes the
+    * slice (k, fetch, predictor), so a non-default fetch or the
+    * trained-weights variant never aliases the default run. */
   def lstmPredictionsDir(s: SparkSession, d: String, k: Int = 60,
       fetch: Int = 10000): String =
-    Tables.artifact(s, d, Seq("events"), ("lstmPredictionsDir", k, fetch, "seeded"),
-        Tables.Iteration) {
-      val out = graft.Tuning.fastTmpDir("graft_lstm_").toString
-      predictFetchWindowsBatchedRaw(s, d, k, fetch, new LstmPredictor(), 1024)
-        .write.mode("overwrite").parquet(out)
-      out
-    }
+    storedPass(s, d, ("lstmPredictionsDir", k, fetch, "seeded"), "graft_lstm_")(
+      fetchWindowsBatched(s, d, k, fetch, new LstmPredictor()))
+
+  /** `q_predict_lstm`'s registered form. */
+  def lstmPredictions(s: SparkSession, d: String, k: Int = 60): DataFrame =
+    readPass(s, lstmPredictionsDir(s, d, k))
 
   /** [[lstmPredictionsDir]] under the reference artifact's TRAINED
     * weights and frozen scaler ([[LstmPredictor.reference]]), at the
@@ -517,99 +604,14 @@ object Predict {
     * top-`fetch` slice and build-once lifecycle as the seeded variant. */
   def lstmRefPredictionsDir(s: SparkSession, d: String, k: Int = 5,
       fetch: Int = 10000): String =
-    Tables.artifact(s, d, Seq("events"), ("lstmPredictionsDir", k, fetch, "reference"),
-        Tables.Iteration) {
-      val out = graft.Tuning.fastTmpDir("graft_lstm_ref_").toString
-      predictFetchWindowsBatchedRaw(s, d, k, fetch,
-        LstmPredictor.reference, 1024)
-        .write.mode("overwrite").parquet(out)
-      out
-    }
+    storedPass(s, d, ("lstmPredictionsDir", k, fetch, "reference"), "graft_lstm_ref_")(
+      fetchWindowsBatched(s, d, k, fetch, LstmPredictor.reference))
 
-  /** `q_predict_lstm_ref`'s registered form: the cached trained-weights
-    * pass, re-sorted on read. */
+  /** `q_predict_lstm_ref`'s registered form. */
   def lstmRefPredictions(s: SparkSession, d: String, k: Int = 5): DataFrame =
-    s.read.parquet(lstmRefPredictionsDir(s, d, k)).orderBy(col("event_id"))
-
-  /** Windows within the reference's bounded fetch slice → batched
-    * inference. The slice is ≤fetch rows, so its per-series window sort
-    * is trivially small — but the INFERENCE is not (reference shape ≈
-    * 3.5 MFLOP/window), so the window rows are explicitly repartitioned
-    * to the session's parallelism before the predict stage: without it
-    * the ≤fetch rows sit in a handful of per-series sort outputs and the
-    * recurrence runs nearly serial (measured 112 s for the unbounded ×
-    * underparallelized variant at sf0.1 vs ~2 s bounded + spread). */
-  private def predictFetchWindowsBatchedRaw(s: SparkSession, d: String,
-      k: Int, fetch: Int, predictor: Predictor, batchSize: Int): DataFrame = {
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(predictor)
-    val slice = Tables.events(s, d)
-      .select(col("event_id"), col("event_type"), col("ts"), col("value"))
-      .orderBy(col("ts").desc, col("event_id").desc).limit(fetch)
-    val frame = Window.partitionBy(col("event_type"))
-      .orderBy(col("ts"), col("event_id")).rowsBetween(-(k - 1), 0)
-    slice
-      .select(col("event_id"), col("event_type"),
-        collect_list(col("value")).over(frame).as("w"))
-      .filter(size(col("w")) === k)
-      .repartition(s.sparkContext.defaultParallelism)
-      .as[(Long, String, Array[Double])]
-      .mapPartitions { it =>
-        val p = bc.value
-        p.prepare()
-        it.grouped(batchSize).flatMap { chunk =>
-          val preds = p.predictBatch(chunk.map(_._3).toArray)
-          chunk.iterator.zip(preds.iterator).map { case ((id, et, _), pred) =>
-            (id, et, pred)
-          }
-        }
-      }.toDF("event_id", "event_type", "predicted")
-  }
-
-  /** `q_predict_lstm`'s registered form: the cached pass, re-sorted on
-    * read (parquet does not preserve the operator's event_id order). */
-  def lstmPredictions(s: SparkSession, d: String, k: Int = 60): DataFrame =
-    s.read.parquet(lstmPredictionsDir(s, d, k)).orderBy(col("event_id"))
+    readPass(s, lstmRefPredictionsDir(s, d, k))
 
   /** Delegate of [[Tables.beginIteration]], kept for callers built
     * against this name: the graftbench harness calls it. */
   def resetLstmDirs(): Unit = Tables.beginIteration()
-
-  /** M1 — next-value prediction per series from the last k observations,
-    * TWO-PHASE: the bounded [[graft.functions.TopKByAgg]] reduces each
-    * map task to its k newest values (partial aggregation — k×partitions
-    * tiny buffers shuffle, no per-series sort task), then the predictor
-    * fires once per series on the chronological lookback. Same reference
-    * semantics as before (`stream_consumer.py:50-54`): series with fewer
-    * than k observations emit nothing. */
-  def predictNext(s: SparkSession, d: String, k: Int = 5,
-      predictor: Predictor = LinearPredictor): DataFrame = {
-    import graft.functions.Native
-    Native.register(s)
-    val predictUdf = udf((xs: Seq[Double]) => predictor.predict(xs))
-    Tables.events(s, d)
-      .groupBy(col("event_type"))
-      .agg(Native.topKBy(col("ts"), col("event_id"), col("value"), k).as("vals"))
-      .filter(size(col("vals")) === k)
-      // topKBy emits newest-first; the predictor wants chronological
-      .select(col("event_type"), predictUdf(reverse(col("vals"))).as("predicted"))
-      .orderBy(col("event_type"))
-  }
-
-  /** M2 — batch inference over every stride-1 length-k window (reference
-    * `make_predictions`, `batch_processor.py:88-101`): one prediction per
-    * complete window, fully distributed. */
-  def predictAllWindows(s: SparkSession, d: String, k: Int = 60,
-      predictor: Predictor = LinearPredictor): DataFrame = {
-    val predictUdf = udf((xs: Seq[Double]) => predictor.predict(xs))
-    val frame = Window.partitionBy(col("event_type"))
-      .orderBy(col("ts"), col("event_id")).rowsBetween(-(k - 1), 0)
-    Tables.events(s, d)
-      .select(col("event_id"), col("event_type"),
-        collect_list(col("value")).over(frame).as("w"))
-      .filter(size(col("w")) === k)
-      .select(col("event_id"), col("event_type"),
-        predictUdf(col("w")).as("predicted"))
-      .orderBy(col("event_id"))
-  }
 }

@@ -42,20 +42,10 @@ object Windows {
   }
 
   /** W1 — last-k lookback stats per series (reference `prices[-5:]`,
-    * `stream_consumer.py:51`), TWO-PHASE: a bounded top-k custom
-    * aggregate ([[graft.functions.TopKByAgg]]) reduces each map task's
-    * slice to k values before the shuffle (partial aggregation), so only
-    * k×partitions tiny buffers move and no task ever sorts a whole
-    * series — the window formulation (`row_number` over
-    * `partitionBy(event_type)`) funnels every row of a hot series
-    * through one sorting task at scale. The k survivors then explode
-    * into the exact decimal-routed stats the oracle states. */
-  def lastKStats(s: SparkSession, d: String, k: Int = 5): DataFrame = {
-    import graft.functions.Native
-    Native.register(s)
-    Tables.events(s, d)
-      .groupBy(col("event_type"))
-      .agg(Native.topKBy(col("ts"), col("event_id"), col("value"), k).as("vals"))
+    * `stream_consumer.py:51`): the two-phase [[Predict.lastK]] survivors
+    * explode into the exact decimal-routed stats the oracle states. */
+  def lastKStats(s: SparkSession, d: String, k: Int = 5): DataFrame =
+    Predict.lastK(Tables.events(s, d), k)
       .select(col("event_type"), explode(col("vals")).as("value"))
       .groupBy(col("event_type"))
       .agg(
@@ -64,7 +54,6 @@ object Windows {
         max(col("value")).as("max_lastk"),
         count(lit(1)).as("n"))
       .orderBy(col("event_type"))
-  }
 
   /** W2 — stride-1 sliding windows of length k per series (reference
     * `batch_processor.py:89-97`, k=60). Emits per-window frame stats, not

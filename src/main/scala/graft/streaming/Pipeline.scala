@@ -60,7 +60,21 @@ object Pipeline {
       Tables.events(s, d)
         .repartition(4)
         .write.mode("overwrite").parquet(out)
+      // the 4 files are written concurrently: arrive in part-file order
+      pinArrivalOrder(new java.io.File(out).listFiles().toSeq
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .sortBy(_.getName).map(_.toPath))
       out
+    }
+
+  /** Pins a staged replay's micro-batch composition: the file source
+    * takes files oldest first, so `files` get strictly increasing
+    * modification times in their given order. Left as written, which
+    * files form micro-batch 0 can change from one staging to the next. */
+  private def pinArrivalOrder(files: Seq[java.nio.file.Path]): Unit =
+    files.zipWithIndex.foreach { case (f, i) =>
+      Files.setLastModifiedTime(f,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
 
   /** Default 2 files/trigger: the 4-file staged replay then drains in 2
@@ -108,8 +122,7 @@ object Pipeline {
     * drain terminates instead of holding it forever. Consumers keep the
     * heartbeats upstream of the watermark node and filter them before
     * any aggregate (user_id = -1 marks them). File order is pinned by
-    * explicit modification times (the file source processes oldest
-    * first). */
+    * [[pinArrivalOrder]]. */
   def prestageOrdered(s: SparkSession, d: String): String =
     Tables.artifact(s, d, Seq("events"), "prestageOrdered") {
       val out = graft.Tuning.fastTmpDir("graft_osrc_")
@@ -150,7 +163,7 @@ object Pipeline {
             -1L, "heartbeat", 0.0, null.asInstanceOf[String])),
           Tables.eventsSchema)
       }
-      (slices ++ heartbeats).zipWithIndex.foreach { case (df, i) =>
+      pinArrivalOrder((slices ++ heartbeats).zipWithIndex.map { case (df, i) =>
         val stage = graft.Tuning.fastTmpDir("graft_oslice_")
         df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
         val part = scala.util.Using.resource(Files.list(stage)) {
@@ -159,9 +172,8 @@ object Pipeline {
         val target = out.resolve(f"$i%02d.parquet")
         Files.move(part, target)
         graft.Tuning.dropTmpDir(stage)
-        Files.setLastModifiedTime(target,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
+        target
+      })
       out.toString
     }
 
@@ -358,22 +370,11 @@ object Pipeline {
     }
   }
 
-  def streamPipeline(s: SparkSession, d: String): DataFrame = {
-    val sinkDir = drainGroup(s, d)("pipeline")
-    // M1 parity on the persisted table: last-5 lookback prediction per
-    // series, computed as one distributed plan (no driver collect) via
-    // the bounded top-k aggregate (two-phase, partial-aggregating — see
-    // Windows.lastKStats)
-    graft.functions.Native.register(s)
-    val predictUdf = udf((xs: Seq[Double]) => Predict.LinearPredictor.predict(xs))
-    s.read.parquet(sinkDir)
-      .groupBy(col("event_type"))
-      .agg(graft.functions.Native.topKBy(col("ts"), col("event_id"),
-        col("value"), 5).as("vals"))
-      .filter(size(col("vals")) === 5)
-      .select(col("event_type"), predictUdf(reverse(col("vals"))).as("predicted"))
-      .orderBy(col("event_type"))
-  }
+  /** M1 parity on the persisted table: the batch last-5 prediction
+    * ([[Predict.predictNext]]) over the drained sink — a stream's result
+    * is the batch query over the same input (prefix consistency). */
+  def streamPipeline(s: SparkSession, d: String): DataFrame =
+    Predict.predictNext(s.read.parquet(drainGroup(s, d)("pipeline")), 5)
 
   /** Generalized event-time windowed aggregation (T3/T4 — absent in the
     * reference, standard Spark streaming surface): tumbling daily

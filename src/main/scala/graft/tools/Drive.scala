@@ -109,27 +109,17 @@ object Drive {
     val (sinkDir, _) = graft.streaming.Pipeline.solo(spark, echo = true)(
       graft.streaming.Pipeline.drain(ticks, "append", "graft_e2e_sink_")((b, dir, _) =>
         graft.sources.Sinks.parquetAppend(b, dir)))
-    // batch path: stride-1 windows over the persisted table, batched
-    // GRU inference, per-symbol summary
-    val raw = spark.read.parquet(sinkDir)
+    // batch path: stride-1 windows over the persisted table (each keyed
+    // by its tick's timestamp), batched GRU inference, per-symbol summary
     val frame = org.apache.spark.sql.expressions.Window
       .partitionBy(col("symbol")).orderBy(col("timestamp"))
       .rowsBetween(-59, 0)
-    import spark.implicits._
-    val wins = raw
-      .select(col("symbol"), collect_list(col("price")).over(frame).as("w"))
+    val wins = spark.read.parquet(sinkDir)
+      .select(unix_micros(col("timestamp")).as("ts_us"), col("symbol"),
+        collect_list(col("price")).over(frame).as("w"))
       .filter(size(col("w")) === 60)
-      .as[(String, Array[Double])]
-    val bc = spark.sparkContext.broadcast(
-      new graft.ops.Predict.GruPredictor(): graft.ops.Predict.Predictor)
-    val preds = wins.mapPartitions { it =>
-      val p = bc.value; p.prepare()
-      it.grouped(1024).flatMap { chunk =>
-        chunk.iterator.zip(p.predictBatch(chunk.map(_._2).toArray).iterator)
-          .map { case ((sym, _), pr) => (sym, pr) }
-      }
-    }.toDF("symbol", "predicted")
-    preds.groupBy(col("symbol"))
+    graft.ops.Predict.inferBatched(wins, graft.ops.Predict.seededGru)
+      .groupBy(col("symbol"))
       .agg(count(lit(1)).as("n_windows"), avg(col("predicted")).as("avg_pred"))
       .orderBy(col("symbol"))
   }

@@ -92,20 +92,37 @@ class ArtifactStoreSpec extends SparkSpec {
         "instead of registering it per call:\n" + sites.mkString("\n"))
   }
 
-  test("streams are started only by Pipeline.drain and continuousFloorProbe") {
+  /** `File.scala.def` of the object-level def (2-space indent) enclosing
+    * each `mainSourceLines` site, or the site itself outside any def. */
+  private def enclosingDefs(sites: Seq[String]): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val sites = mainSourceLines("""\bwriteStream\b""".r)
-    // the object-level def (2-space indent) enclosing each site
     val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r
-    val enclosing = sites.map { site =>
+    sites.map { site =>
       val Array(path, line, _) = site.split(":", 3)
       val file = java.nio.file.Paths.get(path)
       java.nio.file.Files.readAllLines(file).asScala.take(line.toInt).reverseIterator
         .flatMap(member.findFirstMatchIn(_)).nextOption()
         .fold(site)(m => s"${file.getFileName}.${m.group(1)}")
     }
-    assert(enclosing.sorted == Seq("Pipeline.scala.continuousFloorProbe", "Pipeline.scala.drain"),
+  }
+
+  test("streams are started only by Pipeline.drain and continuousFloorProbe") {
+    val sites = mainSourceLines("""\bwriteStream\b""".r)
+    assert(enclosingDefs(sites).sorted == Seq("Pipeline.scala.continuousFloorProbe", "Pipeline.scala.drain"),
       "run a bounded drain through Pipeline.drain (and Pipeline.solo to await it alone):\n" +
         sites.mkString("\n"))
+  }
+
+  test("the events' last-k group-by is built only by Predict.lastK") {
+    val sites = mainSourceLines("""\btopKBy\(col\("ts"\),\s*col\("event_id"\)""".r)
+    assert(enclosingDefs(sites) == Seq("Predict.scala.lastK"),
+      "take each series' last k events through Predict.lastK:\n" + sites.mkString("\n"))
+  }
+
+  test("predictBatch is called only by Predict.inferBatched") {
+    val sites = mainSourceLines("""\bpredictBatch\(""".r)
+      .filterNot(_.contains("def predictBatch("))
+    assert(enclosingDefs(sites) == Seq("Predict.scala.inferBatched"),
+      "run batched inference through Predict.inferBatched:\n" + sites.mkString("\n"))
   }
 }

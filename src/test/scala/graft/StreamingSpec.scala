@@ -372,4 +372,24 @@ class StreamingSpec extends SparkSpec {
     val left = slices() -- before
     assert(left.isEmpty, s"staging dirs outlived the build: ${left.mkString(", ")}")
   }
+
+  test("prestage pins its part files' modification times, strictly increasing in name order") {
+    // the file source takes files oldest first: pinned times fix which
+    // files form each micro-batch, whatever times the concurrent write left
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    import scala.util.Using
+    val corpus = StagedFreshnessSpec.copyCorpus(Paths.get(sf))
+    val staged = Paths.get(graft.streaming.Pipeline.prestage(spark, corpus.toString))
+    val parts = Using.resource(Files.list(staged)) {
+      _.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSeq.sorted
+    }
+    assert(parts.size == 4, s"expected 4 staged part files, got ${parts.mkString(", ")}")
+    val times = parts.map(n => Files.getLastModifiedTime(staged.resolve(n)).toMillis)
+    assert(times.sliding(2).forall { case Seq(a, b) => a < b },
+      s"modification times not strictly increasing in name order: ${parts.zip(times)}")
+    assert(times == parts.indices.map(i => 1000000000000L + i * 60000L),
+      s"modification times not pinned: ${parts.zip(times)}")
+  }
 }
