@@ -757,7 +757,7 @@ object TextOps {
         .orderBy(col("token"), col("block_id")))
 
   /** STREAMING INDEX MAINTENANCE, read side (`q_stream_index`): the
-    * index drain ([[graft.streaming.Pipeline]] "index") appended one
+    * index drain ([[graft.streaming.Pipeline]] "index") published one
     * PARTIAL segment table per micro-batch of the staged hash-split
     * documents replay — batch cuts arbitrary relative to index blocks,
     * so the same (token, block) appears in several partial segments.
@@ -767,9 +767,8 @@ object TextOps {
     * merge-at-read lifecycle reproduces the single-pass build bit for
     * bit regardless of where the stream's batch boundaries fell. */
   def streamIndexMerged(s: SparkSession, d: String): DataFrame = {
-    val sinkDir = graft.streaming.Pipeline.drainGroup(s, d)("index")
     withPostingsString(
-      mergeSegments(s.read.parquet(sinkDir))
+      mergeSegments(graft.streaming.Pipeline.drainedSink(s, d, "index"))
         .orderBy(col("token"), col("block_id")))
   }
 
@@ -786,9 +785,9 @@ object TextOps {
     * the drain replays the staged corpus, so its compaction is a pure
     * function of the same snapshot. */
   private[graft] def compactedStreamSegments(s: SparkSession, d: String): DataFrame = {
-    val sinkDir = graft.streaming.Pipeline.drainGroup(s, d)("index")
+    val partials = graft.streaming.Pipeline.drainedSink(s, d, "index")
     Tables.dfArtifact(s, d, Seq("documents"), "streamCompact:v1")(
-      mergeSegments(s.read.parquet(sinkDir)))
+      mergeSegments(partials))
   }
 
   /** STREAM-SEGMENT COMPACTION, read side (`q_stream_compact`): the
@@ -936,8 +935,8 @@ object TextOps {
   def bm25FromStreamedIndex(s: SparkSession, d: String,
       queryTokens: Seq[String] = Seq("vector", "hash", "dup"),
       k: Int = 10): DataFrame = {
-    val sinkDir = graft.streaming.Pipeline.drainGroup(s, d)("index")
-    bm25FromSegments(s, d, mergeSegments(s.read.parquet(sinkDir)),
+    bm25FromSegments(s, d,
+      mergeSegments(graft.streaming.Pipeline.drainedSink(s, d, "index")),
       queryTokens, k)
   }
 

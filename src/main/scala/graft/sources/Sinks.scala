@@ -11,6 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * parquet stand-ins; the Kafka/JDBC constructors below carry the exact
   * production configuration and activate when the standard connector
   * jars (spark-sql-kafka-0-10, a JDBC driver) are on the classpath.
+  * The parquet sinks are exactly-once in contents (one batch-keyed
+  * overwrite); the JDBC append is at-least-once, like the reference's.
   */
 object Sinks {
 
@@ -36,46 +38,34 @@ object Sinks {
     "user" -> user,
     "password" -> password)
 
-  /** S2 stand-in used by the streaming pipeline: append-mode parquet
-    * "raw tick table" (same append-only, at-least-once semantics as the
-    * reference's JDBC append). */
-  def parquetAppend(df: DataFrame, dir: String): Unit =
-    df.write.mode("append").parquet(dir)
+  /** THE parquet write of every stream micro-batch, IDEMPOTENT per batch
+    * id: the batch overwrites its own `batch_id=N` partition dir under
+    * `dir`. foreachBatch is at-least-once — a batch that fails before its
+    * commit replays under the same id — and a plain append would then
+    * duplicate its rows silently; keyed by batch id, the retry overwrites
+    * its own previous attempt, so the store converges to exactly-once
+    * CONTENTS (*Structured Streaming*, SIGMOD 2018, §6: replayable source
+    * plus a sink idempotent per batch id). Readers see `batch_id` as a
+    * partition column. A `dir` that already is the batch's partition (a
+    * caller keying its own dir per batch) is written in place: a nested
+    * `batch_id=N/batch_id=N` would make the table unreadable. */
+  def parquetBatchOverwrite(batch: DataFrame, dir: String, batchId: Long): Unit = {
+    val part = s"batch_id=$batchId"
+    batch.write.mode("overwrite")
+      .parquet(if (dir.endsWith(s"/$part")) dir else s"$dir/$part")
+  }
 
-  /** IDEMPOTENT per-batch segment publish: each micro-batch writes its
-    * whole output under a batch-id-named partition directory with
-    * overwrite semantics. foreachBatch is at-least-once — a failed
-    * commit replays the batch — and a plain append would then duplicate
-    * the batch's rows silently (for the index drain: doubled tf counts
-    * after the segment merge). Keying the directory by batch id makes
-    * the retry overwrite its own previous attempt instead: the store
-    * converges to exactly-once CONTENTS under any number of replays,
-    * the same idempotent-overwrite trick Spark's own file sink plays
-    * with its per-batch manifest. Readers list the store root; the
-    * `batch_id=N` layout surfaces as an ordinary partition column they
-    * are free to ignore. */
-  def parquetBatchOverwrite(batch: DataFrame, dir: String, batchId: Long): Unit =
-    batch.write.mode("overwrite").parquet(s"$dir/batch_id=$batchId")
-
-  /** Streaming UPSERT over an append-only store, as a write/read pair:
-    * [[upsertAppend]] logs each micro-batch's changed rows with the
-    * batch id (executor-side append — nothing materializes on the
-    * driver); [[readLatest]] compacts latest-wins per key at read time.
-    * This is the standard keyed-sink pattern when the store can't update
-    * in place (parquet/object storage): an update-mode stream writes
-    * only the rows a batch touched, and any reader reconstructs current
-    * state. Used by the update-mode drains and the stateful emission
-    * log; replay-safe because re-appending a batch rewrites the same
-    * (key, batch_id) verdicts. */
-  def upsertAppend(batch: DataFrame, dir: String, batchId: Long): Unit =
-    parquetAppend(batch.withColumn("batch_id",
-      org.apache.spark.sql.functions.lit(batchId)), dir)
-
-  def readLatest(s: SparkSession, dir: String, keys: Seq[String]): DataFrame = {
+  /** Streaming UPSERT, read side: an update-mode drain writes only the
+    * rows a micro-batch changed, each batch under its own batch id
+    * ([[parquetBatchOverwrite]]), and this compacts the log latest-wins
+    * per key — the standard keyed-sink pattern when the store can't
+    * update in place (parquet/object storage). `rows` carry the
+    * `batch_id` column; the result drops it. */
+  def readLatest(rows: DataFrame, keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     val latest = Window.partitionBy(keys.map(col): _*).orderBy(col("batch_id").desc)
-    s.read.parquet(dir)
+    rows
       .withColumn("rn", row_number().over(latest))
       .filter(col("rn") === 1)
       .drop("rn", "batch_id")
@@ -92,16 +82,16 @@ object Sinks {
       .mode("append")
       .save()
 
-  /** S3 — the reference's manual JDBC pushdown subquery
-    * (`batch_processor.py:72-79`): sort+limit executed inside the
-    * database. Kept for API parity; on parquet the same plan shape comes
-    * from `orderBy(desc).limit(n)` via Catalyst's TakeOrderedAndProject
-    * (see ops.Relational.orderByLimit). */
   /** The pushdown subquery [[jdbcTopK]] sends as `dbtable` — exposed so
     * the spec can pin its shape against `batch_processor.py:72-79`. */
   def jdbcTopKSubquery(table: String, tsCol: String, limit: Int): String =
     s"(SELECT * FROM $table ORDER BY $tsCol DESC LIMIT $limit) AS tmp"
 
+  /** S3 — the reference's manual JDBC pushdown subquery
+    * (`batch_processor.py:72-79`): sort+limit executed inside the
+    * database. Kept for API parity; on parquet the same plan shape comes
+    * from `orderBy(desc).limit(n)` via Catalyst's TakeOrderedAndProject
+    * (see ops.Relational.orderByLimit). */
   def jdbcTopK(s: SparkSession, url: String, table: String, tsCol: String,
       limit: Int, user: String, password: String): DataFrame =
     s.read.format("jdbc")

@@ -14,12 +14,12 @@ import org.apache.spark.sql.types.StringType
   * bootstrap `localhost:9092` — `stream_consumer.py:89-93`) and
   * MySQL-over-JDBC out (`stream_consumer.py:61-69`). This sandbox has
   * neither broker nor database, so the DEFAULT implementations replay
-  * staged parquet and append parquet — semantically equivalent
-  * (append-only, at-least-once) and exercised by the whole streaming
-  * suite; the Kafka/JDBC implementations below compile against the
-  * standard Spark option surface and activate by setting the conf keys,
-  * with the connector jars (spark-sql-kafka-0-10, a JDBC driver) on the
-  * production classpath.
+  * staged parquet and write parquet, exercised by the whole streaming
+  * suite; that sink is exactly-once in contents, the JDBC one
+  * at-least-once like the reference's. The Kafka/JDBC implementations
+  * below compile against the standard Spark option surface and activate
+  * by setting the conf keys, with the connector jars
+  * (spark-sql-kafka-0-10, a JDBC driver) on the production classpath.
   */
 trait TickSource {
   /** A STREAMING DataFrame of tick rows in the engine's event schema
@@ -57,21 +57,24 @@ final case class KafkaTickSource(bootstrap: String, topic: String,
 }
 
 trait TickSink {
-  /** Append one micro-batch of raw tick rows (S2: the reference's
-    * at-least-once tick-table insert). Called from foreachBatch. */
+  /** Add one micro-batch of raw tick rows to the tick table (S2: the
+    * reference's tick-table insert). Called from foreachBatch, which
+    * replays a batch that failed before its commit under the same id. */
   def append(batch: DataFrame, batchId: Long): Unit
 }
 
-/** Default sink: append-mode parquet "raw tick table". */
+/** Default sink: the parquet "raw tick table" under `dir`, one
+  * `batch_id=N` partition per micro-batch ([[Sinks.parquetBatchOverwrite]]):
+  * a replayed batch overwrites its previous attempt, so every tick lands once. */
 final case class ParquetTickSink(dir: String) extends TickSink {
   def append(batch: DataFrame, batchId: Long): Unit =
-    Sinks.parquetAppend(batch, dir)
+    Sinks.parquetBatchOverwrite(batch, dir, batchId)
 }
 
 /** The reference's JDBC append sink (MySQL
-  * `stock_prediction.stock_ticks_raw`). Same at-least-once semantics
-  * under retries as the reference (no transactional sink there either —
-  * SURVEY T8). */
+  * `stock_prediction.stock_ticks_raw`). AT-LEAST-ONCE under retries,
+  * exactly like the reference (no transactional sink there either —
+  * SURVEY T8): a replayed batch inserts its rows again. */
 final case class JdbcTickSink(url: String, table: String,
     user: String, password: String) extends TickSink {
   def append(batch: DataFrame, batchId: Long): Unit =

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.Tables
 import graft.ops.{Aggregates, Predict}
+import graft.sources.Sinks
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,10 +15,12 @@ import org.apache.spark.sql.types._
   * micro-batch appends raw rows to MySQL and predicts from the batch's
   * last 5 prices (`stream_consumer.py:56-103`). Sandbox transports:
   * file-stream source over the events parquet (same schema discipline),
-  * parquet append sink for the raw-tick table. Semantics preserved:
-  * append output mode, stateless per-batch prediction (T5 parity),
-  * checkpointing added (T8 — the reference has none; JDBC append there
-  * is at-least-once, parquet append here is too).
+  * parquet sink for the raw-tick table. Semantics preserved: append
+  * output mode, stateless per-batch prediction (T5 parity),
+  * checkpointing added (T8 — the reference has none). The reference's
+  * JDBC append is at-least-once; every parquet sink here writes each
+  * micro-batch through one batch-keyed overwrite, so a replayed batch
+  * leaves exactly-once contents.
   */
 object Pipeline {
 
@@ -250,6 +253,24 @@ object Pipeline {
   def drainGroup(s: SparkSession, d: String): Map[String, String] =
     drained(s, d).sinks
 
+  /** THE read of a drained sink: group drain `name`'s rows ([[readSink]]). */
+  private[graft] def drainedSink(s: SparkSession, d: String, name: String,
+      batchIds: Boolean = false): DataFrame =
+    readSink(s, drainGroup(s, d)(name), batchIds)
+
+  /** The rows of the sink at `dir`. Each micro-batch is its own
+    * `batch_id=N` dir ([[Sinks.parquetBatchOverwrite]]), which partition
+    * discovery reads as a trailing `int` column: with `batchIds` it stays
+    * there as the bigint that [[Sinks.readLatest]] and the stateful
+    * emission log order by, otherwise it is dropped, so the sink reads
+    * back with exactly the drained query's schema. */
+  private[graft] def readSink(s: SparkSession, dir: String,
+      batchIds: Boolean = false): DataFrame = {
+    val rows = s.read.parquet(dir)
+    if (batchIds) rows.withColumn("batch_id", col("batch_id").cast(LongType))
+    else rows.drop("batch_id")
+  }
+
   private def drained(s: SparkSession, d: String): DrainGroup =
     Tables.artifact(s, d, Seq("events", "documents"), "drainGroup", Tables.Iteration)(
       runDrainGroup(s, d))
@@ -294,11 +315,12 @@ object Pipeline {
     * calls `write(batch, sinkDir, batchId)`. foreachBatch is
     * at-least-once — a batch that fails before its commit replays under
     * the same id from the offset WAL — so exactly-once CONTENTS come
-    * from the sink: an idempotent `write` (Sinks.parquetBatchOverwrite,
-    * Sinks.upsertAppend read through readLatest) converges under replay
-    * (StreamingSpec T8 crashes this path at both sides of the write).
-    * `checkpoint` defaults to a fresh dir; T8 passes a fixed one to
-    * restart a crashed drain from its offsets. */
+    * from the sink: every engine drain writes through the idempotent
+    * Sinks.parquetBatchOverwrite (directly, or through
+    * TickTransport.sink), which converges under replay; StreamingSpec T8
+    * crashes this path at both sides of the write. `checkpoint`
+    * defaults to a fresh dir; T8 passes a fixed one to restart a crashed
+    * drain from its offsets. */
   private[graft] def drain(stream: DataFrame, mode: String, sinkPrefix: String,
       checkpoint: String = tmp("graft_ckpt_"))(
       write: (DataFrame, String, Long) => Unit): (String, StreamingQuery) = {
@@ -310,10 +332,6 @@ object Pipeline {
       .start()
     (sinkDir, q)
   }
-
-  /** [[drain]]'s write for the plain append sinks (batch id unused). */
-  private val appendBatch: (DataFrame, String, Long) => Unit =
-    (batch, sinkDir, _) => graft.sources.Sinks.parquetAppend(batch, sinkDir)
 
   /** Runs one drain ALONE, outside the group: its own listener (echoing
     * one line per micro-batch when `echo`), awaited to completion.
@@ -374,15 +392,15 @@ object Pipeline {
     * ([[Predict.predictNext]]) over the drained sink — a stream's result
     * is the batch query over the same input (prefix consistency). */
   def streamPipeline(s: SparkSession, d: String): DataFrame =
-    Predict.predictNext(s.read.parquet(drainGroup(s, d)("pipeline")), 5)
+    Predict.predictNext(drainedSink(s, d, "pipeline"), 5)
 
   /** Generalized event-time windowed aggregation (T3/T4 — absent in the
     * reference, standard Spark streaming surface): tumbling daily
     * count+sum per event_type with a watermark. Oracle-equivalent to a
     * date_trunc GROUP BY over the same data.
     *
-    * Sink shape (scale-critical): update-mode foreachBatch appending the
-    * changed windows of each micro-batch to parquet with the batch id,
+    * Sink shape (scale-critical): update-mode foreachBatch publishing the
+    * changed windows of each micro-batch to parquet under its batch id,
     * compacted latest-wins on read. A complete/memory sink would
     * materialize the FULL aggregate on the driver every batch — a
     * driver-side cliff once days×series stops being tiny; the update log
@@ -404,7 +422,7 @@ object Pipeline {
         sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("total"))
       .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("n"), col("total"))
-    drain(agg, "update", "graft_evw_")(graft.sources.Sinks.upsertAppend)
+    drain(agg, "update", "graft_evw_")(Sinks.parquetBatchOverwrite)
   }
 
   /** STREAMING DRIFT MONITOR (the drift family's production shape):
@@ -429,13 +447,12 @@ object Pipeline {
       .agg(count(lit(1)).as("n"))
       .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("bin"), col("n"))
-    drain(agg, "update", "graft_drm_")(graft.sources.Sinks.upsertAppend)
+    drain(agg, "update", "graft_drm_")(Sinks.parquetBatchOverwrite)
   }
 
   def streamDrift(s: SparkSession, d: String): DataFrame = {
-    val sinkDir = drainGroup(s, d)("drift")
-    val counts = graft.sources.Sinks
-      .readLatest(s, sinkDir, Seq("day", "event_type", "bin"))
+    val counts = Sinks.readLatest(drainedSink(s, d, "drift", batchIds = true),
+        Seq("day", "event_type", "bin"))
       .select(col("day"), col("event_type"), col("bin"), col("n"))
     // dense 10-bin frame per DRAINED (day, series): a bin no event hit
     // still contributes its smoothed term, exactly like the batch PSI
@@ -460,15 +477,12 @@ object Pipeline {
       .orderBy(col("day"), col("event_type"))
   }
 
-  def eventTimeWindow(s: SparkSession, d: String): DataFrame = {
-    val sinkDir = drainGroup(s, d)("event_window")
+  def eventTimeWindow(s: SparkSession, d: String): DataFrame =
     // latest-wins compaction: the final value of each window key is its
-    // last emitted update (the streaming-upsert read path for an
-    // append-only sink — see Sinks.upsertAppend/readLatest)
-    graft.sources.Sinks.readLatest(s, sinkDir, Seq("day", "event_type"))
+    // last emitted update (the streaming-upsert read path, Sinks.readLatest)
+    Sinks.readLatest(drainedSink(s, d, "event_window", batchIds = true), Seq("day", "event_type"))
       .select(col("day"), col("event_type"), col("n"), col("total"))
       .orderBy(col("day"), col("event_type"))
-  }
 
   /** SLIDING event-time window (1-day width, 12-hour slide): each event
     * lands in exactly width/slide = 2 overlapping windows, maintained
@@ -488,15 +502,13 @@ object Pipeline {
         sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("total"))
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
         col("event_type"), col("n"), col("total"))
-    drain(agg, "update", "graft_slw_")(graft.sources.Sinks.upsertAppend)
+    drain(agg, "update", "graft_slw_")(Sinks.parquetBatchOverwrite)
   }
 
-  def slidingEventWindow(s: SparkSession, d: String): DataFrame = {
-    val sinkDir = drainGroup(s, d)("sliding")
-    graft.sources.Sinks.readLatest(s, sinkDir, Seq("win_start", "event_type"))
+  def slidingEventWindow(s: SparkSession, d: String): DataFrame =
+    Sinks.readLatest(drainedSink(s, d, "sliding", batchIds = true), Seq("win_start", "event_type"))
       .select(col("win_start"), col("event_type"), col("n"), col("total"))
       .orderBy(col("win_start"), col("event_type"))
-  }
 
   /** STREAMING merging session windows (T5 — the native session_window
     * operator under streaming state), in APPEND mode: a session emits
@@ -521,15 +533,13 @@ object Pipeline {
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), unix_micros(col("sw.start")).as("start_us"),
         unix_micros(col("sw.end")).as("end_us"), col("n_events"))
-    drain(agg, "append", "graft_ssw_")(appendBatch)
+    drain(agg, "append", "graft_ssw_")(Sinks.parquetBatchOverwrite)
   }
 
-  def streamSessionWindows(s: SparkSession, d: String): DataFrame = {
-    val sinkDir = drainGroup(s, d)("session")
-    s.read.parquet(sinkDir)
+  def streamSessionWindows(s: SparkSession, d: String): DataFrame =
+    drainedSink(s, d, "session")
       .filter(col("user_id") >= 0)              // drop the heartbeat sessions
       .orderBy(col("user_id"), col("start_us"))
-  }
 
   /** Stream-stream LEFT OUTER interval join: purchases with their
     * same-user clicks of the preceding hour, null-extended when no
@@ -570,15 +580,13 @@ object Pipeline {
         col("c_ts") <= col("p_ts"),
       "left_outer")
       .select(col("p_id"), col("c_id"), col("click_value"))
-    drain(joined, "append", "graft_soj_")(appendBatch)
+    drain(joined, "append", "graft_soj_")(Sinks.parquetBatchOverwrite)
   }
 
-  def streamOuterJoin(s: SparkSession, d: String): DataFrame = {
-    val sinkDir = drainGroup(s, d)("outer_join")
-    s.read.parquet(sinkDir)
+  def streamOuterJoin(s: SparkSession, d: String): DataFrame =
+    drainedSink(s, d, "outer_join")
       .filter(col("p_id") >= 0)                 // drop the heartbeat pairs
       .orderBy(col("p_id"), col("c_id"))
-  }
 
   /** Streaming VWAP — [[graft.ops.Market.vwap]] as an event-time
     * windowed streaming aggregate: the same (symbol, day) grain, the
@@ -601,16 +609,14 @@ object Pipeline {
         sum(col("value").cast(DecimalType(18, 2)) * col("k")).as("pv"))
       .select(col("symbol"), date_format(col("w.start"), "yyyy-MM-dd").as("day"),
         col("size_sum"), col("pv"))
-    drain(agg, "update", "graft_svwap_")(graft.sources.Sinks.upsertAppend)
+    drain(agg, "update", "graft_svwap_")(Sinks.parquetBatchOverwrite)
   }
 
-  def streamingVwap(s: SparkSession, d: String): DataFrame = {
-    val sinkDir = drainGroup(s, d)("vwap")
-    graft.sources.Sinks.readLatest(s, sinkDir, Seq("symbol", "day"))
+  def streamingVwap(s: SparkSession, d: String): DataFrame =
+    Sinks.readLatest(drainedSink(s, d, "vwap", batchIds = true), Seq("symbol", "day"))
       .select(col("symbol"), col("day"), col("size_sum"),
         (col("pv").cast(DoubleType) / col("size_sum").cast(DoubleType)).as("vwap"))
       .orderBy(col("symbol"), col("day"))
-  }
 
   /** Stream–static enrichment join: each micro-batch broadcast-joins a
     * STATIC dimension (here a deterministic per-type weight table —
@@ -629,16 +635,14 @@ object Pipeline {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 2)) * col("weight")).as("wsum"))
-    drain(agg, "update", "graft_senrich_")(graft.sources.Sinks.upsertAppend)
+    drain(agg, "update", "graft_senrich_")(Sinks.parquetBatchOverwrite)
   }
 
-  def streamEnrich(s: SparkSession, d: String): DataFrame = {
-    val sinkDir = drainGroup(s, d)("enrich")
-    graft.sources.Sinks.readLatest(s, sinkDir, Seq("event_type"))
+  def streamEnrich(s: SparkSession, d: String): DataFrame =
+    Sinks.readLatest(drainedSink(s, d, "enrich", batchIds = true), Seq("event_type"))
       .select(col("event_type"), col("n"),
         col("wsum").cast(DoubleType).as("weighted_sum"))
       .orderBy(col("event_type"))
-  }
 
   /** Streaming deduplication: dropDuplicates over the key columns with
     * state kept across micro-batches — the streaming face of the
@@ -650,16 +654,14 @@ object Pipeline {
     val keys = eventsStream(s, d)
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
-    // executor-side parquet append — a memory sink would funnel every
-    // first-seen key through the driver (the scale cliff the other
-    // drains already avoid)
-    drain(keys, "append", "graft_ddsink_")(appendBatch)
+    // executor-side parquet sink, one batch-keyed overwrite per
+    // micro-batch — a memory sink would funnel every first-seen key
+    // through the driver (the scale cliff the other drains already avoid)
+    drain(keys, "append", "graft_ddsink_")(Sinks.parquetBatchOverwrite)
   }
 
-  def streamDedup(s: SparkSession, d: String): DataFrame = {
-    val sinkDir = drainGroup(s, d)("dedup")
-    s.read.parquet(sinkDir).orderBy(col("user_id"), col("event_type"))
-  }
+  def streamDedup(s: SparkSession, d: String): DataFrame =
+    drainedSink(s, d, "dedup").orderBy(col("user_id"), col("event_type"))
 
   /** Streaming dedup with WATERMARK-BOUNDED state
     * (`dropDuplicatesWithinWatermark`) — the form that actually survives
@@ -678,13 +680,11 @@ object Pipeline {
       .select(col("user_id"), col("event_type"), col("ts"))
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"))
-    drain(keys, "append", "graft_ddwsink_")(appendBatch)
+    drain(keys, "append", "graft_ddwsink_")(Sinks.parquetBatchOverwrite)
   }
 
-  def streamDedupBounded(s: SparkSession, d: String): DataFrame = {
-    val sinkDir = drainGroup(s, d)("dedup_wm")
-    s.read.parquet(sinkDir).orderBy(col("user_id"), col("event_type"))
-  }
+  def streamDedupBounded(s: SparkSession, d: String): DataFrame =
+    drainedSink(s, d, "dedup_wm").orderBy(col("user_id"), col("event_type"))
 
   /** Stream-STREAM interval join (T4/T6 extension — the remaining core
     * Structured Streaming surface): purchases joined to the same user's
@@ -714,13 +714,11 @@ object Pipeline {
         col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("c_ts") <= col("p_ts"))
       .select(col("p_id"), col("c_id"), col("click_value"))
-    drain(joined, "append", "graft_ssj_")(appendBatch)
+    drain(joined, "append", "graft_ssj_")(Sinks.parquetBatchOverwrite)
   }
 
-  def streamStreamJoin(s: SparkSession, d: String): DataFrame = {
-    val sinkDir = drainGroup(s, d)("ss_join")
-    s.read.parquet(sinkDir).orderBy(col("p_id"), col("c_id"))
-  }
+  def streamStreamJoin(s: SparkSession, d: String): DataFrame =
+    drainedSink(s, d, "ss_join").orderBy(col("p_id"), col("c_id"))
 
   /** Staged 4-file DOCUMENTS replay for the streaming-index drain
     * (staged once per documents fingerprint, like [[prestage]]): hash-split, so
@@ -736,7 +734,7 @@ object Pipeline {
 
   /** STREAMING INDEX MAINTENANCE drain: each micro-batch of documents
     * builds its PARTIAL segment table (token, block_id, sorted plist —
-    * [[graft.ops.TextOps.partialSegments]]) and appends it to the
+    * [[graft.ops.TextOps.partialSegments]]) and adds it to the
     * segment store, executor-side. This is the ingestion half of the
     * production index lifecycle: writers append small sorted segments
     * per batch (the Lucene flush), and readers merge at read
@@ -745,7 +743,7 @@ object Pipeline {
     * merge restores the single-pass build bit for bit REGARDLESS of
     * where the batch cuts fell. 2-file triggers: 2 micro-batches, each
     * a genuine partial index. Each batch publishes through the
-    * IDEMPOTENT batch-keyed overwrite ([[graft.sources.Sinks.parquetBatchOverwrite]]):
+    * IDEMPOTENT batch-keyed overwrite ([[Sinks.parquetBatchOverwrite]]):
     * foreachBatch is at-least-once, and with a plain append a replayed
     * batch would silently double its segments' tf counts after the
     * merge — the r16 ADVICE item; the batch-id-keyed directory makes a
@@ -755,13 +753,13 @@ object Pipeline {
     val docs = s.readStream.schema(s.read.parquet(staged).schema)
       .option("maxFilesPerTrigger", "2").parquet(staged)
     drain(docs, "append", "graft_idxsink_") { (batch, sinkDir, batchId) =>
-      graft.sources.Sinks.parquetBatchOverwrite(
+      Sinks.parquetBatchOverwrite(
         graft.ops.TextOps.partialSegments(batch), sinkDir, batchId)
     }
   }
 
   /** T7 — a driven stream instrumented with [[GraftQueryListener]]:
-    * appends the parsed events to a parquet sink while the listener
+    * writes the parsed events to a parquet sink while the listener
     * captures one metrics row per micro-batch (rows/latency) off the
     * listener bus — zero instrumentation cost inside the streaming plan.
     * In the group, the SHARED listener captures this drain's progress
@@ -773,7 +771,7 @@ object Pipeline {
     * contract. */
   private def launchMetricsAppend(s: SparkSession, d: String): (String, StreamingQuery) =
     drain(eventsStream(s, d).select(col("event_id"), col("event_type"), col("value")),
-      "append", "graft_msink_")(appendBatch)
+      "append", "graft_msink_")(Sinks.parquetBatchOverwrite)
 
   def streamWithMetrics(s: SparkSession, d: String,
       echo: Boolean = false): DataFrame =
@@ -803,7 +801,7 @@ object Pipeline {
     * at 10 msg/s — timer at `stream_consumer.py:57,77-78`): replays
     * nBatches files of ~rowsPerBatch time-ordered events one file per
     * trigger, doing the reference's per-batch work in foreachBatch —
-    * append the raw batch (its JDBC insert) plus the last-5 collect and
+    * write the raw batch (its JDBC insert) plus the last-5 collect and
     * linear predict (its per-batch prediction) — and returns the
     * listener's per-batch metrics table. Runs SOLO (own listener, never
     * through the group) so each batch's wall latency is uncontended,
@@ -823,8 +821,8 @@ object Pipeline {
     val ticks = s.readStream.schema(Tables.eventsSchema)
       .option("maxFilesPerTrigger", "1").parquet(src)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    solo(s)(drain(ticks, "append", "graft_lat_sink_") { (batch, sinkDir, _) =>
-      graft.sources.Sinks.parquetAppend(batch, sinkDir)
+    solo(s)(drain(ticks, "append", "graft_lat_sink_") { (batch, sinkDir, batchId) =>
+      Sinks.parquetBatchOverwrite(batch, sinkDir, batchId)
       // the reference's per-batch predict: ORDER BY ts DESC LIMIT 5,
       // driver-side collect, one forward pass (stream_consumer.py:51,75)
       val last5 = batch.orderBy(col("ts").desc).limit(5)
@@ -911,6 +909,26 @@ object Pipeline {
     (cnt, if (cnt == 0) -1.0 else sum.toDouble / cnt)
     }
 
+  /** The drained sink is shared by BOTH q_stateful_predict and
+    * q_stateful_final (which only post-processes the same emission
+    * log): at the default k it rides the drain group; other k values
+    * drain standalone into a per-(corpus, k) [[Tables.Iteration]] entry. */
+  val DefaultLastK = 5
+
+  def statefulPredictions(s: SparkSession, d: String, k: Int = DefaultLastK): DataFrame = {
+    val emissions =
+      if (k == DefaultLastK) drainedSink(s, d, "stateful", batchIds = true)
+      else readSink(s, Tables.artifact(s, d, Seq("events"), ("statefulSink", k), Tables.Iteration)(
+        solo(s)(launchStateful(s, d, k))._1), batchIds = true)
+    emissions.orderBy(col("event_type"), col("batch_id"))
+  }
+
+  // executor-side sink like every other drain here; its batch id
+  // partition identifies the FINAL emission per series (statefulFinal)
+  private def launchStateful(s: SparkSession, d: String, k: Int): (String, StreamingQuery) =
+    drain(lastKEmissions(eventsStream(s, d), k), "append", "graft_stsink_")(
+      Sinks.parquetBatchOverwrite)
+
   /** Stateful streaming (T5 extension, explicitly beyond parity — the
     * reference is stateless per batch): carry the last-k prices per
     * series across micro-batches with flatMapGroupsWithState so every
@@ -925,27 +943,14 @@ object Pipeline {
     * the keyed merge, the state after the final batch is exactly the
     * global event-time last-k — so the last emission per series equals
     * the batch last-k prediction, which is what gives
-    * [[statefulFinal]] its DuckDB oracle. */
-  /** The drained sink is shared by BOTH q_stateful_predict and
-    * q_stateful_final (which only post-processes the same emission
-    * log): at the default k it rides the drain group; other k values
-    * drain standalone into a per-(corpus, k) [[Tables.Iteration]] entry. */
-  val DefaultLastK = 5
-
-  def statefulPredictions(s: SparkSession, d: String, k: Int = DefaultLastK): DataFrame = {
-    val sinkDir =
-      if (k == DefaultLastK) drainGroup(s, d)("stateful")
-      else Tables.artifact(s, d, Seq("events"), ("statefulSink", k), Tables.Iteration)(
-        solo(s)(launchStateful(s, d, k))._1)
-    s.read.parquet(sinkDir)
-      .orderBy(col("event_type"), col("batch_id"))
-  }
-
-  private def launchStateful(s: SparkSession, d: String, k: Int): (String, StreamingQuery) = {
+    * [[statefulFinal]] its DuckDB oracle. `events` is a stream in the
+    * events schema; the result is (event_type, predicted, n_obs), one
+    * row per series a micro-batch touched. */
+  private[graft] def lastKEmissions(events: DataFrame, k: Int): DataFrame = {
+    val s = events.sparkSession
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val src = eventsStream(s, d)
-      .select($"event_type", $"ts", $"event_id", $"value").as[E]
+    val src = events.select($"event_type", $"ts", $"event_id", $"value").as[E]
     val fn = (key: String, rows: Iterator[E],
         state: GroupState[Seq[(Long, Long, Double)]]) => {
       // only the k newest rows of state ∪ batch can matter for a last-k
@@ -962,13 +967,9 @@ object Pipeline {
         Iterator((key, Predict.LinearPredictor.predict(hist.map(_._3)), hist.size))
       else Iterator.empty
     }
-    val predictions = src.groupByKey(_.event_type)
+    src.groupByKey(_.event_type)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
       .toDF("event_type", "predicted", "n_obs")
-    // executor-side sink, same pattern as every other drain here; the
-    // batch id rides along so the FINAL emission per series is
-    // identifiable from the sink (statefulFinal)
-    drain(predictions, "append", "graft_stsink_")(graft.sources.Sinks.upsertAppend)
   }
 
   /** The stateful drain's FINAL prediction per series: the emission from

@@ -100,15 +100,15 @@ object Drive {
     graft.gen.Ticks.asJson(
       graft.gen.Ticks.generate(spark, Seq("AAPL", "MSFT", "GOOG"), 2000L))
       .repartition(4).write.mode("overwrite").text(wireDir)
-    // streaming consumer: parse envelope, append to the raw table,
-    // listener captures (and echoes) per-batch metrics
+    // streaming consumer: parse envelope, publish each micro-batch to the
+    // raw table, listener captures (and echoes) per-batch metrics
     val ticks = spark.readStream.schema("value STRING")
       .option("maxFilesPerTrigger", "1").text(wireDir)
       .select(from_json(col("value"), graft.Tables.tickSchema).as("t"))
       .select(col("t.*"))
     val (sinkDir, _) = graft.streaming.Pipeline.solo(spark, echo = true)(
-      graft.streaming.Pipeline.drain(ticks, "append", "graft_e2e_sink_")((b, dir, _) =>
-        graft.sources.Sinks.parquetAppend(b, dir)))
+      graft.streaming.Pipeline.drain(ticks, "append", "graft_e2e_sink_")(
+        graft.sources.Sinks.parquetBatchOverwrite))
     // batch path: stride-1 windows over the persisted table (each keyed
     // by its tick's timestamp), batched GRU inference, per-symbol summary
     val frame = org.apache.spark.sql.expressions.Window

@@ -125,4 +125,17 @@ class ArtifactStoreSpec extends SparkSpec {
     assert(enclosingDefs(sites) == Seq("Predict.scala.inferBatched"),
       "run batched inference through Predict.inferBatched:\n" + sites.mkString("\n"))
   }
+
+  test("append-mode writes occur only in Sinks.jdbcAppend") {
+    val sites = mainSourceLines("""\bmode\("append"\)""".r)
+    assert(enclosingDefs(sites) == Seq("Sinks.scala.jdbcAppend"),
+      "publish a micro-batch through Sinks.parquetBatchOverwrite, which a replay " +
+        "overwrites instead of duplicating:\n" + sites.mkString("\n"))
+  }
+
+  test("drained sinks are read only by Pipeline.drainedSink") {
+    val sites = mainSourceLines("""\bdrainGroup\([^)]*\)\(""".r)
+    assert(enclosingDefs(sites) == Seq("Pipeline.scala.drainedSink"),
+      "read a drained sink through Pipeline.drainedSink:\n" + sites.mkString("\n"))
+  }
 }

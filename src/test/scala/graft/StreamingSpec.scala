@@ -303,7 +303,7 @@ class StreamingSpec extends SparkSpec {
     val sink = t8CrashAndResume(t8Stream, "append", afterWrite = false, afterCrash = { sink =>
       val mid = spark.read.parquet(sink).count()
       assert(mid > 0 && mid < t8Rows, s"first run committed a strict prefix, got $mid")
-    })((batch, dir, _) => graft.sources.Sinks.parquetAppend(batch, dir))
+    })(graft.sources.Sinks.parquetBatchOverwrite)
     val fin = spark.read.parquet(sink)
     assert(fin.count() == t8Rows, "no loss across the crash/restart boundary")
     assert(fin.select(col("event_id")).distinct().count() == t8Rows,
@@ -318,17 +318,56 @@ class StreamingSpec extends SparkSpec {
     val clean = t8Clean(t8Stream, "append")(Sinks.parquetBatchOverwrite)
     assert(spark.read.parquet(clean).count() == t8Rows)
     assert(rows(spark.read.parquet(replayed)) == rows(spark.read.parquet(clean)))
-    // update-log upsert of a stateful aggregate: the replay re-appends
+    // update-log upsert of a stateful aggregate: the replay rewrites
     // batch 1's rows under the same batch id, and readLatest keeps one
     def counts = t8Stream.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))).as("total"))
-    val replayedLog = t8CrashAndResume(counts, "update", afterWrite = true)(Sinks.upsertAppend)
-    val cleanLog = t8Clean(counts, "update")(Sinks.upsertAppend)
-    val latest = (dir: String) => rows(Sinks.readLatest(spark, dir, Seq("event_type")))
+    val replayedLog = t8CrashAndResume(counts, "update", afterWrite = true)(Sinks.parquetBatchOverwrite)
+    val cleanLog = t8Clean(counts, "update")(Sinks.parquetBatchOverwrite)
+    val latest = (dir: String) => rows(Sinks.readLatest(spark.read.parquet(dir), Seq("event_type")))
     assert(latest(replayedLog) == latest(cleanLog))
-    assert(Sinks.readLatest(spark, cleanLog, Seq("event_type"))
+    assert(Sinks.readLatest(spark.read.parquet(cleanLog), Seq("event_type"))
       .agg(sum(col("n"))).head().getLong(0) == t8Rows)
+  }
+
+  /** Crashes `stream` after its write of batch 1 and resumes it, then
+    * asserts that `read` of the resumed sink equals `read` of a clean
+    * run's: the replayed batch left no duplicate. */
+  private def t8ReplayEqualsClean(stream: => DataFrame, mode: String)(
+      write: (DataFrame, String, Long) => Unit)(read: String => DataFrame): Unit = {
+    def rows(dir: String) = read(dir).collect().map(_.toString).sorted.toSeq
+    val replayed = rows(t8CrashAndResume(stream, mode, afterWrite = true)(write))
+    val clean = rows(t8Clean(stream, mode)(write))
+    assert(replayed.size == clean.size,
+      s"the replayed batch duplicated ${replayed.size - clean.size} rows")
+    assert(replayed == clean)
+  }
+
+  test("checkpoint recovery (T8): after a crash between sink write and commit, the pipeline's tick sink equals a clean run") {
+    t8ReplayEqualsClean(t8Stream, "append") { (batch, dir, id) =>
+      graft.sources.TickTransport.sink(spark, dir).append(batch, id)
+    }(spark.read.parquet(_))
+  }
+
+  test("checkpoint recovery (T8): after a crash between sink write and commit, a dropDuplicates drain equals a clean run") {
+    t8ReplayEqualsClean(
+      t8Stream.select(col("user_id"), col("event_type")).dropDuplicates("user_id", "event_type"),
+      "append")(graft.sources.Sinks.parquetBatchOverwrite)(
+      graft.streaming.Pipeline.readSink(spark, _))
+  }
+
+  test("checkpoint recovery (T8): after a crash between sink write and commit, the stateful emission log equals a clean run") {
+    t8ReplayEqualsClean(graft.streaming.Pipeline.lastKEmissions(t8Stream, 5), "append")(
+      graft.sources.Sinks.parquetBatchOverwrite)(
+      graft.streaming.Pipeline.readSink(spark, _, batchIds = true))
+  }
+
+  test("the stateful emission log reads back as (event_type, predicted, n_obs, batch_id bigint)") {
+    val schema = graft.streaming.Pipeline.statefulPredictions(spark, sf).schema
+    assert(schema.map(f => f.name -> f.dataType.simpleString) == Seq(
+      "event_type" -> "string", "predicted" -> "double", "n_obs" -> "int",
+      "batch_id" -> "bigint"))
   }
 
   test("streaming drift: one PSI per (day, series), psi ≥ 0, day totals conserve") {

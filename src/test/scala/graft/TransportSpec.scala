@@ -20,6 +20,18 @@ class TransportSpec extends SparkSpec {
     assert(sink == ParquetTickSink("/tmp/sink"))
   }
 
+  test("parquet sink publishes each batch as its own batch_id dir, in place when the dir already is one") {
+    val root = Tuning.fastTmpDir("graft_tick_sink_").toString
+    val batch = spark.range(3).toDF("event_id")
+    ParquetTickSink(root).append(batch, 0L)
+    ParquetTickSink(root).append(batch, 0L)                   // a replay overwrites
+    ParquetTickSink(s"$root/batch_id=1").append(batch, 1L)    // a dir keyed by its caller
+    val rows = spark.read.parquet(root)
+    assert(rows.columns.toSeq == Seq("event_id", "batch_id"))
+    assert(rows.groupBy("batch_id").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap == Map(0 -> 3L, 1 -> 3L))
+  }
+
   test("kafka source selected by conf, carrying the reference's shape") {
     spark.conf.set("graft.stream.source", "kafka")
     try {
