@@ -181,8 +181,8 @@ object Tables {
       .flatMap(_.peek).map(_.asInstanceOf[T])
 
   /** Drop every [[Iteration]] entry: the next consumer of each rebuilds
-    * it once. Bench, graftbench and tools/Profile call this before each
-    * timed iteration. */
+    * it once. Bench and graftbench call this before each timed
+    * iteration. */
   def beginIteration(): Unit = store.values().removeIf(_.scope == Iteration)
 
   /** Test hook: simulate a fresh JVM (cold in-memory store) so the
@@ -358,7 +358,7 @@ object Tables {
   /** A table's DataFrame, one per (session, path, content fingerprint).
     * `spark.read.parquet` is not free on the driver: every call re-lists
     * the path and re-reads parquet footers for the schema (~40-50 ms
-    * measured via tools/Profile at sf0.1), and the 217-query bench calls
+    * of a query's build layer at sf0.1), and the 217-query bench calls
     * the loaders 300+ times — ~15 s of duplicated driver work per
     * iteration. A DataFrame is an immutable logical plan, so handing the
     * SAME plan to every query is semantically identical to re-reading;

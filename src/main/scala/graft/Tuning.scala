@@ -73,7 +73,7 @@ object Tuning {
     p
   }
 
-  /** The one local-mode session builder: Bench, Verify, Profile, Drive,
+  /** The one local-mode session builder: Bench, Verify, Drive,
     * ScaleFixture and the test suite all start here, so a knob added for
     * one measures the same system as the others. `cpus` defaults to
     * SPARK_GRAFT_CPUS, else the host's processor count; `shufflePartitions`

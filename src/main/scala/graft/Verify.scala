@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.{compact, render}
 /** Driver-run correctness dump: each registered query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -15,11 +17,14 @@ object Verify {
     * a subset run's compare never reports the queries it skipped. */
   def oracleJson(specs: Seq[SparkEntry.QuerySpec]): String = {
     val names = specs.map(_.name).toSet
-    SparkEntry.oracleSql.filter { case (k, _) => names(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    stringMap(SparkEntry.oracleSql.filter { case (k, _) => names(k) })
   }
 
-  private def q(s: String): String = "\"" + Bench.jsonEscape(s) + "\""
+  /** A JSON object of strings, in `kv`'s order, rendered by json4s like
+    * Bench's artifacts: a tab or CR in builder-authored SQL must never
+    * make the consumer's json.load fail and silently zero the compare. */
+  private def stringMap(kv: Iterable[(String, String)]): String =
+    compact(render(JObject(kv.toList.map { case (k, v) => k -> JString(v) })))
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -43,8 +48,7 @@ object Verify {
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(specs))
     // always written (possibly {}), so its absence is itself a signal
-    Files.writeString(Paths.get(s"$outDir/errors.json"),
-      errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), stringMap(errors))
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries FAILED: " +
         errors.keys.mkString(", "))

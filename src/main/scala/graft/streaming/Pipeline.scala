@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import scala.util.Try
 
 /** Structured Streaming pipelines (SURVEY §2.1 S1/S4, §2.9 T1-T8).
   *
@@ -224,10 +225,10 @@ object Pipeline {
   // (≥ 2 micro-batches) — consolidation must not quietly degenerate a
   // cross-batch test into a one-batch one.
 
-  /** One drained group: drain name → sink dir, drain name → run id, and
-    * the shared listener's per-micro-batch rows. */
+  /** One drained group: drain name → sink dir, drain name → run id, the
+    * shared listener's per-micro-batch rows, and the group's own wall. */
   private case class DrainGroup(sinks: Map[String, String],
-      runIds: Map[String, String], metrics: Seq[BatchMetric])
+      runIds: Map[String, String], metrics: Seq[BatchMetric], wallNanos: Long)
 
   /** Delegate of [[Tables.beginIteration]] (which drops the drain group,
     * the stateful sinks and the GRU/LSTM passes alike), kept for callers
@@ -272,10 +273,22 @@ object Pipeline {
   }
 
   private def drained(s: SparkSession, d: String): DrainGroup =
-    Tables.artifact(s, d, Seq("events", "documents"), "drainGroup", Tables.Iteration)(
-      runDrainGroup(s, d))
+    Tables.artifact(s, d, DrainTables, "drainGroup", Tables.Iteration)(
+      Try(runDrainGroup(s, d))).get
+
+  private val DrainTables = Seq("events", "documents")
+
+  /** This iteration's drain of the group without running it: None until
+    * a consumer drained it, then the group's wall in nanoseconds, or its
+    * failure — a failed drain is kept, so every consumer in the
+    * iteration reports that error and none re-runs the group. Bench
+    * gives the wall its own line. */
+  private[graft] def drainOutcome(s: SparkSession, d: String): Option[Try[Long]] =
+    Tables.artifactPeek[Try[DrainGroup]](s, d, DrainTables, "drainGroup")
+      .map(_.map(_.wallNanos))
 
   private def runDrainGroup(s: SparkSession, d: String): DrainGroup = {
+    val t0 = System.nanoTime()
     // both staged replays exist before any query starts (cached; Bench
     // additionally pre-stages them in its untimed warm-up)
     prestage(s, d)
@@ -299,7 +312,8 @@ object Pipeline {
       }
       started.foreach { case (name, _, q) => requireTerminated(lst, q, s"drain '$name'") }
       DrainGroup(started.map(t => t._1 -> t._2).toMap,
-        started.map(t => t._1 -> t._3.runId.toString).toMap, lst.collected)
+        started.map(t => t._1 -> t._3.runId.toString).toMap, lst.collected,
+        System.nanoTime() - t0)
     } finally s.streams.removeListener(lst)
   }
 

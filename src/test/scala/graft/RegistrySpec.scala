@@ -56,13 +56,14 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("oracle_sql.json: the whole map for a full run, only the selected oracles for a subset") {
-    def q(s: String) = "\"" + Bench.jsonEscape(s) + "\""
-    def json(m: Iterable[(String, String)]) =
-      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    assert(Verify.oracleJson(registry) == json(SparkEntry.oracleSql))
+    // parse-back round trip: every SQL string (tabs, newlines and
+    // quotes included) reads back exactly as the registry holds it
+    def parsed(json: String): Map[String, String] =
+      org.json4s.jackson.JsonMethods.parse(json).values.asInstanceOf[Map[String, String]]
+    assert(parsed(Verify.oracleJson(registry)) == SparkEntry.oracleSql)
     // q_ann_lsh is rows-only: it adds no oracle entry
     val subset = SparkEntry.select(Some("q_sort,q_count,q_ann_lsh"))
-    assert(Verify.oracleJson(subset) ==
-      json(SparkEntry.oracleSql.filter { case (k, _) => k == "q_count" || k == "q_sort" }))
+    assert(parsed(Verify.oracleJson(subset)) ==
+      SparkEntry.oracleSql.filter { case (k, _) => k == "q_count" || k == "q_sort" })
   }
 }
