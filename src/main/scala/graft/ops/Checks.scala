@@ -25,24 +25,6 @@ import org.apache.spark.sql.types._
   */
 object Checks {
 
-  /** approx_count_distinct (HLL++, rsd=0.01) vs exact distinct, per
-    * supplier. HLL++ at rsd 0.01 holds per-group cardinalities of this
-    * order in its exact sparse mode, and even the dense estimate is
-    * guaranteed within a few rsd; the 5%-or-±1 band is loose against
-    * both, and the register-max merge is order-independent, so the
-    * boolean is deterministic. `n_parts` (exact) hash-checks
-    * value-for-value. */
-  /** Exact-vs-HLL++ distinct band per supplier. Two deliberate plan
-    * choices after the hardened bench exposed the first cut at 17 s:
-    * (1) exact and approx run as SEPARATE aggregates joined on the
-    * 2k-row group key — mixing count_distinct with any other aggregate
-    * plans an Expand that doubles the scan; (2) rsd 0.02, not 0.01 —
-    * HLL++ register arrays are per-GROUP per-partition state
-    * (≈16 KB/group at rsd 0.01 → gigabytes of partial-agg buffers
-    * fleet-wide; ≈3 KB at 0.02), and the band re-widened to 4σ of the
-    * looser rsd (max(2, 10%)) stays oracle-pinned TRUE with margin.
-    * The same sizing rule is the 100 TB design note: HLL precision is
-    * a per-group MEMORY knob, not a free accuracy knob. */
   /** Per-corpus verdict memo for the companion checks. A companion is a
     * corpus-level DIAGNOSTIC — recall floors, coverage, sketch bands —
     * whose inputs are deterministic scans of one fixture plus cached
@@ -71,6 +53,24 @@ object Checks {
     // re-verifying the unchanged corpus
     graft.Tables.dfArtifact(s, d, tables, s"verdict:$key")(build)
 
+  /** approx_count_distinct (HLL++) vs exact distinct, per supplier.
+    * HLL++ holds per-group cardinalities of this order in its exact
+    * sparse mode, and even the dense estimate is guaranteed within a
+    * few rsd; the band is loose against both, and the register-max
+    * merge is order-independent, so the boolean is deterministic.
+    * `n_parts` (exact) hash-checks value-for-value.
+    *
+    * Two deliberate plan
+    * choices after the hardened bench exposed the first cut at 17 s:
+    * (1) exact and approx run as SEPARATE aggregates joined on the
+    * 2k-row group key — mixing count_distinct with any other aggregate
+    * plans an Expand that doubles the scan; (2) rsd 0.02, not 0.01 —
+    * HLL++ register arrays are per-GROUP per-partition state
+    * (≈16 KB/group at rsd 0.01 → gigabytes of partial-agg buffers
+    * fleet-wide; ≈3 KB at 0.02), and the band re-widened to 4σ of the
+    * looser rsd (max(2, 10%)) stays oracle-pinned TRUE with margin.
+    * The same sizing rule is the 100 TB design note: HLL precision is
+    * a per-group MEMORY knob, not a free accuracy knob. */
   def approxDistinctCheck(s: SparkSession, d: String): DataFrame =
       corpusVerdict(s, d, Seq("lineitem"), s"approxDistinct:$d") {
     val li = Tables.lineitem(s, d).select(col("l_suppkey"), col("l_partkey"))
@@ -284,15 +284,6 @@ object Checks {
       .toDF("n_true", "live_recall_ok", "no_tomb_ok", "mask_cover_ok")
   }
 
-  /** IVF-blocked near-dup dedup vs the all-pairs truth. `n_true_pairs`
-    * is the EXACT count of pairs at or above the threshold — Spark
-    * computes it brute-force here, DuckDB recomputes it independently
-    * from the same parquet, and the two must agree to the last pair
-    * (this doubles as a cross-engine check of the cosine fold near the
-    * threshold). `all_found_true`: every emitted pair must clear the
-    * threshold under exact cosine (blocking may lose pairs, it must
-    * never invent them). `coverage_ok`: cell-blocking keeps at least
-    * the floor fraction of the truth on this corpus profile. */
   /** Exact all-pairs cosine truth at a threshold, checkpointed per
     * (corpus, threshold): the O(n²·dim) truth pass is the dominant cost
     * of the invariant checks and is a pure corpus artifact — built once
@@ -313,6 +304,15 @@ object Checks {
         .select(col("id_a"), col("id_b"))
     }
 
+  /** IVF-blocked near-dup dedup vs the all-pairs truth. `n_true_pairs`
+    * is the EXACT count of pairs at or above the threshold — Spark
+    * computes it brute-force here, DuckDB recomputes it independently
+    * from the same parquet, and the two must agree to the last pair
+    * (this doubles as a cross-engine check of the cosine fold near the
+    * threshold). `all_found_true`: every emitted pair must clear the
+    * threshold under exact cosine (blocking may lose pairs, it must
+    * never invent them). `coverage_ok`: cell-blocking keeps at least
+    * the floor fraction of the truth on this corpus profile. */
   def embedIvfDedupCheck(s: SparkSession, d: String,
       threshold: Double = 0.4, coverageFloor: Double = 0.25): DataFrame =
       corpusVerdict(s, d, Seq("embeddings"), s"embedIvfDedup:$threshold:$coverageFloor") {
@@ -517,7 +517,7 @@ object Checks {
     *     semantics exactly;
     *   - `coverage_ok` — at least `coverageFloor` of queries are covered. */
   // the exact classifier is the truth side of the IVF parity check —
-  // one computation per corpus, same per-JVM discipline as annTruthCache
+  // one computation per corpus, stored as the `knnExact` sidecar
 
   def knnClassifyIvfCheck(s: SparkSession, d: String,
       agreeFloor: Double = 0.25, coverageFloor: Double = 0.9): DataFrame =

@@ -5,16 +5,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.mutable.ArrayBuffer
+import scala.reflect.runtime.universe.TypeTag
 
-/** Similarity search over embedding columns (north-star extensions):
-  * brute-force cosine top-k as the exact baseline, and a random-hyperplane
-  * LSH-bucketed variant as the scale path.
-  *
-  * Scale design: the query set is small and broadcast — the corpus never
-  * shuffles for brute force. The LSH path buckets both sides on a 16-bit
-  * signature equi-join key so candidate generation is a hash join over
-  * ~1/65536 of the cross product per table, then exact-reranks candidates.
-  */
 /** One per-cell per-query candidate row surviving the IVF classifier's
   * local top-k ([[Similarity.cellScoredCandidates]]). TOP-LEVEL and
   * non-private deliberately: as a private nested class the Dataset
@@ -25,6 +18,20 @@ import org.apache.spark.sql.types._
 private[graft] case class ScoredCand(vec_id: Long, true_label: Long,
     ord1: Long, ord2: Long, lab: Double)
 
+/** Similarity search over embedding columns (north-star extensions).
+  * Exact: brute-force cosine top-k, threshold range search, top-k over
+  * the int8-quantized store, kNN and nearest-prototype classification.
+  * Approximate, each a candidate generator followed by the same exact
+  * rerank: multi-table random-hyperplane LSH (24 tables × 7 planes),
+  * IVF (k-means cells, nProbe nearest probed), PQ with ADC scoring, and
+  * IVF+PQ; near-dup dedup blocked on sign bands, IVF cells or a column.
+  *
+  * Scale design: the query set is small and broadcast — the corpus never
+  * shuffles for brute force. Every top-k search is filter-and-refine:
+  * one query side ([[querySide]]), candidates by the variant's own
+  * generator, candidate ids joined back to their payloads
+  * ([[rerankIds]]) and one exact top-k tail ([[exactTopK]]).
+  */
 object Similarity {
 
   /** Elementwise-deterministic cosine: left-to-right double fold (same
@@ -100,7 +107,7 @@ object Similarity {
     * shuffle except the final tiny top-k rows. */
   def bruteForceTopK(s: SparkSession, d: String, nQueries: Int = 10,
       k: Int = 5): DataFrame =
-    bruteForceTopKOn(corpus(s, d), nQueries, k)
+    exactTopK(exactScores(corpus(s, d), nQueries), "cos", k)
 
   /** Brute-force truth over the SURVIVOR corpus (`q_ann_live`): the
     * tombstone mask applied to queries AND neighbors, then the identical
@@ -110,27 +117,56 @@ object Similarity {
     * exactly and the result hash-matches row for row). */
   def bruteForceTopKLive(s: SparkSession, d: String, nQueries: Int = 10,
       k: Int = 5): DataFrame =
-    bruteForceTopKOn(liveVectors(s, d), nQueries, k)
+    exactTopK(exactScores(liveVectors(s, d), nQueries), "cos", k)
 
-  /** The one exact-scoring body behind [[bruteForceTopK]] and
-    * [[bruteForceTopKLive]] — parameterized by the corpus relation so
-    * the masked and unmasked reads cannot drift semantically. */
-  private def bruteForceTopKOn(e0: DataFrame, nQueries: Int,
-      k: Int): DataFrame = {
+  /** The query side of every search: (q_id, q_emb, q_nrm) for the
+    * vectors of `e` with vec_id < nQueries, plus `extra` columns of the
+    * same rows. `e` carries (vec_id, embedding, nrm). */
+  private def querySide(e: DataFrame, nQueries: Int,
+      extra: Column*): DataFrame =
+    e.filter(col("vec_id") < nQueries)
+      .select(Seq(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        col("nrm").as("q_nrm")) ++ extra: _*)
+
+  /** Exact cosine of a query-side row against a corpus row, as `cos`. */
+  private def queryCos: Column =
+    cosineFromNorms(col("q_emb"), col("embedding"), col("q_nrm"), col("nrm")).as("cos")
+
+  /** The one exact-scoring body behind [[bruteForceTopK]],
+    * [[bruteForceTopKLive]], [[rangeSearch]] and [[quantizedTopK]]:
+    * (q_id, n_id, cos) for every query against every other vector of
+    * `e0`, queries broadcast — parameterized by the corpus relation so
+    * the masked, unmasked and quantized reads cannot drift
+    * semantically. */
+  private def exactScores(e0: DataFrame, nQueries: Int): DataFrame = {
     val e = e0.withColumn("nrm", l2norm(col("embedding")))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val scored = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        cosineFromNorms(col("q_emb"), col("embedding"),
-          col("q_nrm"), col("nrm")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
+    e.join(broadcast(querySide(e, nQueries)), col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("n_id"), queryCos)
+  }
+
+  /** The exact top-k tail of every search: per query, the k best
+    * (q_id, n_id, score) rows by (score desc, n_id asc), as
+    * (q_id, rnk, n_id, score) ordered by (q_id, rnk). */
+  private def exactTopK(scored: DataFrame, score: String, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col(score).desc, col("n_id"))
     scored.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast(LongType).as("rnk"), col("n_id"), col("cos"))
+      .select(col("q_id"), col("rnk").cast(LongType).as("rnk"), col("n_id"), col(score))
       .orderBy(col("q_id"), col("rnk"))
   }
+
+  /** The exact rerank of an id-first candidate set (lsh, pq, ivfpq):
+    * candidate (q_id, n_id) ids join their payloads back — corpus side
+    * by equi-join, query side by broadcast — so each surviving
+    * candidate moves its vector once, then the exact top-k. `e` carries
+    * (vec_id, embedding, nrm). */
+  private def rerankIds(candIds: DataFrame, e: DataFrame, nQueries: Int,
+      k: Int): DataFrame =
+    exactTopK(candIds
+      .join(e.select(col("vec_id").as("n_id"), col("embedding"), col("nrm")),
+        Seq("n_id"))
+      .join(broadcast(querySide(e, nQueries)), Seq("q_id"))
+      .select(col("q_id"), col("n_id"), queryCos), "cos", k)
 
   /** Threshold RANGE SEARCH — the "all neighbors above τ" dual of
     * top-k: every corpus vector whose cosine with a query meets the
@@ -143,18 +179,10 @@ object Similarity {
     * the exact form here is the truth this family's checks rerank
     * against. */
   def rangeSearch(s: SparkSession, d: String, nQueries: Int = 10,
-      minCos: Double = 0.2): DataFrame = {
-    val e = corpus(s, d).withColumn("nrm", l2norm(col("embedding")))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        cosineFromNorms(col("q_emb"), col("embedding"),
-          col("q_nrm"), col("nrm")).as("cos"))
+      minCos: Double = 0.2): DataFrame =
+    exactScores(corpus(s, d), nQueries)
       .filter(col("cos") >= minCos)
       .orderBy(col("q_id"), col("n_id"))
-  }
 
   /** Nearest-CLASS-CENTROID classification (Rocchio / prototype
     * classifier) — the cheap sibling of kNN every labeled-corpus
@@ -270,34 +298,20 @@ object Similarity {
     * against [[bruteForceTopK]]. */
   def lshTopK(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
       dim: Int = 64): DataFrame = {
-    val e = corpus(s, d)
-    val en = e.select(col("vec_id"), col("embedding"),
+    val en = corpus(s, d).select(col("vec_id"), col("embedding"),
       l2norm(col("embedding")).as("nrm"))
+    val sig = lshSigUdf(dim)
     val buckets = en
-      .select(col("vec_id"), posexplode(lshSigUdf(dim)(col("embedding"))).as(Seq("t", "sig")))
-    val qb = buckets.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("t"), col("sig"))
+      .select(col("vec_id"), posexplode(sig(col("embedding"))).as(Seq("t", "sig")))
+    val qb = querySide(en, nQueries)
+      .select(col("q_id"), posexplode(sig(col("q_emb"))).as(Seq("t", "sig")))
     // candidate ids first (the distinct shuffles 16-byte pairs only);
-    // vectors join back AFTER — corpus side by equi-join, query side by
-    // broadcast — so each surviving candidate moves its payload once
+    // vectors join back AFTER, in rerankIds
     val candIds = buckets.join(broadcast(qb), Seq("t", "sig"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"))
       .distinct()
-    val q = en.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val cands = candIds
-      .join(en.select(col("vec_id").as("n_id"),
-        col("embedding"), col("nrm")), Seq("n_id"))
-      .join(broadcast(q), Seq("q_id"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    cands.withColumn("cos", cosineFromNorms(col("q_emb"), col("embedding"),
-        col("q_nrm"), col("nrm")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast(LongType).as("rnk"), col("n_id"), col("cos"))
-      .orderBy(col("q_id"), col("rnk"))
+    rerankIds(candIds, en, nQueries, k)
   }
 
   /** Coarse-quantizer TRAINING: Lloyd's k-means over the corpus.
@@ -343,14 +357,9 @@ object Similarity {
     centroids
   }
 
-  /** IVF (inverted-file) ANN — the clustered scale path alongside LSH.
-    * Coarse quantizer: [[kmeansCentroids]] (Lloyd-trained from a seeded
-    * deterministic init). Index: each corpus vector is assigned to its
-    * nearest centroid (one broadcast pass, max_by reduction). Search:
-    * each query probes its nProbe nearest centroid lists only —
-    * candidates ≈ nProbe/NumCentroids of the corpus — then exact
-    * cosine rerank. Approximate → rows-only check; SimilaritySpec
-    * measures recall vs brute force. */
+  /** Coarse-quantizer cell count of the IVF searches — pinned at 16 on
+    * the fixtures for bit-stability (the dedup and classifier paths size
+    * their cells with [[autoCells]]). */
   val NumCentroids = 16
 
   /** Trained centroids stored per (corpus fingerprint, k) —
@@ -370,28 +379,50 @@ object Similarity {
     * rounds broadcast k centroids against every training row, so
     * training on the full corpus would cost n×k dots per round — at
     * 10⁹ vectors with √n cells that is the one quadratic left in the
-    * index build. Capping the training sample (deterministic
-    * `pmod(hash, n) < cap` — an EXPECTED size, like PQ's) bounds
-    * training at cap×k while the actual index assignment stays one
-    * full-corpus broadcast pass, which is the irreducible build cost.
-    * Fixtures at/below the cap train on everything — behavior at the
-    * driver's correctness scales is unchanged. */
+    * index build. Capping the training sample ([[trainingSample]])
+    * bounds training at cap×k while the actual index assignment stays
+    * one full-corpus broadcast pass, which is the irreducible build
+    * cost. Fixtures at/below the cap train on everything — behavior at
+    * the driver's correctness scales is unchanged. */
   val KmTrainCap = 65536L
+
+  /** The training slice both quantizers learn from: all of `e` up to
+    * `cap` rows, past it the deterministic `pmod(xxhash64(vec_id), n) <
+    * cap` sample — an EXPECTED size of `cap`, not an exact bound. */
+  private def trainingSample(e: DataFrame, cap: Long): DataFrame = {
+    val n = e.count()
+    if (n <= cap) e
+    else e.filter(pmod(xxhash64(col("vec_id")), lit(n)) < lit(cap))
+  }
 
   def trainedCentroids(s: SparkSession, d: String, k: Int): DataFrame = {
     // freshness-keyed per (corpus fingerprint, k): regenerating the
     // fixture in place must retrain, not serve the old snapshot's model
     val rows = storedCentroids(s, d, s"centroids:$k") {
-      val e = corpus(s, d)
-      val n = e.count()
-      val sample =
-        if (n <= KmTrainCap) e
-        else e.filter(pmod(xxhash64(col("vec_id")), lit(n)) < lit(KmTrainCap))
-      kmeansCentroids(sample, k)
+      kmeansCentroids(trainingSample(corpus(s, d), KmTrainCap), k)
     }
     import s.implicits._
     rows.toDF("c_id", "c_emb")
   }
+
+  /** [[trainedCentroids]] with each centroid's norm as `c_nrm` — the
+    * table [[assignToCentroids]] and [[topCentroidIds]] read. */
+  private def normedCentroids(s: SparkSession, d: String, k: Int): DataFrame =
+    trainedCentroids(s, d, k).withColumn("c_nrm", l2norm(col("c_emb")))
+
+  /** Cell count of the IVF dedup and classifier: `cells` when positive,
+    * else AUTO from the indexed row count `n` — per-row candidate work
+    * is n·nProbe/cells, so a fixed cell count makes the query quadratic
+    * in corpus size; √n cells (capped at 4096) is the standard IVF
+    * sizing. Up to 4k rows the [[NumCentroids]] default is kept so
+    * driver-scale results are bit-stable with earlier rounds (the guard
+    * must sit BELOW the first generated decade — at 16k labeled the
+    * 16-cell regime already costs ~4k candidates/query, measured 19.7 s
+    * at gen10x). */
+  private def autoCells(n: Long, cells: Int): Int =
+    if (cells > 0) cells
+    else if (n <= 4000L) NumCentroids
+    else math.min(4096L, math.round(math.sqrt(n.toDouble))).toInt
 
   /** Nearest-centroid assignment (the IVF index build) as ONE codegen'd
     * projection: the centroid table (bounded — k ≤ 4096 by the sizing
@@ -404,11 +435,8 @@ object Similarity {
     * c_id) and NaN semantics are bit-identical to the old
     * max_by(struct(c_cos, -c_id)) reduction. Expects `e` to carry a
     * precomputed `nrm` column and `centroids` a `c_nrm`; the output is
-    * `e`'s columns plus `c_id` (carry columns ride through untouched,
-    * so `carry` is accepted for API stability but no longer needed to
-    * preserve them). */
-  def assignToCentroids(e: DataFrame, centroids: DataFrame,
-      carry: Seq[String] = Nil): DataFrame = {
+    * `e`'s columns plus `c_id`. */
+  def assignToCentroids(e: DataFrame, centroids: DataFrame): DataFrame = {
     val rows = centroids.select(col("c_id"), col("c_emb"), col("c_nrm"))
       .collect()
       .sortBy(_.getLong(0))
@@ -435,34 +463,32 @@ object Similarity {
       rows.map(_.getSeq[Double](1).toArray), rows.map(_.getDouble(2)), nProbe))
   }
 
+  /** The IVF probe of the ANN searches: one (q_id, q_emb, q_nrm, c_id)
+    * row per query and probed cell, the cells picked by
+    * [[topCentroidIds]] (the query filter runs below the projection, so
+    * only the query rows are probed). */
+  private def probedCells(e: DataFrame, centroids: DataFrame, nQueries: Int,
+      nProbe: Int): DataFrame =
+    querySide(topCentroidIds(e, centroids, nProbe), nQueries,
+      explode(col("c_ids")).as("c_id"))
+
+  /** IVF (inverted-file) ANN — the clustered scale path alongside LSH.
+    * Coarse quantizer: [[kmeansCentroids]] (Lloyd-trained from a seeded
+    * deterministic init). Index: each corpus vector is assigned to its
+    * nearest centroid ([[assignToCentroids]], one pass over the scan).
+    * Search: each query probes its nProbe nearest centroid lists only
+    * ([[probedCells]]) — candidates ≈ nProbe/NumCentroids of the corpus
+    * — then exact cosine rerank. Approximate → rows-only check;
+    * SimilaritySpec measures recall vs brute force and pins the exact
+    * probed-cell semantics. */
   def ivfTopK(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
       nProbe: Int = 4): DataFrame = {
     val e = corpus(s, d).withColumn("nrm", l2norm(col("embedding")))
-    val centroids = trainedCentroids(s, d, NumCentroids)
-      .withColumn("c_nrm", l2norm(col("c_emb")))
-    val assigned = assignToCentroids(e, centroids)
-    // search: queries probe their nProbe nearest centroid lists
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("c_cos").desc, col("c_id"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("c_cos", cosineFromNorms(col("q_emb"), col("c_emb"),
-        col("q_nrm"), col("c_nrm")))
-      .withColumn("prnk", row_number().over(wProbe))
-      .filter(col("prnk") <= nProbe)
-      .select(col("q_id"), col("q_emb"), col("q_nrm"), col("c_id"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    assigned.join(broadcast(probes), Seq("c_id"))
+    val centroids = normedCentroids(s, d, NumCentroids)
+    exactTopK(assignToCentroids(e, centroids)
+      .join(broadcast(probedCells(e, centroids, nQueries, nProbe)), Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("q_emb"), col("q_nrm"),
-        col("vec_id").as("n_id"), col("embedding"), col("nrm"))
-      .withColumn("cos", cosineFromNorms(col("q_emb"), col("embedding"),
-        col("q_nrm"), col("nrm")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast(LongType).as("rnk"), col("n_id"), col("cos"))
-      .orderBy(col("q_id"), col("rnk"))
+      .select(col("q_id"), col("vec_id").as("n_id"), queryCos), "cos", k)
   }
 
   // ---------------- Product quantization (PQ) ANN ----------------
@@ -476,6 +502,11 @@ object Similarity {
     * Neighbor Search", TPAMI 2011). */
   val PqM = 8
   val PqK = 16
+
+  /** PQ TRAINING CAP: codebooks train on the [[trainingSample]] capped
+    * at PqTrainCap vectors (an EXPECTED size, not an exact bound), like
+    * the coarse quantizer's [[KmTrainCap]]. */
+  val PqTrainCap = 65536L
 
   /** Per-corpus PQ codebooks, `cb(m)(k)` = the 8-dim centroid for code k
     * of subspace m — trained ONCE per corpus and cached like
@@ -502,8 +533,6 @@ object Similarity {
     * cache pins one codebook per JVM (codes, check, and recall all see
     * the same one); cross-run stability is by recall-floor margin, not
     * bit-identical codes. */
-  val PqTrainCap = 65536L
-
   private[graft] def pqCodebooks(s: SparkSession, d: String): Array[Array[Array[Double]]] =
     storedCodebooks(s, d, "pqCodebooks")(trainPqCodebooks(s, corpus(s, d), d))
 
@@ -533,61 +562,58 @@ object Similarity {
     * snapshot (the FAISS train-once / add-many contract). */
   private def trainPqCodebooks(s: SparkSession, e: DataFrame,
       label: String): Array[Array[Array[Double]]] = {
-      val ds = 64 / PqM
-      val n = e.count()
-      val sampled =
-        if (n <= PqTrainCap) e
-        else e.filter(pmod(xxhash64(col("vec_id")), lit(n)) < lit(PqTrainCap))
-      val en = sampled
-        .withColumn("nrm", l2norm(col("embedding")))
-        .withColumn("nemb", expr(
-          "transform(embedding, x -> CASE WHEN nrm = 0 THEN 0.0D ELSE CAST(x AS DOUBLE) / nrm END)"))
-        .select(col("vec_id"), col("nemb"))
-      // init: subvectors of the PqK lowest-hash sampled vectors; a tiny
-      // corpus (< PqK vectors) wraps around rather than out-of-bounds —
-      // duplicate init centroids are legal Lloyd's input (empty codes
-      // keep their previous centroid, see the round loop)
-      val seed = en.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(PqK)
-        .select(col("nemb")).collect()
-        .map(_.getSeq[Double](0).toArray)
-      require(seed.nonEmpty, s"PQ training needs at least one vector in $label")
-      var cb: Array[Array[Array[Double]]] =
-        Array.tabulate(PqM, PqK)((m, k) =>
-          seed(k % seed.length).slice(m * ds, m * ds + ds))
-      val subRows = en.select(col("vec_id"), explode(array(
-          (0 until PqM).map(m => struct(lit(m).as("m"),
-            slice(col("nemb"), m * ds + 1, ds).as("sub"))): _*)).as("e"))
-        .select(col("vec_id"), col("e.m").as("m"), col("e.sub").as("sub"))
-        .localCheckpoint(true)   // two Lloyd rounds re-read it; never re-derive
-      for (_ <- 1 to 2) {
-        val cbDf = codebookTable(s, cb)
-        val dist = graft.functions.Native.dot(col("sub"), col("sub")) -
-          lit(2.0) * graft.functions.Native.dot(col("sub"), col("c_sub")) +
-          graft.functions.Native.dot(col("c_sub"), col("c_sub"))
-        val assigned = subRows.join(broadcast(cbDf), Seq("m"))
-          .groupBy(col("vec_id"), col("m"))
-          .agg(first(col("sub")).as("sub"),
-            min_by(col("k"), struct(dist, col("k"))).as("k"))
-        val means = assigned
-          .select(col("m"), col("k"), posexplode(col("sub")))
-          .groupBy(col("m"), col("k"), col("pos"))
-          .agg(avg(col("col")).as("v"))
-          .collect()
-        val next = cb.map(_.map(_.clone()))
-        means.foreach { r =>
-          next(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3)
-        }
-        cb = next
+    val ds = 64 / PqM
+    val en = trainingSample(e, PqTrainCap)
+      .withColumn("nrm", l2norm(col("embedding")))
+      .withColumn("nemb", expr(
+        "transform(embedding, x -> CASE WHEN nrm = 0 THEN 0.0D ELSE CAST(x AS DOUBLE) / nrm END)"))
+      .select(col("vec_id"), col("nemb"))
+    // init: subvectors of the PqK lowest-hash sampled vectors; a tiny
+    // corpus (< PqK vectors) wraps around rather than out-of-bounds —
+    // duplicate init centroids are legal Lloyd's input (empty codes
+    // keep their previous centroid, see the round loop)
+    val seed = en.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(PqK)
+      .select(col("nemb")).collect()
+      .map(_.getSeq[Double](0).toArray)
+    require(seed.nonEmpty, s"PQ training needs at least one vector in $label")
+    var cb: Array[Array[Array[Double]]] =
+      Array.tabulate(PqM, PqK)((m, k) =>
+        seed(k % seed.length).slice(m * ds, m * ds + ds))
+    val subRows = en.select(col("vec_id"), explode(array(
+        (0 until PqM).map(m => struct(lit(m).as("m"),
+          slice(col("nemb"), m * ds + 1, ds).as("sub"))): _*)).as("e"))
+      .select(col("vec_id"), col("e.m").as("m"), col("e.sub").as("sub"))
+      .localCheckpoint(true)   // two Lloyd rounds re-read it; never re-derive
+    for (_ <- 1 to 2) {
+      val cbDf = codebookTable(s, cb)
+      val dist = graft.functions.Native.dot(col("sub"), col("sub")) -
+        lit(2.0) * graft.functions.Native.dot(col("sub"), col("c_sub")) +
+        graft.functions.Native.dot(col("c_sub"), col("c_sub"))
+      val assigned = subRows.join(broadcast(cbDf), Seq("m"))
+        .groupBy(col("vec_id"), col("m"))
+        .agg(first(col("sub")).as("sub"),
+          min_by(col("k"), struct(dist, col("k"))).as("k"))
+      val means = assigned
+        .select(col("m"), col("k"), posexplode(col("sub")))
+        .groupBy(col("m"), col("k"), col("pos"))
+        .agg(avg(col("col")).as("v"))
+        .collect()
+      val next = cb.map(_.map(_.clone()))
+      means.foreach { r =>
+        next(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3)
       }
-      cb
+      cb = next
     }
+    cb
+  }
 
   /** PQ encoder (the index build): normalized vector → [[PqM]] 4-bit
     * codes, each the L2-nearest codebook entry of its subspace. A UDF
     * over the closure-shipped codebooks, same justification as
     * [[lshSigUdf]]: the code is a rows-only sketch, never
     * oracle-compared, and the tight JVM loop beats a thousand-node
-    * expression tree. Exposed for the spec's plain-Scala parity check. */
+    * expression tree. Exposed for the spec's plain-Scala parity check;
+    * every column encode goes through [[pqEncoder]]. */
   private[graft] def pqEncodeOne(cb: Array[Array[Array[Double]]],
       emb: Seq[Float]): Array[Int] = {
     val ds = cb(0)(0).length
@@ -616,6 +642,19 @@ object Similarity {
     }
   }
 
+  /** The one PQ encode UDF: [[pqEncodeOne]] of the `emb` column under
+    * `cb`, its codes mapped to the column value by `out` (the code array
+    * itself for the code tables, [[packCodes]]' long for the
+    * classifier's members). */
+  private def pqEncoder[R: TypeTag](cb: Array[Array[Array[Double]]], emb: Column)(
+      out: Array[Int] => R): Column =
+    udf((e: Seq[Float]) => out(pqEncodeOne(cb, e))).apply(emb)
+
+  /** (vec_id, codes) of every vector of `e` under `cb` — the code table
+    * all three code sidecars store. */
+  private def pqCodeTable(e: DataFrame, cb: Array[Array[Array[Double]]]): DataFrame =
+    e.select(col("vec_id"), pqEncoder(cb, col("embedding"))(identity).as("codes"))
+
   /** (vec_id, codes) for the whole corpus. At 100 TB this IS the index
     * table, materialized once next to the embeddings and re-read by
     * every search (4 bytes/vector) — so it is a build-once corpus
@@ -630,11 +669,8 @@ object Similarity {
     // disk sidecar, the code TABLE was the remaining per-JVM encode
     // pass — a cold JVM now reads 4 bytes/vector instead of pushing the
     // whole corpus through the boxed encode UDF
-    Tables.dfArtifact(s, d, Seq("embeddings"), "pqCodes") {
-      val cb = pqCodebooks(s, d)
-      val enc = udf((emb: Seq[Float]) => pqEncodeOne(cb, emb))
-      corpus(s, d).select(col("vec_id"), enc(col("embedding")).as("codes"))
-    }
+    Tables.dfArtifact(s, d, Seq("embeddings"), "pqCodes")(
+      pqCodeTable(corpus(s, d), pqCodebooks(s, d)))
 
   /** Vec-id cut for the embedding APPEND lifecycle: the last ~10% of
     * vec_ids are "added since the base snapshot" — same fraction and
@@ -664,12 +700,8 @@ object Similarity {
     * base codebooks — the index as published at the snapshot. */
   private[graft] def pqCodesBase(s: SparkSession, d: String): DataFrame = {
     val cut = embedDeltaCut(s, d)
-    Tables.dfArtifact(s, d, Seq("embeddings"), s"pqCodesBase:lt=$cut") {
-      val cb = pqCodebooksBase(s, d)
-      val enc = udf((emb: Seq[Float]) => pqEncodeOne(cb, emb))
-      corpus(s, d).filter(col("vec_id") < cut)
-        .select(col("vec_id"), enc(col("embedding")).as("codes"))
-    }
+    Tables.dfArtifact(s, d, Seq("embeddings"), s"pqCodesBase:lt=$cut")(
+      pqCodeTable(corpus(s, d).filter(col("vec_id") < cut), pqCodebooksBase(s, d)))
   }
 
   /** The FAISS `add` step (`q_ann_pq_delta`'s O(delta) half): encode
@@ -681,12 +713,8 @@ object Similarity {
     * add cost ∝ appended rows, retrain cost ∝ corpus. */
   private[graft] def pqCodesDelta(s: SparkSession, d: String): DataFrame = {
     val cut = embedDeltaCut(s, d)
-    Tables.dfArtifact(s, d, Seq("embeddings"), s"pqCodesDelta:ge=$cut") {
-      val cb = pqCodebooksBase(s, d)
-      val enc = udf((emb: Seq[Float]) => pqEncodeOne(cb, emb))
-      corpus(s, d).filter(col("vec_id") >= cut)
-        .select(col("vec_id"), enc(col("embedding")).as("codes"))
-    }
+    Tables.dfArtifact(s, d, Seq("embeddings"), s"pqCodesDelta:ge=$cut")(
+      pqCodeTable(corpus(s, d).filter(col("vec_id") >= cut), pqCodebooksBase(s, d)))
   }
 
   /** ANN SEARCH OVER THE APPENDED STORE (`q_ann_pq_delta`): the same
@@ -751,6 +779,61 @@ object Similarity {
       pool: Int = 16): DataFrame =
     pqTopKWith(s, d, pqCodebooks(s, d), pqCodes(s, d), nQueries, k, pool)
 
+  /** ADC lookup table of one query against the corpus codebooks, flat
+    * (m * PqK + code): entry = dot(normalized query subvector,
+    * codebook centroid). Σ_m table(m, code_m(x)) then approximates
+    * cos(q, x) directly, because codes encode the NORMALIZED member
+    * vector (pqCodebooks doc). */
+  private def adcTable(cb: Array[Array[Array[Double]]], qe: Array[Float],
+      qn: Double): Array[Double] = {
+    val mCount = cb.length
+    val kCount = cb(0).length
+    val ds = cb(0)(0).length
+    val t = new Array[Double](mCount * kCount)
+    var m = 0
+    while (m < mCount) {
+      var c = 0
+      while (c < kCount) {
+        val cent = cb(m)(c)
+        var acc = 0.0
+        var i = 0
+        while (i < ds) {
+          val idx = m * ds + i
+          if (idx < qe.length && qn != 0.0) acc += (qe(idx).toDouble / qn) * cent(i)
+          i += 1
+        }
+        t(m * kCount + c) = acc
+        c += 1
+      }
+      m += 1
+    }
+    t
+  }
+
+  /** (q_id, ADC table) of every query — a bounded collect, the query
+    * set is nQueries rows by construction. */
+  private def queryTables(e: DataFrame, nQueries: Int,
+      cb: Array[Array[Array[Double]]]): Array[(Long, Array[Double])] =
+    querySide(e, nQueries).collect().map(r =>
+      r.getLong(0) -> adcTable(cb, r.getSeq[Float](1).toArray, r.getDouble(2)))
+
+  /** Approximate score of one code vector: Σ_m table(m, codes(m)). */
+  private def adcScore(table: Array[Double], codes: Seq[Int]): Double = {
+    var acc = 0.0
+    var m = 0
+    while (m < PqM) { acc += table(m * PqK + codes(m)); m += 1 }
+    acc
+  }
+
+  /** The rerank pool of the ADC searches: each query's `size` best
+    * (q_id, n_id, approx) candidates by (approx desc, n_id asc). */
+  private def rerankPool(scored: DataFrame, size: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col("approx").desc, col("n_id"))
+    scored.withColumn("prnk", row_number().over(w))
+      .filter(col("prnk") <= size)
+      .select(col("q_id"), col("n_id"))
+  }
+
   /** The ADC+rerank body behind [[pqTopK]], parameterized by codebooks
     * and code table — one scoring plan for the one-shot index and the
     * base ⊎ delta appended store ([[pqTopKDelta]]), so the append
@@ -760,29 +843,9 @@ object Similarity {
       nQueries: Int, k: Int, pool: Int,
       corpusDf: Option[DataFrame] = None): DataFrame = {
     import s.implicits._
-    val ds = cb(0)(0).length
     val e = corpusDf.getOrElse(corpus(s, d))
       .withColumn("nrm", l2norm(col("embedding")))
-    // bounded collect (precedent: trainedCentroids) — the query set is
-    // nQueries rows by construction
-    val qRows = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding"), col("nrm")).collect()
-      .map { r =>
-        val id = r.getLong(0)
-        val emb = r.getSeq[Float](1)
-        val nrm = r.getDouble(2)
-        val lut = Array.tabulate(PqM, PqK) { (m, kk) =>
-          var acc = 0.0
-          var i = 0
-          while (i < ds) {
-            val x = if (nrm == 0.0) 0.0 else emb(m * ds + i).toDouble / nrm
-            acc += x * cb(m)(kk)(i)
-            i += 1
-          }
-          acc
-        }
-        (id, lut)
-      }
+    val qRows = queryTables(e, nQueries, cb)
     val heapCap = pool * k
     val scored = codes.as[(Long, Seq[Int])].mapPartitions { it =>
       // one bounded (approx-desc, id-asc) heap per query, per partition
@@ -793,9 +856,7 @@ object Similarity {
       it.foreach { case (vid, codes) =>
         qRows.foreach { case (qid, lut) =>
           if (vid != qid) {
-            var acc = 0.0
-            var m = 0
-            while (m < PqM) { acc += lut(m)(codes(m)); m += 1 }
+            val acc = adcScore(lut, codes)
             val h = heaps(qid)
             if (h.size < heapCap) h.enqueue((acc, vid))
             else {
@@ -811,25 +872,7 @@ object Similarity {
         h.iterator.map { case (sc, vid) => (qid, vid, sc) }
       }
     }.toDF("q_id", "n_id", "approx")
-    val wPool = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx").desc, col("n_id"))
-    val candIds = scored.withColumn("prnk", row_number().over(wPool))
-      .filter(col("prnk") <= heapCap)
-      .select(col("q_id"), col("n_id"))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    candIds
-      .join(e.select(col("vec_id").as("n_id"), col("embedding"), col("nrm")),
-        Seq("n_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("cos", cosineFromNorms(col("q_emb"), col("embedding"),
-        col("q_nrm"), col("nrm")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast(LongType).as("rnk"), col("n_id"), col("cos"))
-      .orderBy(col("q_id"), col("rnk"))
+    rerankIds(rerankPool(scored, heapCap), e, nQueries, k)
   }
 
   /** IVF+PQ — the two scale paths COMPOSED, the published billion-scale
@@ -860,67 +903,18 @@ object Similarity {
   def ivfPqTopK(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
       nProbe: Int = 8, pool: Int = 64): DataFrame = {
     val cb = pqCodebooks(s, d)
-    val ds = cb(0)(0).length
     val e = corpus(s, d).withColumn("nrm", l2norm(col("embedding")))
-    val centroids = trainedCentroids(s, d, NumCentroids)
-      .withColumn("c_nrm", l2norm(col("c_emb")))
-    val assigned = assignToCentroids(e, centroids)
-      .select(col("vec_id"), col("c_id"))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("c_cos").desc, col("c_id"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("c_cos", cosineFromNorms(col("q_emb"), col("c_emb"),
-        col("q_nrm"), col("c_nrm")))
-      .withColumn("prnk", row_number().over(wProbe))
-      .filter(col("prnk") <= nProbe)
-      .select(col("q_id"), col("c_id"))
-    // per-query ADC tables, keyed by q_id (bounded collect, as in pqTopK)
-    val luts: Map[Long, Array[Array[Double]]] = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding"), col("nrm")).collect()
-      .map { r =>
-        val emb = r.getSeq[Float](1)
-        val nrm = r.getDouble(2)
-        r.getLong(0) -> Array.tabulate(PqM, PqK) { (m, kk) =>
-          var acc = 0.0
-          var i = 0
-          while (i < ds) {
-            val x = if (nrm == 0.0) 0.0 else emb(m * ds + i).toDouble / nrm
-            acc += x * cb(m)(kk)(i)
-            i += 1
-          }
-          acc
-        }
-      }.toMap
-    val adc = udf { (qid: Long, codes: Seq[Int]) =>
-      val lut = luts(qid)
-      var acc = 0.0
-      var m = 0
-      while (m < PqM) { acc += lut(m)(codes(m)); m += 1 }
-      acc
-    }
-    val wPool = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx").desc, col("n_id"))
-    val candIds = assigned.join(broadcast(probes), Seq("c_id"))
+    val centroids = normedCentroids(s, d, NumCentroids)
+    val luts = queryTables(e, nQueries, cb).toMap
+    val adc = udf((qid: Long, codes: Seq[Int]) => adcScore(luts(qid), codes))
+    val scored = assignToCentroids(e, centroids).select(col("vec_id"), col("c_id"))
+      .join(broadcast(probedCells(e, centroids, nQueries, nProbe)
+        .select(col("q_id"), col("c_id"))), Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .join(pqCodes(s, d), Seq("vec_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
         adc(col("q_id"), col("codes")).as("approx"))
-      .withColumn("prnk", row_number().over(wPool))
-      .filter(col("prnk") <= pool * k)
-      .select(col("q_id"), col("n_id"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    candIds
-      .join(e.select(col("vec_id").as("n_id"), col("embedding"), col("nrm")),
-        Seq("n_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("cos", cosineFromNorms(col("q_emb"), col("embedding"),
-        col("q_nrm"), col("nrm")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast(LongType).as("rnk"), col("n_id"), col("cos"))
-      .orderBy(col("q_id"), col("rnk"))
+    rerankIds(rerankPool(scored, pool * k), e, nQueries, k)
   }
 
   /** Sign-band LSH for near-dup blocking: band t packs the sign bits of
@@ -967,9 +961,19 @@ object Similarity {
     * moderate-cos pairs are deliberately lossier still, the documented
     * blocker contract. */
   val SignXWideThreshold = 1000000L
-  private val SignXBands = 6
-  private val SignXBitsPerBand = 24
-  private val SignXOffsets = Array.tabulate(SignXBands)(t => t * 64 / SignXBands)
+
+  /** The three sign-band geometries as (bands, bits per band), indexed
+    * by [[signGeometry]]: narrow 8×8, wide 4×16, xwide 6×24. Band t
+    * reads the sign bits of coordinates (offset(t) + j) mod 64, j < bits,
+    * at offset(t) = ⌊t·64/bands⌋ — a partition of the 64 dims for the
+    * narrow and wide geometries, overlapping windows for xwide. Read by
+    * both the column form ([[signBandKeys]]) and the in-task form
+    * ([[scalaBandKeysFor]]). */
+  private val BandGeometries: Array[(Int, Int)] =
+    Array((SignBands, SignBitsPerBand), (SignBands / 2, 2 * SignBitsPerBand), (6, 24))
+
+  /** Coordinate read by bit j of band t in a geometry of `bands` bands. */
+  private def bandCoord(bands: Int, t: Int, j: Int): Int = (t * 64 / bands + j) % 64
 
   /** Geometry picker: 0 = narrow 8×8, 1 = wide 4×16 (past
     * [[SignWideThreshold]]), 2 = xwide 6×24 (past [[SignXWideThreshold]]). */
@@ -1002,41 +1006,19 @@ object Similarity {
     * pairs at 200k labeled). */
   val KnnExactMaxLabeled = 100000L
 
-  /** Spec-visible alias taking the 3-valued geometry. */
-  private[graft] def signBandKeysGeom(geom: Int): Column = signBandKeys(geom)
-
-  private def signBandKeys(geom: Int): Column = geom match {
-    case 0 =>
-      array((0 until SignBands).map { t =>
-        (0 until SignBitsPerBand).map { j =>
-          (col("embedding").getItem(SignBitsPerBand * t + j) >= 0)
-            .cast(IntegerType) * lit(1 << j)
-        }.reduce(_ + _)
-      }: _*)
-    case 1 =>
-      array((0 until SignBands / 2).map { t =>
-        (0 until 2 * SignBitsPerBand).map { j =>
-          (col("embedding").getItem(2 * SignBitsPerBand * t + j) >= 0)
-            .cast(IntegerType) * lit(1 << j)
-        }.reduce(_ + _)
-      }: _*)
-    case _ =>
-      array((0 until SignXBands).map { t =>
-        (0 until SignXBitsPerBand).map { j =>
-          (col("embedding").getItem((SignXOffsets(t) + j) % 64) >= 0)
-            .cast(IntegerType) * lit(1 << j)
-        }.reduce(_ + _)
-      }: _*)
+  /** Band keys of the `embedding` column as a codegen'd array
+    * expression in the given geometry — the form the oracle mirrors in
+    * SQL. */
+  private[graft] def signBandKeys(geom: Int): Column = {
+    val (bands, bits) = BandGeometries(geom)
+    array((0 until bands).map { t =>
+      (0 until bits).map { j =>
+        (col("embedding").getItem(bandCoord(bands, t, j)) >= 0)
+          .cast(IntegerType) * lit(1 << j)
+      }.reduce(_ + _)
+    }: _*)
   }
 
-  /** Candidate pairs from sign-band LSH: explode each vector into its L
-    * (band, key) bucket rows, equi-join on the bucket — a hash join over
-    * fixed-width keys, never a cross product — and dedupe pairs. The
-    * bucket join and the pair-distinct shuffle ONLY 16-byte id pairs;
-    * embedding payloads join back in AFTER the distinct, so each
-    * surviving pair moves its two vectors exactly once (at 100 TB the
-    * pre-distinct duplicate factor — one copy per shared band — would
-    * otherwise multiply the candidate-stage shuffle bytes). */
   /** Freshness-keyed cardinality: count() the frame once per (plan,
     * input-file-set) and serve repeats from the store — the regime
     * pickers (band geometry, exact-vs-IVF kNN routing) each need one
@@ -1054,6 +1036,14 @@ object Similarity {
         scala.util.hashing.MurmurHash3.orderedHash(df.inputFiles.sorted.toSeq)))(
       java.lang.Long.valueOf(df.count())).longValue()
 
+  /** Candidate pairs from sign-band LSH: explode each vector into its L
+    * (band, key) bucket rows, equi-join on the bucket — a hash join over
+    * fixed-width keys, never a cross product — and dedupe pairs. The
+    * bucket join and the pair-distinct shuffle ONLY 16-byte id pairs;
+    * embedding payloads join back in AFTER the distinct, so each
+    * surviving pair moves its two vectors exactly once (at 100 TB the
+    * pre-distinct duplicate factor — one copy per shared band — would
+    * otherwise multiply the candidate-stage shuffle bytes). */
   def signBandCandidates(e: DataFrame): DataFrame =
     signBandCandidates(e, forcedGeom = -1)
 
@@ -1087,42 +1077,83 @@ object Similarity {
   }
 
   /** Plain-Scala band keys for ANY geometry — bit-for-bit the
-    * [[signBandKeys]] column (narrow: 8 bands × 8 bits; wide past
-    * [[SignWideThreshold]]: 4 bands × 16 bits; xwide past
-    * [[SignXWideThreshold]]: 6 overlapping bands × 24 bits). */
-  private[graft] def scalaBandKeysFor(e: Array[Float], geom: Int): Array[Int] =
-    geom match {
-      case 0 => scalaBandKeys(e)
-      case 1 => Array.tabulate(SignBands / 2) { t =>
-        var k = 0
-        var j = 0
-        while (j < 2 * SignBitsPerBand) {
-          val idx = 2 * SignBitsPerBand * t + j
-          if (idx < e.length && e(idx) >= 0) k |= 1 << j
-          j += 1
-        }
-        k
+    * [[signBandKeys]] column, computed IN-TASK by the verify cogroups.
+    * Carrying the keys as a 64-GetArrayItem array column next to the
+    * centroid scan pushed the generated map-stage method past HotSpot's
+    * 8 KB-bytecode JIT ceiling — the stage stayed whole-stage-codegen
+    * but ran at INTERPRETER speed (measured 428 s for the combined
+    * projection at 200k rows vs 1.3 s + 1.6 s for the same two
+    * column sets projected separately). A few integer ops per member
+    * inside the task cost nothing and keep the map projection at the
+    * classifier's proven shape. */
+  private[graft] def scalaBandKeysFor(e: Array[Float], geom: Int): Array[Int] = {
+    val (bands, bits) = BandGeometries(geom)
+    Array.tabulate(bands) { t =>
+      var k = 0
+      var j = 0
+      while (j < bits) {
+        val idx = bandCoord(bands, t, j)
+        if (idx < e.length && e(idx) >= 0) k |= 1 << j
+        j += 1
       }
-      case _ => Array.tabulate(SignXBands) { t =>
-        var k = 0
-        var j = 0
-        while (j < SignXBitsPerBand) {
-          val idx = (SignXOffsets(t) + j) % 64
-          if (idx < e.length && e(idx) >= 0) k |= 1 << j
-          j += 1
-        }
-        k
-      }
+      k
     }
+  }
+
+  /** Left-to-right float→double dot — the same fold as the codegen'd
+    * [[cosineFromNorms]] (spec-pinned bit-identical). */
+  private def dotF(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+    acc
+  }
+
+  /** One member of a sign-band verify: id, vector, norm, band keys. */
+  private final class BandMember(val id: Long, val emb: Array[Float],
+      val nrm: Double, val keys: Array[Int])
+
+  /** The sign-band verify's pair step over the members sharing band t's
+    * bucket: every pair whose FIRST shared band is t (the standard LSH
+    * exactly-once rule — skipped when an earlier band already paired
+    * them, no seen-set memory) gets the exact cosine, and pairs at or
+    * above the threshold append (lower id, higher id, cos) to `out`. */
+  private def verifyBucket(t: Int, mem: collection.IndexedSeq[BandMember],
+      threshold: Double, out: ArrayBuffer[(Long, Long, Double)]): Unit = {
+    var a = 0
+    while (a < mem.length - 1) {
+      var b = a + 1
+      while (b < mem.length) {
+        val ma = mem(a)
+        val mb = mem(b)
+        var tp = 0
+        var dup = false
+        while (tp < t && !dup) {
+          if (ma.keys(tp) == mb.keys(tp)) dup = true
+          tp += 1
+        }
+        if (!dup && ma.id != mb.id) {
+          val cos = dotF(ma.emb, mb.emb) / (ma.nrm * mb.nrm)
+          if (cos >= threshold) {
+            if (ma.id < mb.id) out += ((ma.id, mb.id, cos))
+            else out += ((mb.id, ma.id, cos))
+          }
+        }
+        b += 1
+      }
+      a += 1
+    }
+  }
 
   /** The sign-band dedup's verify as ONE BUCKET COGROUP — the cell-free
     * sibling of [[cellBandVerifiedPairs]], with the (band, key) bucket
     * itself as the grouping key. Each member ships L = 4-8 replicated
     * rows (one per band) through a single exchange; within a bucket
     * every id-ordered pair whose FIRST shared band is this bucket's
-    * band gets the exact cosine (the standard LSH exactly-once rule —
-    * the emitted pair SET equals "shares ≥ 1 bucket", each pair once),
-    * and only survivors ≥ threshold leave the task. The join shape this
+    * band gets the exact cosine ([[verifyBucket]] — the emitted pair
+    * SET equals "shares ≥ 1 bucket", each pair once), and only
+    * survivors ≥ threshold leave the task. The join shape this
     * replaces — bucket self-join → 16-byte pair distinct → TWO
     * embedding join-backs — materialized ~120M candidate pairs each
     * dragging 560 bytes of vector payload at the 2M decade (~67 GB of
@@ -1144,43 +1175,12 @@ object Similarity {
       }
       .groupByKey(_._1)
       .flatMapGroups { (gk, it) =>
-        val t = (gk >>> 32).toInt
         val raw = it.toArray
         if (raw.length < 2) Iterator.empty
         else {
-          val mem = raw.map(r => (r._2, r._3, r._4, scalaBandKeysFor(r._3, geom)))
-          val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-          var a = 0
-          while (a < mem.length - 1) {
-            var b = a + 1
-            while (b < mem.length) {
-              val ma = mem(a)
-              val mb = mem(b)
-              // exactly-once: skip if any EARLIER band already paired them
-              var tp = 0
-              var dup = false
-              while (tp < t && !dup) {
-                if (ma._4(tp) == mb._4(tp)) dup = true
-                tp += 1
-              }
-              if (!dup && ma._1 != mb._1) {
-                // same left-to-right float→double fold as the codegen'd
-                // cosineFromNorms (spec-pinned bit-identical)
-                val (ea, eb) = (ma._2, mb._2)
-                val n = math.min(ea.length, eb.length)
-                var acc = 0.0
-                var k = 0
-                while (k < n) { acc += ea(k).toDouble * eb(k).toDouble; k += 1 }
-                val cos = acc / (ma._3 * mb._3)
-                if (cos >= threshold) {
-                  if (ma._1 < mb._1) out += ((ma._1, mb._1, cos))
-                  else out += ((mb._1, ma._1, cos))
-                }
-              }
-              b += 1
-            }
-            a += 1
-          }
+          val out = ArrayBuffer[(Long, Long, Double)]()
+          verifyBucket((gk >>> 32).toInt, raw.map(r =>
+            new BandMember(r._2, r._3, r._4, scalaBandKeysFor(r._3, geom))), threshold, out)
           out.iterator
         }
       }
@@ -1214,8 +1214,9 @@ object Similarity {
     * Pair space ~ Σ|cell|² ≈ n²/k for balanced cells; exact cosine
     * verify on candidates only. Centroids aren't SQL-expressible →
     * rows-only; SimilaritySpec checks result ⊆ all-pairs truth and the
-    * candidate-count bound. */
-  /** `nCells` is the tuning contract at scale: candidate pairs grow as
+    * candidate-count bound.
+    *
+    * `nCells` is the tuning contract at scale: candidate pairs grow as
     * Σ|cell|² ≈ n²/nCells for balanced cells, so the cell count must
     * grow WITH the corpus (k ∝ n keeps expected cell size — and so
     * per-cell pair work — constant). The registered query keeps the
@@ -1224,19 +1225,11 @@ object Similarity {
       threshold: Double = 0.4, nCells: Int = 0,
       wideThreshold: Long = SignWideThreshold): DataFrame = {
     val e = corpus(s, d).withColumn("nrm", l2norm(col("embedding")))
-    // nCells = 0 means AUTO, the knnClassifyIvf sizing rule: fixed
-    // cells make Σ|cell|² quadratic in the corpus (measured 67.7 s at
-    // 200k vectors with 16 cells); √n cells bound the pair space at
-    // ~n^1.5. Below the classifier's small-fixture bound the 16-cell
-    // default keeps driver-scale results bit-stable.
+    // nCells = 0 means AUTO ([[autoCells]]): fixed cells make Σ|cell|²
+    // quadratic in the corpus (measured 67.7 s at 200k vectors with 16
+    // cells); √n cells bound the pair space at ~n^1.5
     val n = cachedCount(e.select(col("vec_id")))
-    val c =
-      if (nCells > 0) nCells
-      else if (n <= 4000L) NumCentroids
-      else math.min(4096L, math.round(math.sqrt(n.toDouble))).toInt
-    val centroids = trainedCentroids(s, d, c)
-      .withColumn("c_nrm", l2norm(col("c_emb")))
-    val assigned = assignToCentroids(e, centroids)
+    val assigned = assignToCentroids(e, normedCentroids(s, d, autoCells(n, nCells)))
     // Past SignWideThreshold the √n-cell geometry alone is still ~n^1.5
     // candidate pairs (measured 18.9 s at 200k vectors): COMPOSE the
     // 8×8 sign-band sub-blocker WITHIN cells, so a candidate must share
@@ -1262,11 +1255,7 @@ object Similarity {
         // the previous shape shuffled ~190M 16-byte id pairs at the
         // 2M-vector decade and then joined both 256-byte embeddings
         // back per pair (~100 GB of join rows) to do 64 multiplies
-        // each. Band keys are computed IN-TASK ([[scalaBandKeys]] —
-        // spec-pinned bit-identical to the column form); a pair found
-        // in band t is scored only if the two members share NO earlier
-        // band — the standard LSH exactly-once trick, no seen-set
-        // memory. Survivors ≥ threshold are the only rows that leave
+        // each. Survivors ≥ threshold are the only rows that leave
         // the task. (An SDC pre-filter on the 4-bit PQ codes was
         // measured and REJECTED here: code-to-code scores lose
         // 0.25-0.45 of true cosine at the threshold boundary on this
@@ -1286,36 +1275,11 @@ object Similarity {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** Sign-band keys of one embedding, in plain Scala — bit-for-bit the
-    * [[signBandKeys]] column (bit j of band t set iff coordinate
-    * 8t+j ≥ 0), computed IN-TASK by the wide-regime cogroup. Carrying
-    * the keys as a 64-GetArrayItem array column next to the centroid
-    * scan pushed the generated map-stage method past HotSpot's
-    * 8 KB-bytecode JIT ceiling — the stage stayed whole-stage-codegen
-    * but ran at INTERPRETER speed (measured 428 s for the combined
-    * projection at 200k rows vs 1.3 s + 1.6 s for the same two
-    * column sets projected separately). Eight integer ops per member
-    * inside the task cost nothing and keep the map projection at the
-    * classifier's proven shape. */
-  private def scalaBandKeys(e: Array[Float]): Array[Int] =
-    Array.tabulate(SignBands) { t =>
-      var k = 0
-      var j = 0
-      while (j < SignBitsPerBand) {
-        val idx = SignBitsPerBand * t + j
-        if (idx < e.length && e(idx) >= 0) k |= 1 << j
-        j += 1
-      }
-      k
-    }
-
   /** The in-cell blocked-verify loop of [[embedNearDupIvf]]'s wide
     * regime. Members arrive (c_id, vec_id, embedding, nrm); per cell,
-    * each band buckets members by key ([[scalaBandKeys]]) and every
-    * same-bucket id-ordered pair whose FIRST shared band is this one
-    * gets the exact cosine (same left-to-right float→double fold as
-    * the codegen'd expression). Emits pairs at or above the
-    * threshold. */
+    * each band buckets members by their narrow-geometry key
+    * ([[scalaBandKeysFor]]) and every bucket runs the shared pair step
+    * ([[verifyBucket]]). Emits pairs at or above the threshold. */
   private def cellBandVerifiedPairs(members: DataFrame,
       threshold: Double): org.apache.spark.sql.Dataset[(Long, Long, Double)] = {
     val s = members.sparkSession
@@ -1326,51 +1290,19 @@ object Similarity {
         val raw = it.toArray
         if (raw.length < 2) Iterator.empty
         else {
-          val mem = raw.map(m => (m._1, m._2, m._3, m._4, scalaBandKeys(m._3)))
-          val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-          val nBands = mem(0)._5.length
+          val mem = raw.map(m => new BandMember(m._2, m._3, m._4, scalaBandKeysFor(m._3, 0)))
+          val out = ArrayBuffer[(Long, Long, Double)]()
+          val nBands = mem(0).keys.length
           var t = 0
           while (t < nBands) {
-            val buckets = new java.util.HashMap[Integer, java.util.ArrayList[Integer]]()
+            val buckets = new java.util.HashMap[Integer, ArrayBuffer[BandMember]]()
             var i = 0
             while (i < mem.length) {
-              buckets.computeIfAbsent(mem(i)._5(t), _ => new java.util.ArrayList[Integer]())
-                .add(i)
+              buckets.computeIfAbsent(mem(i).keys(t), _ => ArrayBuffer[BandMember]()) += mem(i)
               i += 1
             }
             val bit = buckets.values().iterator()
-            while (bit.hasNext) {
-              val bucket = bit.next()
-              var a = 0
-              while (a < bucket.size() - 1) {
-                var b = a + 1
-                while (b < bucket.size()) {
-                  val ma = mem(bucket.get(a))
-                  val mb = mem(bucket.get(b))
-                  // exactly-once: skip if any EARLIER band already paired them
-                  var tp = 0
-                  var dup = false
-                  while (tp < t && !dup) {
-                    if (ma._5(tp) == mb._5(tp)) dup = true
-                    tp += 1
-                  }
-                  if (!dup) {
-                    val (ea, eb) = (ma._3, mb._3)
-                    val n = math.min(ea.length, eb.length)
-                    var acc = 0.0
-                    var k = 0
-                    while (k < n) { acc += ea(k).toDouble * eb(k).toDouble; k += 1 }
-                    val cos = acc / (ma._4 * mb._4)
-                    if (cos >= threshold) {
-                      if (ma._2 < mb._2) out += ((ma._2, mb._2, cos))
-                      else out += ((mb._2, ma._2, cos))
-                    }
-                  }
-                  b += 1
-                }
-                a += 1
-              }
-            }
+            while (bit.hasNext) verifyBucket(t, bit.next(), threshold, out)
             t += 1
           }
           out.iterator
@@ -1408,17 +1340,6 @@ object Similarity {
       .orderBy(col("id_a"))
   }
 
-  /** Symmetric per-vector INT8 quantization — the 4× storage/bandwidth
-    * lever for an embedding store (float32 → int8 at 100 TB is 75 TB
-    * saved before similarity search even starts). Per vector:
-    * scale = max|x|/127, q_i = round(x_i/scale) ∈ [-127, 127] (no
-    * clipping by construction — |x_i| ≤ 127·scale). Everything is a
-    * per-row array expression (codegen'd, zero shuffle, scan-parallel);
-    * the emitted summary (exact integer sum/min/max of the codes plus
-    * the max dequantization error) is hash-exact against the oracle
-    * because every step — float→double cast, division, HALF_UP round,
-    * long arithmetic — is deterministic IEEE/decimal arithmetic that
-    * DuckDB computes identically. */
   /** Per-vector symmetric int8 CODES (+ scale): the shared builder for
     * the quantization summary and the quantized search path. Codes are
     * kept as doubles (round() is already a double, every code is an
@@ -1433,6 +1354,17 @@ object Similarity {
           .otherwise(transform(emb, x => round(x / col("scale")))))
   }
 
+  /** Symmetric per-vector INT8 quantization — the 4× storage/bandwidth
+    * lever for an embedding store (float32 → int8 at 100 TB is 75 TB
+    * saved before similarity search even starts). Per vector:
+    * scale = max|x|/127, q_i = round(x_i/scale) ∈ [-127, 127] (no
+    * clipping by construction — |x_i| ≤ 127·scale). Everything is a
+    * per-row array expression (codegen'd, zero shuffle, scan-parallel);
+    * the emitted summary (exact integer sum/min/max of the codes plus
+    * the max dequantization error) is hash-exact against the oracle
+    * because every step — float→double cast, division, HALF_UP round,
+    * long arithmetic — is deterministic IEEE/decimal arithmetic that
+    * DuckDB computes identically. */
   def quantizeInt8(s: SparkSession, d: String): DataFrame = {
     val emb = transform(col("embedding"), x => x.cast(DoubleType))
     int8Codes(s, d)
@@ -1458,26 +1390,15 @@ object Similarity {
     * ≤ 127 over the dimension (≤ 2²⁰·dim, exactly representable in
     * double), which is why this approximate index can still carry a
     * VALUE-EXACT DuckDB oracle: both engines rank on identical
-    * integer-ratio arithmetic. Same plan shape as [[bruteForceTopK]]
-    * (queries broadcast, one corpus scan, allocation-free dot); the
-    * spec pins recall vs the float brute force. */
+    * integer-ratio arithmetic. It IS [[bruteForceTopK]]'s scoring body
+    * ([[exactScores]]) run over the code vectors in place of the
+    * embeddings (queries broadcast, one corpus scan, allocation-free
+    * dot), its score column named `qcos`; the spec pins recall vs the
+    * float brute force. */
   def quantizedTopK(s: SparkSession, d: String, nQueries: Int = 10,
-      k: Int = 5): DataFrame = {
-    import graft.functions.Native
-    val e = int8Codes(s, d)
-      .select(col("vec_id"), col("q"),
-        sqrt(Native.dot(col("q"), col("q"))).as("qn"))
-    val qs = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("q").as("q_q"), col("qn").as("q_qn"))
-    val scored = e.join(broadcast(qs), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        (Native.dot(col("q_q"), col("q")) / (col("q_qn") * col("qn"))).as("qcos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("qcos").desc, col("n_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast(LongType).as("rnk"), col("n_id"), col("qcos"))
-      .orderBy(col("q_id"), col("rnk"))
-  }
+      k: Int = 5): DataFrame =
+    exactTopK(exactScores(int8Codes(s, d).select(col("vec_id"), col("q").as("embedding")),
+      nQueries).withColumnRenamed("cos", "qcos"), "qcos", k)
 
   /** kNN label propagation: classify held-out vectors by the majority
     * label of their k nearest LABELED neighbors (cosine; ties on
@@ -1571,20 +1492,6 @@ object Similarity {
       .orderBy(col("vec_id"))
   }
 
-  /** [[knnClassify]]'s SCALE PATH: past ~10⁵ labeled rows the seed set
-    * stops being broadcastable and all-pairs scoring stops being the
-    * plan — here the labeled side is IVF-partitioned once
-    * ([[assignToCentroids]], the same coarse quantizer the ANN index
-    * trains per corpus) and each query scores ONLY the labeled rows in
-    * its nProbe nearest cells: candidates shrink |labeled| →
-    * ~|labeled|·nProbe/cells per query, and the join key is the cell
-    * id, not a pair. `cells` is the caller's scale knob — size it
-    * ≈ √|labeled| so the cell join fans out over thousands of keys
-    * (the 16-cell default matches the test corpus; the quantizer cache
-    * is already keyed per (corpus, cells)). Same vote pipeline; the
-    * spec pins EXACT parity with a plain-Scala recompute of the
-    * probed-cell semantics. */
-
   /** Cell-COGROUP candidate scoring — the IVF classifier's hot loop
     * without pair-row materialization. The join shape
     * (probes ⋈ labCells on c_id → project → partial TopKByAgg) is
@@ -1614,37 +1521,58 @@ object Similarity {
       val lab = ls.toArray
       if (lab.isEmpty) Iterator.empty
       else qs.flatMap { case (_, vid, qe, qn, tl) =>
-        val m = math.min(k, lab.length)
-        val bo = new Array[Long](m)   // ord1 (sortable cosine bits), best-first
-        val bi = new Array[Long](m)   // n_id
-        val bl = new Array[Double](m) // label
-        var filled = 0
+        val best = new BestK(math.min(k, lab.length))
         var c = 0
         while (c < lab.length) {
           val (_, nid, ne, nn, nl) = lab(c)
-          val n = math.min(qe.length, ne.length)
-          var acc = 0.0
-          var i = 0
-          while (i < n) { acc += qe(i).toDouble * ne(i).toDouble; i += 1 }
-          val bits = java.lang.Double.doubleToLongBits(acc / (qn * nn))
-          val ord1 = bits ^ ((bits >> 63) & Long.MaxValue)
-          // keep k best by (ord1 desc, n_id asc); labeled rows arrive in
-          // no particular id order, so equal-ord1 entries order by id
-          var p = filled
-          while (p > 0 && (bo(p - 1) < ord1 ||
-              (bo(p - 1) == ord1 && bi(p - 1) > nid))) p -= 1
-          if (p < m) {
-            var j = math.min(filled, m - 1)
-            while (j > p) { bo(j) = bo(j - 1); bi(j) = bi(j - 1); bl(j) = bl(j - 1); j -= 1 }
-            bo(p) = ord1; bi(p) = nid; bl(p) = nl
-            if (filled < m) filled += 1
-          }
+          best.offer(exactOrd(qe, qn, ne, nn), nid, nl)
           c += 1
         }
-        (0 until filled).iterator.map(idx =>
-          ScoredCand(vid, tl, bo(idx), -bi(idx), bl(idx)))
+        best.rows(vid, tl)
       }
     }.toDF()
+  }
+
+  /** Order-preserving long bits of a double — the
+    * [[graft.functions.DoubleSortableLong]] transform. */
+  private def sortableBits(x: Double): Long = {
+    val bits = java.lang.Double.doubleToLongBits(x)
+    bits ^ ((bits >> 63) & Long.MaxValue)
+  }
+
+  /** ord1 of the exact classifier cosine dot/(qn·nn) — the codegen'd
+    * expression's arithmetic, fold order and sortable bits. */
+  private def exactOrd(qe: Array[Float], qn: Double, ne: Array[Float],
+      nn: Double): Long =
+    sortableBits(dotF(qe, ne) / (qn * nn))
+
+  /** The classifier's bounded top-k, shared by the exact scan and the
+    * ADC pool's exact rerank: the `cap` best (ord1, n_id, label)
+    * entries by (ord1 desc, n_id asc), kept best-first in primitive
+    * arrays — an insert shifts at most `cap` slots and neither boxes
+    * nor allocates. Candidates arrive in no particular id order, so
+    * equal-ord1 entries order by id. */
+  private final class BestK(cap: Int) {
+    private val bo = new Array[Long](cap)   // ord1 (sortable cosine bits)
+    private val bi = new Array[Long](cap)   // n_id
+    private val bl = new Array[Double](cap) // label
+    private var filled = 0
+
+    def offer(ord1: Long, nid: Long, lab: Double): Unit = {
+      var p = filled
+      while (p > 0 && (bo(p - 1) < ord1 ||
+          (bo(p - 1) == ord1 && bi(p - 1) > nid))) p -= 1
+      if (p < cap) {
+        var j = math.min(filled, cap - 1)
+        while (j > p) { bo(j) = bo(j - 1); bi(j) = bi(j - 1); bl(j) = bl(j - 1); j -= 1 }
+        bo(p) = ord1; bi(p) = nid; bl(p) = lab
+        if (filled < cap) filled += 1
+      }
+    }
+
+    /** The kept entries as the query's candidate rows, best-first. */
+    def rows(vid: Long, trueLabel: Long): Iterator[ScoredCand] =
+      (0 until filled).iterator.map(i => ScoredCand(vid, trueLabel, bo(i), -bi(i), bl(i)))
   }
 
   /** Labeled-side threshold above which the IVF classifier's in-cell
@@ -1698,37 +1626,6 @@ object Similarity {
     var m = 0
     while (m < codes.length) { p |= (codes(m).toLong & 0xFL) << (4 * m); m += 1 }
     p
-  }
-
-  /** ADC lookup table of one query against the corpus codebooks, flat
-    * (m * PqK + code): entry = dot(normalized query subvector,
-    * codebook centroid). Σ_m table(m, code_m(x)) then approximates
-    * cos(q, x) directly, because codes encode the NORMALIZED member
-    * vector (pqCodebooks doc). */
-  private def adcTable(cb: Array[Array[Array[Double]]], qe: Array[Float],
-      qn: Double): Array[Double] = {
-    val mCount = cb.length
-    val kCount = cb(0).length
-    val ds = cb(0)(0).length
-    val t = new Array[Double](mCount * kCount)
-    var m = 0
-    while (m < mCount) {
-      var c = 0
-      while (c < kCount) {
-        val cent = cb(m)(c)
-        var acc = 0.0
-        var i = 0
-        while (i < ds) {
-          val idx = m * ds + i
-          if (idx < qe.length && qn != 0.0) acc += (qe(idx).toDouble / qn) * cent(i)
-          i += 1
-        }
-        t(m * kCount + c) = acc
-        c += 1
-      }
-      m += 1
-    }
-    t
   }
 
   /** [[cellScoredCandidates]] with ADC code scoring — the composition
@@ -1805,8 +1702,7 @@ object Similarity {
               acc += t(m * kCount + ((cd >>> (4 * m)) & 0xFL).toInt)
               m += 1
             }
-            val bits = java.lang.Double.doubleToLongBits(acc)
-            val ord = bits ^ ((bits >> 63) & Long.MaxValue)
+            val ord = sortableBits(acc)
             val nid = ids(c)
             if (filled < pm) {
               // sift up
@@ -1845,42 +1741,37 @@ object Similarity {
           }
           // exact-cosine rerank of the pool — same fold/order/tie rules as
           // the exact scan, so survivors carry bit-identical ord1/ord2
-          val km = math.min(k, filled)
-          val bo = new Array[Long](km)
-          val bi = new Array[Long](km)
-          val bl = new Array[Double](km)
-          var kept = 0
+          val best = new BestK(math.min(k, filled))
           var pi = 0
           while (pi < filled) {
             val mi = px(pi)
-            val ne = embs(mi)
-            val n = math.min(qe.length, ne.length)
-            var acc = 0.0
-            var i = 0
-            while (i < n) { acc += qe(i).toDouble * ne(i).toDouble; i += 1 }
-            val bits = java.lang.Double.doubleToLongBits(acc / (qn * nrms(mi)))
-            val ord1 = bits ^ ((bits >> 63) & Long.MaxValue)
-            val nid = ids(mi)
-            var p = kept
-            while (p > 0 && (bo(p - 1) < ord1 ||
-                (bo(p - 1) == ord1 && bi(p - 1) > nid))) p -= 1
-            if (p < km) {
-              var j = math.min(kept, km - 1)
-              while (j > p) { bo(j) = bo(j - 1); bi(j) = bi(j - 1); bl(j) = bl(j - 1); j -= 1 }
-              bo(p) = ord1; bi(p) = nid; bl(p) = labs(mi)
-              if (kept < km) kept += 1
-            }
+            best.offer(exactOrd(qe, qn, embs(mi), nrms(mi)), ids(mi), labs(mi))
             pi += 1
           }
-          (0 until kept).iterator.map(idx =>
-            ScoredCand(vid, tl, bo(idx), -bi(idx), bl(idx)))
+          best.rows(vid, tl)
         }
       }
     }.toDF()
   }
 
   /** IVF-routed kNN classification (the scale path [[knnClassify]]
-    * switches to past its broadcast budget). `cells = 0` and
+    * switches to past its broadcast budget).
+    *
+    * [[knnClassify]]'s SCALE PATH: past ~10⁵ labeled rows the seed set
+    * stops being broadcastable and all-pairs scoring stops being the
+    * plan — here the labeled side is IVF-partitioned once
+    * ([[assignToCentroids]], the same coarse quantizer the ANN index
+    * trains per corpus) and each query scores ONLY the labeled rows in
+    * its nProbe nearest cells: candidates shrink |labeled| →
+    * ~|labeled|·nProbe/cells per query, and the join key is the cell
+    * id, not a pair. `cells` is the caller's scale knob — size it
+    * ≈ √|labeled| so the cell join fans out over thousands of keys
+    * (the 16-cell default matches the test corpus; the quantizer cache
+    * is already keyed per (corpus, cells)). Same vote pipeline; the
+    * spec pins EXACT parity with a plain-Scala recompute of the
+    * probed-cell semantics.
+    *
+    * `cells = 0` and
     * `adcPool = 0` are both AUTO sentinels: cells AUTO picks
     * √|labeled| past the fixture regime; adcPool AUTO sizes the
     * per-cell exact-rerank pool from cell geometry via [[autoAdcPool]]
@@ -1898,41 +1789,14 @@ object Similarity {
     val e = corpus(s, d).withColumn("nrm", l2norm(col("embedding")))
     val labeled = e.filter(col("vec_id") % holdoutMod =!= 0)
     val nLab = cachedCount(labeled.select(col("vec_id")))
-    // cells = 0 means AUTO: per-query candidate work is
-    // |labeled|·nProbe/cells, so a fixed cell count makes the whole
-    // query quadratic in corpus size (measured super-linear on the
-    // generated 100× fixture before this scaled). √|labeled| cells
-    // keeps candidates/query at ~nProbe·√|labeled| — the standard IVF
-    // sizing — once the corpus outgrows the small-fixture regime
-    // (below it, the 16-cell default is kept so driver-scale results
-    // are bit-stable with earlier rounds; the 4k guard must sit BELOW
-    // the first generated decade — at 16k labeled the 16-cell regime
-    // already costs ~4k candidates/query, measured 19.7 s at gen10x).
-    val c =
-      if (cells > 0) cells
-      else if (nLab <= 4000L) NumCentroids
-      else math.min(4096L, math.round(math.sqrt(nLab.toDouble))).toInt
-    val centroids = trainedCentroids(s, d, c)
-      .withColumn("c_nrm", l2norm(col("c_emb")))
-    val useAdc = nLab > adcMinLabeled
-    // label rides the assignment aggregate (carry) — a separate
-    // label-recovery self-join would re-shuffle the labeled mass
-    val assignedLab = assignToCentroids(labeled, centroids, carry = Seq("label"))
-    val labCells =
-      if (!useAdc)
-        assignedLab.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
-          col("nrm").as("n_nrm"), col("label").as("n_label"), col("c_id"))
-      else {
-        // ADC regime: members additionally carry their packed 4-byte PQ
-        // codes (one encode pass over the labeled mass — the index-build
-        // cost IVFPQ already pays; at 100 TB the code column is a stored
-        // index table, not a per-query derivation)
-        val cb = pqCodebooks(s, d)
-        val enc = udf((emb: Seq[Float]) => packCodes(pqEncodeOne(cb, emb)))
-        assignedLab.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
-          col("nrm").as("n_nrm"), col("label").as("n_label"), col("c_id"),
-          enc(col("embedding")).as("n_codes"))
-      }
+    // cells = 0 means AUTO (autoCells): a fixed cell count made the
+    // whole query super-linear on the generated 100× fixture; √|labeled|
+    // cells keep candidates/query at ~nProbe·√|labeled|
+    val c = autoCells(nLab, cells)
+    val centroids = normedCentroids(s, d, c)
+    val labCells = assignToCentroids(labeled, centroids)
+      .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
+        col("nrm").as("n_nrm"), col("label").as("n_label"), col("c_id"))
     val q = e.filter(col("vec_id") % holdoutMod === 0)
       .select(col("vec_id"), col("embedding"), col("nrm"),
         col("label").as("true_label"))
@@ -1950,9 +1814,17 @@ object Similarity {
     // silent regime switch
     val pool = if (adcPool > 0) adcPool else autoAdcPool(nLab, c)
     val scored =
-      if (useAdc) cellScoredCandidatesAdc(probes, labCells, k, pool,
-        pqCodebooks(s, d))
-      else cellScoredCandidates(probes, labCells, k)
+      if (nLab <= adcMinLabeled) cellScoredCandidates(probes, labCells, k)
+      else {
+        // ADC regime: members additionally carry their packed 4-byte PQ
+        // codes (one encode pass over the labeled mass — the index-build
+        // cost IVFPQ already pays; at 100 TB the code column is a stored
+        // index table, not a per-query derivation)
+        val cb = pqCodebooks(s, d)
+        cellScoredCandidatesAdc(probes,
+          labCells.withColumn("n_codes", pqEncoder(cb, col("n_emb"))(packCodes)),
+          k, pool, cb)
+      }
     val voted = voteTail(scored, k)
     // a query whose probed cells hold NO labeled rows must surface as
     // an explicit null prediction, not silently vanish from the output

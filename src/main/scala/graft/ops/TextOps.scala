@@ -1622,9 +1622,10 @@ object TextOps {
     // otherwise re-runs the full corpus bigram parse once per c12
     // consumer — c12 itself, c1 (derived from it), i.e. THREE
     // occurrence-scale tokenize+explode passes for one LM table
-    // (verified in plans/r18/before/q_lm_perplexity.txt: 3 Generate-
-    // over-parquet branches). Same per-execution discipline as
-    // psi_drift's cells — inside the timed region, never cross-run.
+    // (verified in plans/r18/before/q_lm_perplexity.txt, kept at commit
+    // 7eb8182: 3 Generate-over-parquet branches). Same per-execution
+    // discipline as psi_drift's cells — inside the timed region, never
+    // cross-run.
     val c12 = occ.groupBy(col("bigram")).agg(count(lit(1)).as("c12"))
       .localCheckpoint(true)
     val c1 = c12

@@ -64,12 +64,16 @@ object Pipeline {
       Tables.events(s, d)
         .repartition(4)
         .write.mode("overwrite").parquet(out)
-      // the 4 files are written concurrently: arrive in part-file order
-      pinArrivalOrder(new java.io.File(out).listFiles().toSeq
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName).map(_.toPath))
+      pinPartFiles(out)
       out
     }
+
+  /** The 4 files of a staged copy are written concurrently: pin them to
+    * arrive in part-file order ([[pinArrivalOrder]]). */
+  private def pinPartFiles(dir: String): Unit =
+    pinArrivalOrder(new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .sortBy(_.getName).map(_.toPath))
 
   /** Pins a staged replay's micro-batch composition: the file source
     * takes files oldest first, so `files` get strictly increasing
@@ -743,6 +747,7 @@ object Pipeline {
     Tables.artifact(s, d, Seq("documents"), "prestageDocs") {
       val out = tmp("graft_docsrc_")
       Tables.documents(s, d).repartition(4).write.mode("overwrite").parquet(out)
+      pinPartFiles(out)
       out
     }
 

@@ -69,8 +69,9 @@ object Drive {
   }
 
   /** Full `.explain("formatted")` dump per registered query, one file per
-    * query — the optimization rounds' plan-evidence artifact
-    * (plans/rNN/<query>.txt). With no name list, every registered query
+    * query — the optimization rounds' plan-evidence artifact (their
+    * plans/rNN/<query>.txt dumps are kept at commit 7eb8182, not in the
+    * tree). With no name list, every registered query
     * is dumped. Plans only — nothing executes, so a full dump is
     * driver-cheap. */
   private def explainFmt(spark: SparkSession, sfDir: String,

@@ -133,6 +133,39 @@ class ArtifactStoreSpec extends SparkSpec {
         "overwrites instead of duplicating:\n" + sites.mkString("\n"))
   }
 
+  /** The sites that are code, not doc or line comments. */
+  private def codeOnly(sites: Seq[String]): Seq[String] =
+    sites.filterNot { site =>
+      val text = site.split(":", 3)(2).trim
+      text.startsWith("*") || text.startsWith("/*") || text.startsWith("//")
+    }
+
+  test("the ANN query side is built only by Similarity.querySide") {
+    val sites = codeOnly(mainSourceLines("""col\("vec_id"\)\s*<\s*nQueries\b""".r))
+    assert(enclosingDefs(sites) == Seq("Similarity.scala.querySide"),
+      "take a search's queries through Similarity.querySide:\n" + sites.mkString("\n"))
+  }
+
+  test("no crossJoin(broadcast(centroids)) probe remains in Similarity") {
+    val sites = codeOnly(mainSourceLines("""crossJoin\(broadcast\(centroids\)\)""".r,
+      _ == "Similarity.scala"))
+    assert(sites.isEmpty,
+      "probe cells through Similarity.topCentroidIds:\n" + sites.mkString("\n"))
+  }
+
+  test("pqEncodeOne is wrapped in a UDF only by Similarity.pqEncoder") {
+    val sites = codeOnly(mainSourceLines("""\bpqEncodeOne\(""".r))
+      .filterNot(_.contains("def pqEncodeOne("))
+    assert(enclosingDefs(sites) == Seq("Similarity.scala.pqEncoder"),
+      "encode a code column through Similarity.pqEncoder:\n" + sites.mkString("\n"))
+  }
+
+  test("no Array.tabulate(PqM, PqK) lookup table: only the codebook init tabulates") {
+    val sites = codeOnly(mainSourceLines("""Array\.tabulate\(PqM,\s*PqK\)""".r))
+    assert(enclosingDefs(sites) == Seq("Similarity.scala.trainPqCodebooks"),
+      "build a query's ADC lookup table with Similarity.adcTable:\n" + sites.mkString("\n"))
+  }
+
   test("drained sinks are read only by Pipeline.drainedSink") {
     val sites = mainSourceLines("""\bdrainGroup\([^)]*\)\(""".r)
     assert(enclosingDefs(sites) == Seq("Pipeline.scala.drainedSink"),

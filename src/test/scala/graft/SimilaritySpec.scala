@@ -6,6 +6,19 @@ import org.apache.spark.sql.functions._
 /** Similarity search (north-star): brute force exactness, LSH recall. */
 class SimilaritySpec extends SparkSpec {
 
+  // plain-Scala folds in the operators' order: left-to-right
+  // float→double dot, norm = sqrt(self-dot)
+  private def dotFD(a: Array[Float], b: Array[Double]): Double = {
+    var s0 = 0.0; var i = 0
+    while (i < math.min(a.length, b.length)) { s0 += a(i).toDouble * b(i); i += 1 }; s0
+  }
+  private def dotFF(a: Array[Float], b: Array[Float]): Double = {
+    var s0 = 0.0; var i = 0
+    while (i < math.min(a.length, b.length)) { s0 += a(i).toDouble * b(i).toDouble; i += 1 }; s0
+  }
+  private def nrmF(a: Array[Float]) = math.sqrt(dotFF(a, a))
+  private def nrmD(a: Array[Double]) = { var s0 = 0.0; a.foreach(x => s0 += x * x); math.sqrt(s0) }
+
   test("cosine is 1.0 against itself, within [-1,1] across pairs") {
     val e = Tables.embeddings(spark, sf).limit(20)
     val self = e.select(Similarity.cosine(col("embedding"), col("embedding")).as("c"))
@@ -220,16 +233,6 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getInt(2)))
     val cents = Similarity.trainedCentroids(spark, sf, Similarity.NumCentroids)
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    def dotFD(a: Array[Float], b: Array[Double]): Double = {
-      var s0 = 0.0; var i = 0
-      while (i < math.min(a.length, b.length)) { s0 += a(i).toDouble * b(i); i += 1 }; s0
-    }
-    def dotFF(a: Array[Float], b: Array[Float]): Double = {
-      var s0 = 0.0; var i = 0
-      while (i < math.min(a.length, b.length)) { s0 += a(i).toDouble * b(i).toDouble; i += 1 }; s0
-    }
-    def nrmF(a: Array[Float]) = math.sqrt(dotFF(a, a))
-    def nrmD(a: Array[Double]) = { var s0 = 0.0; a.foreach(x => s0 += x * x); math.sqrt(s0) }
     val cn = cents.map { case (id, c) => (id, c, nrmD(c)) }
     def cellOf(e: Array[Float]): Long =
       cn.maxBy { case (id, c, n) => (dotFD(e, c) / (nrmF(e) * n), -id) }._1
@@ -251,6 +254,36 @@ class SimilaritySpec extends SparkSpec {
     assert(rows.length == expect.size)
     val got = rows.map(r => r.getAs[Long]("vec_id") ->
       (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+    assert(got == expect)
+  }
+
+  test("IVF ANN top-k equals a plain-Scala recompute of the probed-cell semantics") {
+    val k = 5; val nProbe = 4; val nQueries = 10
+    val vecs = Tables.embeddings(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val cn = Similarity.trainedCentroids(spark, sf, Similarity.NumCentroids)
+      .collect().map { r =>
+        val c = r.getSeq[Double](1).toArray
+        (r.getLong(0), c, nrmD(c))
+      }
+    def cellCos(e: Array[Float]): Seq[(Long, Double)] =
+      cn.toSeq.map { case (id, c, n) => (id, dotFD(e, c) / (nrmF(e) * n)) }
+    // a vector's cell: best cosine, ties to the lower c_id
+    val cellOf = vecs.map { case (id, e) =>
+      id -> cellCos(e).maxBy { case (cid, cos) => (cos, -cid) }._1 }.toMap
+    val expect = vecs.filter(_._1 < nQueries).toSeq.sortBy(_._1).flatMap { case (qid, qe) =>
+      // nProbe best cells by (cos desc, c_id asc), then the k best
+      // non-self members of those cells by (cos desc, n_id asc)
+      val probed = cellCos(qe).sortBy { case (cid, cos) => (-cos, cid) }
+        .take(nProbe).map(_._1).toSet
+      vecs.toSeq.filter { case (nid, _) => nid != qid && probed(cellOf(nid)) }
+        .map { case (nid, ne) => (nid, dotFF(qe, ne) / (nrmF(qe) * nrmF(ne))) }
+        .sortBy { case (nid, cos) => (-cos, nid) }.take(k)
+        .zipWithIndex.map { case ((nid, cos), i) => (qid, i + 1L, nid, cos) }
+    }
+    val got = Similarity.ivfTopK(spark, sf, nQueries, k, nProbe).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+    assert(expect.length == nQueries * k)
     assert(got == expect)
   }
 
@@ -338,7 +371,7 @@ class SimilaritySpec extends SparkSpec {
     for (geom <- Seq(0, 1, 2)) {
       val rows = Tables.embeddings(spark, sf)
         .select(col("embedding"),
-          Similarity.signBandKeysGeom(geom).as("keys")).collect()
+          Similarity.signBandKeys(geom).as("keys")).collect()
       assert(rows.nonEmpty)
       rows.foreach { r =>
         val emb = r.getSeq[Float](0).toArray

@@ -419,16 +419,21 @@ class StreamingSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     import scala.util.Using
     val corpus = StagedFreshnessSpec.copyCorpus(Paths.get(sf))
-    val staged = Paths.get(graft.streaming.Pipeline.prestage(spark, corpus.toString))
-    val parts = Using.resource(Files.list(staged)) {
-      _.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSeq.sorted
+    val stagings = Seq[(String, (org.apache.spark.sql.SparkSession, String) => String)](
+      "prestage" -> graft.streaming.Pipeline.prestage,
+      "prestageDocs" -> graft.streaming.Pipeline.prestageDocs)
+    for ((name, stage) <- stagings) {
+      val staged = Paths.get(stage(spark, corpus.toString))
+      val parts = Using.resource(Files.list(staged)) {
+        _.iterator().asScala.map(_.getFileName.toString)
+          .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSeq.sorted
+      }
+      assert(parts.size == 4, s"$name: expected 4 staged part files, got ${parts.mkString(", ")}")
+      val times = parts.map(n => Files.getLastModifiedTime(staged.resolve(n)).toMillis)
+      assert(times.sliding(2).forall { case Seq(a, b) => a < b },
+        s"$name: modification times not strictly increasing in name order: ${parts.zip(times)}")
+      assert(times == parts.indices.map(i => 1000000000000L + i * 60000L),
+        s"$name: modification times not pinned: ${parts.zip(times)}")
     }
-    assert(parts.size == 4, s"expected 4 staged part files, got ${parts.mkString(", ")}")
-    val times = parts.map(n => Files.getLastModifiedTime(staged.resolve(n)).toMillis)
-    assert(times.sliding(2).forall { case Seq(a, b) => a < b },
-      s"modification times not strictly increasing in name order: ${parts.zip(times)}")
-    assert(times == parts.indices.map(i => 1000000000000L + i * 60000L),
-      s"modification times not pinned: ${parts.zip(times)}")
   }
 }
